@@ -3,7 +3,7 @@
 # rows+schema+values-vs-DuckDB protocol the driver runs, over EVERY
 # queries() entry, so the committed hard signal always covers HEAD.
 
-.PHONY: test gate gate-save bench scaling plans
+.PHONY: test gate gate-save bench perftest scaling plans
 
 test:
 	python -m pytest tests/ -x -q
@@ -24,6 +24,10 @@ gate-save:
 
 bench:
 	python bench.py
+
+# the benchmark's own tests (perfbench/: event-log parser, suites, tracing)
+perftest:
+	python3 -m pytest perfbench/tests -q
 
 scaling:
 	python BENCH/scaling.py

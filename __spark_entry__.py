@@ -2429,36 +2429,54 @@ def q_merged_states_lineitem(spark, sf):
     )
 
 
+def _with_temp_store(
+    prefix: str, build: "Callable[[ParquetStore], DataFrame]"
+) -> DataFrame:
+    """``build`` against a fresh temporary ParquetStore. Its (small) result
+    reads the store lazily, so it is materialized before the store is
+    deleted — the query leaves nothing behind on disk."""
+    import shutil
+    import tempfile
+
+    from sparkcheck.runner import ParquetStore
+
+    root = tempfile.mkdtemp(prefix=prefix)
+    try:
+        return build(ParquetStore(root)).localCheckpoint()
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def q_runner_profile_documents(spark, sf):
     """Corpus profile served FROM the checkpoint runner's persisted
     per-partition states (runner.CheckpointRunner(profile_columns=...)
     + corpus_profile): each committed bucket writes its mergeable
-    aggregation states alongside its EVRs (riding the same cached
-    partition pass — zero extra scans), and the corpus-level profile is
-    merge_states over the store, never a rescan. The oracle IS the full
+    aggregation states alongside its EVRs (one extra narrow scan of just
+    the profiled column — the bucket is never persisted), and the
+    corpus-level profile is merge_states over the store, never a rescan. The oracle IS the full
     rescan (plain avg/stddev/min/max over documents.n_chars): the claim
     is that a 4-bucket checkpointed run's folded profile equals it
     exactly. The resume half (crash after 2 buckets, resume, identical
     profile) is pytest-covered (test_runner_profile_states_resume)."""
-    import tempfile
-
     from sparkcheck import ExpectationSuite
-    from sparkcheck.runner import CheckpointRunner, ParquetStore
+    from sparkcheck.runner import CheckpointRunner
 
     docs = _t(spark, sf, "documents")
-    store = ParquetStore(tempfile.mkdtemp(prefix="sparkcheck_states_"))
     suite = ExpectationSuite("profile_run")
     suite.add("expect_column_values_to_not_be_null", column="doc_id")
-    runner = CheckpointRunner(
-        spark, store, n_buckets=4, profile_columns=["n_chars"],
-        # the production shape: partitions validate concurrently (the GX
-        # AsyncExecutor analog); store appends serialize behind the
-        # runner's write lock, and the merged profile is order-invariant
-        max_concurrency=4,
-    )
-    runner.run(docs, suite, run_id="entry")
-    merged = runner.corpus_profile("entry", round_to=5)
-    return merged.select(
+
+    def build(store):
+        runner = CheckpointRunner(
+            spark, store, n_buckets=4, profile_columns=["n_chars"],
+            # the production shape: partitions validate concurrently (the GX
+            # AsyncExecutor analog); store appends serialize behind the
+            # runner's write lock, and the merged profile is order-invariant
+            max_concurrency=4,
+        )
+        runner.run(docs, suite, run_id="entry")
+        return runner.corpus_profile("entry", round_to=5)
+
+    return _with_temp_store("sparkcheck_states_", build).select(
         "column",
         "n",
         "n_null",
@@ -2481,18 +2499,18 @@ def q_streaming_profile_documents(spark, sf):
     rescan: the claim is exact equality including across the redelivery.
     Live-stream behavior (rate source, crash-orphan supersede) is
     pytest-covered (test_streaming_profile_monitor_*)."""
-    import tempfile
-
-    from sparkcheck.runner import ParquetStore
     from sparkcheck.streaming import StreamingProfileMonitor
 
     d = _t(spark, sf, "documents")
-    store = ParquetStore(tempfile.mkdtemp(prefix="sparkcheck_sprof_"))
-    mon = StreamingProfileMonitor(store, ["n_chars"], run_id="entry")
-    for i in range(3):
-        mon(d.where(F.pmod(F.xxhash64("doc_id"), F.lit(3)) == i), i)
-    mon(d.where(F.pmod(F.xxhash64("doc_id"), F.lit(3)) == 1), 1)
-    return mon.profile(spark, round_to=5).select(
+
+    def build(store):
+        mon = StreamingProfileMonitor(store, ["n_chars"], run_id="entry")
+        for i in range(3):
+            mon(d.where(F.pmod(F.xxhash64("doc_id"), F.lit(3)) == i), i)
+        mon(d.where(F.pmod(F.xxhash64("doc_id"), F.lit(3)) == 1), 1)
+        return mon.profile(spark, round_to=5)
+
+    return _with_temp_store("sparkcheck_sprof_", build).select(
         "column",
         "n",
         "n_null",
@@ -2709,18 +2727,18 @@ def q_streaming_drift_documents(spark, sf):
     drift math is oracled separately in kl_drift_quantity). Live-stream
     behavior and crash-orphan supersede are pytest-covered
     (test_streaming_drift_monitor_*)."""
-    import tempfile
-
-    from sparkcheck.runner import ParquetStore
     from sparkcheck.streaming import StreamingDriftMonitor
 
     d = _t(spark, sf, "documents")
-    store = ParquetStore(tempfile.mkdtemp(prefix="sparkcheck_sdrift_"))
-    mon = StreamingDriftMonitor(store, {"n_chars": _SD_EDGES}, run_id="entry")
-    for i in range(3):
-        mon(d.where(F.pmod(F.xxhash64("doc_id"), F.lit(3)) == i), i)
-    mon(d.where(F.pmod(F.xxhash64("doc_id"), F.lit(3)) == 1), 1)
-    return mon.histogram(spark)
+
+    def build(store):
+        mon = StreamingDriftMonitor(store, {"n_chars": _SD_EDGES}, run_id="entry")
+        for i in range(3):
+            mon(d.where(F.pmod(F.xxhash64("doc_id"), F.lit(3)) == i), i)
+        mon(d.where(F.pmod(F.xxhash64("doc_id"), F.lit(3)) == 1), 1)
+        return mon.histogram(spark)
+
+    return _with_temp_store("sparkcheck_sdrift_", build)
 
 
 _QB_BINS = {

@@ -34,8 +34,9 @@ from typing import Any, Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .expectations import build_domain
 from .schema import EVAL_PARAM_SCHEMA, LINEAGE_SCHEMA, RESULT_SCHEMA, VIOLATION_SCHEMA
-from .suite import ExpectationSuite
+from .suite import ExpectationConfiguration, ExpectationSuite
 from .validator import Validator
 
 
@@ -461,6 +462,97 @@ def resolve_validation_urn(
     )
 
 
+def _validate_unit(
+    part: DataFrame,
+    suite: ExpectationSuite,
+    rows_builder: Callable[[DataFrame], DataFrame] | None,
+    append: Callable[[DataFrame], None],
+    result_format: Any = None,
+) -> tuple[dict[str, Any], int]:
+    """Validate one commit unit (runner bucket, streaming micro-batch) and
+    land its violation rows in the same scan. Returns ``(report,
+    n_docs)``.
+
+    With a ``rows_builder`` the suite aggregates ride a CollectMetrics
+    node on the violation append (fused.validate_and_extract) — no
+    persist, one full-width pass. Without one there is no row query to
+    ride, so the suite runs as a plain Validator pass. ``n_docs`` is the
+    element_count of an EVR over the whole unfiltered unit; only a report
+    without one costs a ``count()`` job."""
+    # imported per call, so a wrapper patched onto the fused module
+    # (tracing, profiling) sees the runner's and the sink's calls too
+    from .fused import validate_and_extract
+
+    if rows_builder is not None:
+        result, _, _ = validate_and_extract(
+            part, suite, rows_builder, action=append, result_format=result_format
+        )
+    else:
+        result = Validator(part).validate(suite, result_format=result_format)
+    for r in result["results"]:
+        n = r.get("result", {}).get("element_count")
+        if n is None:
+            continue
+        cfg = r["expectation_config"]
+        d = build_domain(ExpectationConfiguration(cfg["expectation_type"], cfg["kwargs"]))
+        # a row_condition / ignore_row_if / span domain counts other rows
+        if d.row_condition is None and not d.filter_conditions and d.explode_col is None:
+            return result, int(n)
+    return result, part.count()
+
+
+def _write_results(
+    store: Any, spark: SparkSession, run_id: str, pid: str, result: dict[str, Any]
+) -> None:
+    rows = []
+    now = _utcnow()
+    for r in result["results"]:
+        cfg = r.get("expectation_config", {})
+        res = r.get("result", {})
+        obs = res.get("observed_value")
+        rows.append(
+            (
+                run_id,
+                pid,
+                cfg.get("expectation_type", "?"),
+                cfg.get("kwargs", {}).get("column"),
+                bool(r["success"]),
+                res.get("element_count"),
+                res.get("unexpected_count"),
+                None if obs is None else json.dumps(obs, default=str),
+                json.dumps(r, default=str),
+                now,
+            )
+        )
+    append_control_rows(store, spark, "results", rows, RESULT_SCHEMA)
+
+
+def _write_lineage(
+    store: Any,
+    spark: SparkSession,
+    run_id: str,
+    pid: str,
+    result: dict[str, Any],
+    n_docs: int,
+) -> None:
+    now = _utcnow()
+    rows = [(run_id, pid, None, "doc_count", float(n_docs), now)]
+    for r in result["results"]:
+        res = r.get("result", {})
+        if isinstance(res.get("unexpected_count"), (int, float)):
+            rows.append(
+                (
+                    run_id,
+                    pid,
+                    None,
+                    f"{r['expectation_config']['expectation_type']}.unexpected_count",
+                    float(res["unexpected_count"]),
+                    now,
+                )
+            )
+    append_control_rows(store, spark, "lineage", rows, LINEAGE_SCHEMA)
+
+
 @dataclass
 class RunReport:
     run_id: str
@@ -485,7 +577,6 @@ class CheckpointRunner:
         suite_violation_rows: bool = False,
         doc_id_col: str = "doc_id",
         max_concurrency: int = 1,
-        fused: bool = False,
         profile_columns: Sequence[str] | None = None,
         profile_hll: bool = False,
         profile_bins: "dict[str, Sequence[float]] | None" = None,
@@ -523,13 +614,6 @@ class CheckpointRunner:
         self.profile_quantiles = (
             tuple(profile_quantiles) if profile_quantiles else None
         )
-        # fused=True: per-partition suite aggregates ride a CollectMetrics
-        # node on the violation-row write (fused.validate_and_extract), so
-        # the partition is scanned ONCE with no persist() — the 10^12-doc
-        # shape, where caching a bucket is infeasible and the second
-        # full-width pass is the largest avoidable cost. Non-observable
-        # metrics (uniqueness groupBy) still run as narrow key-only jobs.
-        self.fused = fused
         # when set, per-row violations for every map expectation in the
         # suite are derived automatically (summarize.suite_violations) and
         # appended alongside any custom violations_fn output
@@ -625,78 +709,16 @@ class CheckpointRunner:
         return report
 
     def _run_partition(self, docs, suite, run_id: str, pid: str, b: int):
-        """Validate + persist one bucket. Thread-safe: Spark job submission
-        is safe from multiple threads; store writes serialize behind
-        _write_lock; the manifest commit is last (the commit point)."""
-        part = docs.filter(F.col("__bucket") == b).drop("__bucket")
-        if self.fused:
-            fused_out = self._run_partition_fused(part, suite, run_id, pid)
-            if fused_out is not None:
-                return fused_out
-            # no violation frame to fuse with — fall through to classic
-        # one cached pass per partition: the validator's fused agg +
-        # sampled collections reuse this materialization (the reference
-        # never persists its batch — a known perf gap, SURVEY.md §3)
-        part = part.persist()
-        try:
-            result = Validator(part).validate(suite)
-            n_docs = next(
-                (
-                    r["result"]["element_count"]
-                    for r in result["results"]
-                    if "result" in r and "element_count" in r.get("result", {})
-                ),
-                part.count(),
-            )
-            violations = []
-            if self.violations_fn is not None:
-                violations.append(self.violations_fn(part, run_id, pid))
-            if self.suite_violation_rows:
-                from .summarize import suite_violations
-
-                sv = suite_violations(part, suite, self.doc_id_col, run_id, pid)
-                if sv is not None:
-                    violations.append(sv)
-            with self._write_lock:
-                self._write_results(run_id, pid, result)
-                store_validation_result(
-                    self.store, self.spark, result, run_id=run_id
-                )
-                for v in violations:
-                    self.store.append("violations", v)
-                self._write_lineage(run_id, pid, result, n_docs)
-            # states ride the same cached partition pass — no rescan.
-            # OUTSIDE the lock: the states aggregation is a real Spark job
-            # (the lock exists for the violations appends' shared Hadoop
-            # committer dir) and must run concurrently across partitions
-            # when max_concurrency > 1; its own write is a uniquely-named
-            # driver-side Arrow file needing no serialization.
-            self._write_states(part, run_id, pid)
-        finally:
-            part.unpersist()
-        self.store.commit_partition(
-            run_id, pid, {"success": result["success"], "n_docs": int(n_docs)}
-        )
-        return pid, n_docs, result
-
-    def _run_partition_fused(self, part, suite, run_id: str, pid: str):
-        """Single-scan partition leg: suite aggregates observed on the
-        violation-row append itself (see fused.validate_and_extract) —
-        no persist, one full-width pass, exact same EVRs. Returns None
-        when the suite/config yields no violation frame (caller falls
-        back to the classic persist path)."""
-        from .fused import validate_and_extract
+        """Validate + commit one bucket in one scan: the suite aggregates
+        ride the violation-row append (see _validate_unit), nothing is
+        persisted. Thread-safe: Spark job submission is safe from multiple
+        threads; store writes serialize behind _write_lock; the manifest
+        commit is last (the commit point)."""
         from .summarize import suite_violations
 
-        # pre-flight on the un-observed frame: is there anything to fuse?
-        if self.violations_fn is None and not (
-            self.suite_violation_rows
-            and suite_violations(part, suite, self.doc_id_col, run_id, pid)
-            is not None
-        ):
-            return None
+        part = docs.filter(F.col("__bucket") == b).drop("__bucket")
 
-        def builder(base: DataFrame) -> DataFrame:
+        def rows_builder(base: DataFrame) -> DataFrame:
             frames = []
             if self.violations_fn is not None:
                 frames.append(self.violations_fn(base, run_id, pid))
@@ -709,30 +731,25 @@ class CheckpointRunner:
                 out = out.unionByName(f, allowMissingColumns=True)
             return out
 
-        def act(rows: DataFrame) -> None:
+        def append(rows: DataFrame) -> None:
             with self._write_lock:
                 self.store.append("violations", rows)
 
-        result, _, _ = validate_and_extract(
-            part, suite, builder, action=act, result_format=None
+        # pre-flight on the un-observed frame: is there a violation frame?
+        has_rows = self.violations_fn is not None or (
+            self.suite_violation_rows
+            and suite_violations(part, suite, self.doc_id_col, run_id, pid)
+            is not None
         )
-        n_docs = next(
-            (
-                r["result"]["element_count"]
-                for r in result["results"]
-                if "result" in r and "element_count" in r.get("result", {})
-            ),
-            None,
+        result, n_docs = _validate_unit(
+            part, suite, rows_builder if has_rows else None, append
         )
-        if n_docs is None:
-            n_docs = part.count()
         with self._write_lock:
-            self._write_results(run_id, pid, result)
+            _write_results(self.store, self.spark, run_id, pid, result)
             store_validation_result(self.store, self.spark, result, run_id=run_id)
-            self._write_lineage(run_id, pid, result, n_docs)
-        # the fused leg never persists the partition, so the states are
-        # one extra NARROW scan (only the profiled columns reach the
-        # reader — column pruning keeps it cheap at full width). Outside
+            _write_lineage(self.store, self.spark, run_id, pid, result, n_docs)
+        # the partition is never persisted, so the states are one extra
+        # NARROW scan (only the profiled columns reach the reader). Outside
         # the lock: it is a real Spark job and must overlap across
         # concurrent partitions; its write is lock-free (Arrow file)
         self._write_states(part, run_id, pid)
@@ -749,17 +766,8 @@ class CheckpointRunner:
         lock itself. The states table is run- and ts-stamped so
         corpus_profile can apply last-write-wins to orphan rows left by a
         crash between this append and the manifest commit."""
-        if not (
-            self.profile_columns
-            or self.profile_bins
-            or self.profile_mg
-            or self.profile_quantiles
-        ):
-            return
-        from .states import column_states, histogram_states
-
-        n_families = sum(
-            1
+        families = [
+            x
             for x in (
                 self.profile_columns,
                 self.profile_bins,
@@ -767,13 +775,16 @@ class CheckpointRunner:
                 self.profile_quantiles,
             )
             if x
-        )
+        ]
+        if not families:
+            return
+        from .states import column_states, histogram_states
+
         # each family's aggregation is its own Spark job; with >1 family
-        # and no partition cache (the fused leg never persists the
-        # full-width bucket), share ONE narrow projection of just the
-        # profiled columns across the jobs so the data is re-read at most
-        # once per family from a cached dimension-thin frame, not from the
-        # full-width source
+        # (and no partition cache — the bucket is never persisted), share
+        # ONE narrow projection of just the profiled columns across the
+        # jobs so the data is re-read at most once per family from a
+        # cached dimension-thin frame, not from the full-width source
         needed = sorted(
             set(self.profile_columns or [])
             | set(self.profile_bins or {})
@@ -781,7 +792,7 @@ class CheckpointRunner:
             | ({self.profile_quantiles[0]} if self.profile_quantiles else set())
         )
         src = part.select(*needed)
-        cache_src = n_families > 1 and self.fused
+        cache_src = len(families) > 1
         if cache_src:
             src = src.persist()
         pending: list[tuple[str, DataFrame]] = []
@@ -975,49 +986,6 @@ class CheckpointRunner:
         return quantile_sketch_bounds(
             committed_mg_states(df, committed), ps
         )
-
-    def _write_results(self, run_id: str, pid: str, result: dict[str, Any]) -> None:
-        rows = []
-        now = _utcnow()
-        for r in result["results"]:
-            cfg = r.get("expectation_config", {})
-            res = r.get("result", {})
-            obs = res.get("observed_value")
-            rows.append(
-                (
-                    run_id,
-                    pid,
-                    cfg.get("expectation_type", "?"),
-                    cfg.get("kwargs", {}).get("column"),
-                    bool(r["success"]),
-                    res.get("element_count"),
-                    res.get("unexpected_count"),
-                    None if obs is None else json.dumps(obs, default=str),
-                    json.dumps(r, default=str),
-                    now,
-                )
-            )
-        append_control_rows(self.store, self.spark, "results", rows, RESULT_SCHEMA)
-
-    def _write_lineage(
-        self, run_id: str, pid: str, result: dict[str, Any], n_docs: int
-    ) -> None:
-        now = _utcnow()
-        rows = [(run_id, pid, None, "doc_count", float(n_docs), now)]
-        for r in result["results"]:
-            res = r.get("result", {})
-            if isinstance(res.get("unexpected_count"), (int, float)):
-                rows.append(
-                    (
-                        run_id,
-                        pid,
-                        None,
-                        f"{r['expectation_config']['expectation_type']}.unexpected_count",
-                        float(res["unexpected_count"]),
-                        now,
-                    )
-                )
-        append_control_rows(self.store, self.spark, "lineage", rows, LINEAGE_SCHEMA)
 
 
 class PartitionedCorpusRunner(CheckpointRunner):

@@ -31,9 +31,14 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .runner import ParquetStore
+from .runner import (
+    ParquetStore,
+    _validate_unit,
+    _write_lineage,
+    _write_results,
+    store_has_partition,
+)
 from .suite import ExpectationSuite
-from .validator import Validator
 
 
 class StreamingValidationSink:
@@ -56,7 +61,6 @@ class StreamingValidationSink:
         result_format: str = "BOOLEAN_ONLY",
         on_result: Callable[[int, dict[str, Any]], None] | None = None,
         actions: list[Any] | None = None,
-        fused: bool = False,
     ):
         self.store = store
         self.suite = suite
@@ -69,10 +73,6 @@ class StreamingValidationSink:
         # "page someone on a bad micro-batch" hook; outcomes never fail the
         # stream, the latest batch's outcomes land in last_action_outcomes
         self.actions = actions
-        # fused=True + violations_fn: the suite's aggregates ride a
-        # CollectMetrics node on the violation append, so each micro-batch
-        # is scanned once (fused.validate_and_extract semantics)
-        self.fused = fused
         self.batches_validated = 0
         self.last_action_outcomes: dict[str, Any] | None = None
 
@@ -81,37 +81,25 @@ class StreamingValidationSink:
         # idempotent replay: foreachBatch re-delivers on failure/restart.
         # O(1) probe — a long-running stream must not re-parse every
         # manifest ever committed on every micro-batch
-        from .runner import store_has_partition
-
         if store_has_partition(self.store, self.run_id, pid):
             return
-        if self.fused and self.violations_fn is not None:
-            from .fused import validate_and_extract
+        rows_builder = None
+        if self.violations_fn is not None:
+            def rows_builder(d: DataFrame) -> DataFrame:
+                return self.violations_fn(d, self.run_id, pid)
 
-            result, _, _ = validate_and_extract(
-                batch_df,
-                self.suite,
-                lambda d: self.violations_fn(d, self.run_id, pid),
-                action=lambda rows: self.store.append("violations", rows),
-                result_format=self.result_format,
-            )
-            n_rows = next(
-                (
-                    r["result"]["element_count"]
-                    for r in result["results"]
-                    if "element_count" in r.get("result", {})
-                ),
-                None,
-            )
-            if n_rows is None:
-                n_rows = batch_df.count()
-            self._write(batch_df, pid, result, n_rows, write_violations=False)
-        else:
-            result = Validator(batch_df).validate(
-                self.suite, result_format=self.result_format
-            )
-            n_rows = batch_df.count()
-            self._write(batch_df, pid, result, n_rows)
+        # the batch runner's one-scan unit leg and result/lineage writers:
+        # one results-table schema across streaming and batch validation
+        result, n_rows = _validate_unit(
+            batch_df,
+            self.suite,
+            rows_builder,
+            lambda rows: self.store.append("violations", rows),
+            self.result_format,
+        )
+        spark = batch_df.sparkSession
+        _write_results(self.store, spark, self.run_id, pid, result)
+        _write_lineage(self.store, spark, self.run_id, pid, result, n_rows)
         self.store.commit_partition(
             self.run_id, pid, {"success": result["success"], "n_docs": int(n_rows)}
         )
@@ -134,26 +122,6 @@ class StreamingValidationSink:
             )
         if self.on_result is not None:
             self.on_result(batch_id, result)
-
-    def _write(
-        self,
-        batch_df: DataFrame,
-        pid: str,
-        result,
-        n_rows: int,
-        write_violations: bool = True,
-    ) -> None:
-        # reuse the batch runner's result/lineage writers for one shared
-        # results-table schema across streaming and batch validation
-        from .runner import CheckpointRunner
-
-        runner = CheckpointRunner(batch_df.sparkSession, self.store)
-        runner._write_results(self.run_id, pid, result)  # noqa: SLF001
-        runner._write_lineage(self.run_id, pid, result, n_rows)  # noqa: SLF001
-        if self.violations_fn is not None and write_violations:
-            self.store.append(
-                "violations", self.violations_fn(batch_df, self.run_id, pid)
-            )
 
 
 def windowed_violation_counts(
@@ -454,8 +422,6 @@ class FreshnessMonitor:
         from datetime import datetime, timezone
 
         pid = f"batch={batch_id}"
-        from .runner import store_has_partition
-
         if store_has_partition(self.store, self.run_id, pid):
             return
         row = batch_df.agg(
@@ -530,8 +496,6 @@ class StreamingProfileMonitor:
         from .states import column_states
 
         pid = f"batch={batch_id}"
-        from .runner import store_has_partition
-
         if store_has_partition(self.store, self.run_id, pid):
             return
         st = column_states(
@@ -596,7 +560,7 @@ class StreamingDriftMonitor:
         self.run_id = run_id
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from .runner import _utcnow, store_has_partition
+        from .runner import _utcnow
         from .states import histogram_states
 
         pid = f"batch={batch_id}"
@@ -682,7 +646,7 @@ class StreamingQuantileMonitor:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         import uuid
 
-        from .runner import _utcnow, store_has_partition
+        from .runner import _utcnow
         from .sketches import quantile_states
 
         pid = f"batch={batch_id}"

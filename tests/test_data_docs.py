@@ -94,7 +94,7 @@ def test_data_docs_violations_section(spark, tmp_path):
     s.add("expect_column_values_to_not_be_null", column="doc_id", mostly=0.9)
     store = ParquetStore(str(tmp_path / "store"))
     CheckpointRunner(
-        spark, store, n_buckets=2, violations_fn=span_violations, fused=True
+        spark, store, n_buckets=2, violations_fn=span_violations
     ).run(docs, s, run_id="rv")
 
     out = str(tmp_path / "site")

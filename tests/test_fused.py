@@ -3,8 +3,9 @@ aggregate metrics ride a CollectMetrics node on the violation-row query.
 The contract under test: EVRs bit-identical to the two-pass report, the
 observe node is a predicate-pushdown barrier (downstream filters never
 change observed metrics), automatic two-pass fallback when nothing is
-observable, and the CheckpointRunner fused mode writes the same results/
-violations/lineage as the classic persist path."""
+observable, and the CheckpointRunner's single-scan leg writes, per bucket,
+the same results/violations/lineage as the two-pass reference
+(validate_df + span_violations/suite_violations)."""
 
 from __future__ import annotations
 
@@ -129,43 +130,64 @@ def test_action_result_passthrough(spark, docs, tmp_path):
     assert rep["statistics"]["evaluated_expectations"] == 4
 
 
-def test_runner_fused_matches_classic(spark, docs, tmp_path):
-    cls_store = ParquetStore(str(tmp_path / "classic"))
-    fus_store = ParquetStore(str(tmp_path / "fused"))
+def _buckets(docs, n_buckets):
+    """(partition_id, bucket frame) exactly as CheckpointRunner cuts them."""
+    bucketed = docs.withColumn(
+        "__bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets))
+    )
+    for b in range(n_buckets):
+        yield f"bucket={b}", bucketed.filter(F.col("__bucket") == b).drop("__bucket")
+
+
+def _reference_results(docs, suite, n_buckets):
+    """Two-pass reference results rows: validate_df on every bucket."""
+    out = []
+    for pid, part in _buckets(docs, n_buckets):
+        for r in validate_df(part, suite)["results"]:
+            cfg, res = r["expectation_config"], r.get("result", {})
+            out.append((pid, cfg["expectation_type"], cfg["kwargs"].get("column"),
+                        r["success"], res.get("element_count"),
+                        res.get("unexpected_count")))
+    return sorted(out)
+
+
+def _vkey(r):
+    return (r["partition_id"], r["doc_id"] or "", str(r["span_index"]),
+            r["expectation"])
+
+
+def test_runner_matches_two_pass(spark, docs, tmp_path):
+    from sparkcheck.summarize import suite_violations
+
+    store = ParquetStore(str(tmp_path / "runner"))
     CheckpointRunner(
-        spark, cls_store, n_buckets=3, violations_fn=span_violations,
+        spark, store, n_buckets=3, violations_fn=span_violations,
         suite_violation_rows=True,
-    ).run(docs, _suite(), run_id="rc")
-    CheckpointRunner(
-        spark, fus_store, n_buckets=3, violations_fn=span_violations,
-        suite_violation_rows=True, fused=True,
     ).run(docs, _suite(), run_id="rf")
 
-    cr = cls_store.read(spark, "results").drop("ts", "run_id")
-    fr = fus_store.read(spark, "results").drop("ts", "run_id")
+    fr = store.read(spark, "results").drop("ts", "run_id")
     key = ["partition_id", "expectation", "column"]
-    assert sorted(map(tuple, cr.select(*key, "success", "element_count",
+    assert sorted(map(tuple, fr.select(*key, "success", "element_count",
                                        "unexpected_count").collect())) == \
-           sorted(map(tuple, fr.select(*key, "success", "element_count",
-                                       "unexpected_count").collect()))
+           _reference_results(docs, _suite(), 3)
 
-    cv = cls_store.read(spark, "violations")
-    fv = fus_store.read(spark, "violations")
-    vkey = lambda r: (r["partition_id"], r["doc_id"] or "",  # noqa: E731
-                      str(r["span_index"]), r["expectation"])
-    assert sorted(map(vkey, cv.collect())) == sorted(map(vkey, fv.collect()))
+    ref_viol = []
+    for pid, part in _buckets(docs, 3):
+        ref_viol += span_violations(part, "rf", pid).collect()
+        ref_viol += suite_violations(part, _suite(), "doc_id", "rf", pid).collect()
+    fv = store.read(spark, "violations")
+    assert sorted(map(_vkey, fv.collect())) == sorted(map(_vkey, ref_viol))
 
-    # lineage doc counts agree with corpus size on both paths
-    for store in (cls_store, fus_store):
-        total = (store.read(spark, "lineage").where("metric = 'doc_count'")
-                 .agg(F.sum("value").alias("s")).collect()[0]["s"])
-        assert int(total) == N_DOCS
+    # lineage doc counts agree with corpus size
+    total = (store.read(spark, "lineage").where("metric = 'doc_count'")
+             .agg(F.sum("value").alias("s")).collect()[0]["s"])
+    assert int(total) == N_DOCS
 
 
-def test_runner_fused_resume(spark, docs, tmp_path):
+def test_runner_resume(spark, docs, tmp_path):
     store = ParquetStore(str(tmp_path / "fres"))
     runner = CheckpointRunner(spark, store, n_buckets=4,
-                              violations_fn=span_violations, fused=True)
+                              violations_fn=span_violations)
     with pytest.raises(RuntimeError, match="injected failure"):
         runner.run(docs, _suite(), run_id="r1", fail_after=2)
     assert len(store.committed_partitions("r1")) == 2
@@ -177,16 +199,20 @@ def test_runner_fused_resume(spark, docs, tmp_path):
              .count().where("count > 1"))
     assert dupes.count() == 0
     assert results.select("partition_id").distinct().count() == 4
+    # the resumed store holds exactly the two-pass reference rows
+    assert sorted(map(tuple, results.select(
+        "partition_id", "expectation", "column", "success", "element_count",
+        "unexpected_count").collect())) == _reference_results(docs, _suite(), 4)
 
 
-def test_runner_fused_profile_states(spark, docs, tmp_path):
-    # the fused (single-scan) leg also persists per-partition states;
-    # corpus_profile == full rescan through the fused runner API
+def test_runner_profile_states(spark, docs, tmp_path):
+    # the single-scan leg also persists per-partition states;
+    # corpus_profile == full rescan through the runner API
     store = ParquetStore(str(tmp_path / "fstates"))
     nd = docs.withColumn("n_spans", F.size("spans"))
     runner = CheckpointRunner(
         spark, store, n_buckets=4, violations_fn=span_violations,
-        fused=True, profile_columns=["n_spans"],
+        profile_columns=["n_spans"],
     )
     runner.run(nd, _suite(), run_id="r1")
     merged = runner.corpus_profile("r1").collect()[0]

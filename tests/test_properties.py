@@ -4,6 +4,7 @@ sweeping null placement, bounds, value sets, and mostly thresholds."""
 
 from __future__ import annotations
 
+import json
 import math
 
 import pandas as pd
@@ -297,3 +298,140 @@ def test_two_sample_distances_match_scipy_formulas(spark, a_vals, b_vals):
             w1 += abs(fa - fb) * (support[i + 1] - v)
     assert abs(r["ks_stat"] - ks) < 1e-6
     assert abs(r["wasserstein"] - w1) < 1e-6
+
+
+# ---------------------------------------------------------------------------
+# the runner's single partition leg vs the two-pass reference
+# ---------------------------------------------------------------------------
+
+_DOC_IDS = st.one_of(
+    st.none(),
+    st.sampled_from(
+        ["hot0-000000000001", "hot1-000000000002", "p07-000000000003",
+         "p23-000000000004", "zz-000000000005"]
+    ),
+    st.integers(0, 10**6).map(lambda i: f"p{i % 24:02d}-{i:012d}"),
+)
+_SPAN = st.tuples(
+    st.sampled_from(["text", "image", "bogus"]),
+    st.sampled_from(["spark scan", "bad\x01text", None]),
+    st.sampled_from([None, "media://b0/0001"]),
+    st.one_of(st.none(), st.integers(0, 40)),
+)
+_DOC_FRAMES = st.lists(
+    st.tuples(_DOC_IDS, st.lists(_SPAN, max_size=4)), min_size=1, max_size=16
+)
+_SUITE_POOL = [
+    # observable whole-table aggregates
+    ("expect_column_values_to_not_be_null", {"column": "doc_id", "mostly": 0.8}),
+    ("expect_column_values_to_match_regex",
+     {"column": "doc_id", "regex": "^(hot[0-2]|p[0-9]{2})-", "mostly": 0.8}),
+    ("expect_table_row_count_to_be_between", {"min_value": 1}),
+    # uniqueness: a groupBy, never observable
+    ("expect_column_values_to_be_unique", {"column": "doc_id"}),
+    # filtered domain: resolved by its own job
+    ("expect_column_values_to_not_be_null",
+     {"column": "doc_id", "row_condition": "n_spans > 1",
+      "condition_parser": "spark"}),
+    ("expect_column_mean_to_be_between",
+     {"column": "n_spans", "min_value": 0, "max_value": 3}),
+    ("expect_column_values_to_be_between",
+     {"column": "n_spans", "min_value": 0, "max_value": 3, "mostly": 0.5}),
+]
+_DOCS_DDL = (
+    "doc_id string, "
+    "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+)
+
+
+def _canon(v):
+    """EVR with its sampled value lists order-free: the partial lists of a
+    uniqueness check follow shuffle fetch order, not the data."""
+    if isinstance(v, dict):
+        return {
+            k: sorted(map(repr, x)) if k.endswith("_list") and x else _canon(x)
+            for k, x in v.items()
+        }
+    if isinstance(v, list):
+        return [_canon(x) for x in v]
+    return v
+
+
+def _vkeys(rows):
+    return sorted(
+        (r["doc_id"] or "", r["span_index"], r["expectation"], r["observed_value"] or "")
+        for r in rows
+    )
+
+
+def _result_rows(evrs):
+    return sorted(
+        (
+            r["expectation_config"]["expectation_type"],
+            r["expectation_config"]["kwargs"].get("column"),
+            bool(r["success"]),
+            r.get("result", {}).get("element_count"),
+            r.get("result", {}).get("unexpected_count"),
+            json.dumps(_canon(r), sort_keys=True, default=str),
+        )
+        for r in evrs
+    )
+
+
+@_settings
+@given(
+    docs=_DOC_FRAMES,
+    picks=st.lists(
+        st.integers(0, len(_SUITE_POOL) - 1), min_size=1, max_size=4, unique=True
+    ),
+)
+def test_single_scan_leg_matches_two_pass(spark, tmp_path, docs, picks):
+    """validate_and_extract == validate_df + span_violations on random doc
+    frames and suites, and every runner bucket's committed results rows
+    == validate_df on that bucket."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from sparkcheck.fused import validate_and_extract
+    from sparkcheck.runner import CheckpointRunner, ParquetStore
+    from sparkcheck.spans import span_violations
+
+    # checkpointed: a frame parallelized from Python would re-run Python
+    # workers on every one of the many scans below
+    df = (
+        spark.createDataFrame(docs, _DOCS_DDL)
+        .withColumn("n_spans", F.size("spans"))
+        .localCheckpoint()
+    )
+    suite = ExpectationSuite(
+        "diff", [ExpectationConfiguration(*_SUITE_POOL[i]) for i in picks]
+    )
+
+    rep, rows, _ = validate_and_extract(
+        df, suite, span_violations, result_format=None
+    )
+    ref = validate_df(df, suite)
+    assert json.dumps(_canon(rep), sort_keys=True, default=str) == json.dumps(
+        _canon(ref), sort_keys=True, default=str
+    )
+    assert _vkeys(rows.collect()) == _vkeys(span_violations(df).collect())
+
+    n_buckets = 2
+    store = ParquetStore(str(tmp_path / uuid.uuid4().hex))
+    CheckpointRunner(
+        spark, store, n_buckets=n_buckets, violations_fn=span_violations
+    ).run(df, suite, run_id="d")
+    results = store.read(spark, "results").collect()
+    violations = store.read(spark, "violations").collect()
+    bucketed = df.withColumn(
+        "__bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets))
+    )
+    for b in range(n_buckets):
+        pid = f"bucket={b}"
+        part = bucketed.filter(F.col("__bucket") == b).drop("__bucket")
+        got = [json.loads(r["evr"]) for r in results if r["partition_id"] == pid]
+        assert _result_rows(got) == _result_rows(validate_df(part, suite)["results"])
+        assert _vkeys(r for r in violations if r["partition_id"] == pid) == _vkeys(
+            span_violations(part).collect()
+        )

@@ -312,11 +312,12 @@ def test_freshness_monitor_rate_source(spark, tmp_path):
     assert alerts
 
 
-def test_streaming_sink_actions_and_fused(spark, tmp_path):
+def test_streaming_sink_actions_match_two_pass(spark, tmp_path):
     """actions fire per committed micro-batch with the checkpoint gate;
-    fused=True writes identical results/violations in one scan."""
+    the one-scan sink writes the two-pass reference's results/violations."""
     import json as _json
 
+    from sparkcheck import validate_df
     from sparkcheck.spans import span_violations
     from sparkcheck.synth import generate_docs
 
@@ -330,7 +331,7 @@ def test_streaming_sink_actions_and_fused(spark, tmp_path):
     store = ParquetStore(str(tmp_path / "sa_store"))
     sink = StreamingValidationSink(
         store, suite, run_id="sa",
-        violations_fn=span_violations, fused=True,
+        violations_fn=span_violations,
         actions=[{"type": "file_alert", "path": alert,
                   "notify_on": "failure"}],
     )
@@ -344,20 +345,23 @@ def test_streaming_sink_actions_and_fused(spark, tmp_path):
     assert lines[0]["run_id"] == "sa/batch=0" and not lines[0]["success"]
     assert sink.last_action_outcomes["file_alert"]["status"] == "ok"
 
-    # fused output == classic output (results rows and violations)
-    store2 = ParquetStore(str(tmp_path / "sa_classic"))
-    classic = StreamingValidationSink(
-        store2, suite, run_id="sa", violations_fn=span_violations,
-    )
-    classic(docs, 0)
+    # sink output == two-pass reference (results rows and violations)
+    ref = validate_df(docs, suite, result_format="BOOLEAN_ONLY")["results"]
     f_res = store.read(spark, "results").where("partition_id = 'batch=0'")
-    c_res = store2.read(spark, "results").where("partition_id = 'batch=0'")
     cols = ["expectation", "success", "element_count", "unexpected_count"]
-    assert sorted(map(tuple, f_res.select(*cols).collect())) == \
-           sorted(map(tuple, c_res.select(*cols).collect()))
+    assert sorted(map(tuple, f_res.select(*cols).collect())) == sorted(
+        (r["expectation_config"]["expectation_type"], r["success"],
+         r.get("result", {}).get("element_count"),
+         r.get("result", {}).get("unexpected_count"))
+        for r in ref
+    )
     fv = store.read(spark, "violations").where("partition_id = 'batch=0'")
-    cv = store2.read(spark, "violations").where("partition_id = 'batch=0'")
-    assert fv.count() == cv.count()
+    assert fv.count() == span_violations(docs).count()
+    # BOOLEAN_ONLY EVRs carry no element_count: n_docs comes from count()
+    lineage = store.read(spark, "lineage").where(
+        "partition_id = 'batch=0' AND metric = 'doc_count'"
+    )
+    assert [r["value"] for r in lineage.collect()] == [2000.0]
 
 
 def test_streaming_group_cap(spark, tmp_path):
