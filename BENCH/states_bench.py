@@ -9,7 +9,7 @@ bucket only):
 
   full      = column_states(all buckets) + merge       (scans 100%)
   resume    = load persisted states for buckets 0..k-2 +
-              update_states(new data = bucket k-1) + merge  (scans 1/k)
+              update(moments, new data = bucket k-1) + merge  (scans 1/k)
 
 Both must produce identical merged profiles (asserted to 6dp); the
 speedup is the resume win. Run once per parallelism level (fresh JVM
@@ -78,7 +78,7 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    from sparkcheck.states import column_states, merge_states, update_states
+    from sparkcheck.states import column_states, merge_states, moments, update
 
     path = build_corpus(spark, args.rows, args.buckets)
     data = spark.read.parquet(path)
@@ -101,7 +101,7 @@ def main() -> None:
     t0 = time.time()
     persisted = spark.read.parquet(store)
     delta = data.where(f"bucket = {last}")  # partition-pruned scan
-    resumed = merge_states(update_states(persisted, delta, COLS, "bucket")).collect()
+    resumed = merge_states(update(moments(COLS), persisted, delta, "bucket")).collect()
     t_resume = time.time() - t0
 
     fr = {r["column"]: r for r in full}
@@ -114,9 +114,9 @@ def main() -> None:
     # ---- histogram-states leg: incremental KL/PSI drift vs full rescan
     from sparkcheck.states import (
         drift_from_states,
+        histogram,
         histogram_states,
         merge_histogram_states,
-        update_histogram_states,
     )
 
     BINS = {
@@ -144,10 +144,10 @@ def main() -> None:
 
     t0 = time.time()
     h_res = merge_histogram_states(
-        update_histogram_states(
+        update(
+            histogram(BINS),
             spark.read.parquet(hstore),
             data.where(f"bucket = {last}"),
-            BINS,
             "bucket",
         )
     )
@@ -167,7 +167,7 @@ def main() -> None:
     from sparkcheck.sketches import (
         quantile_sketch_bounds,
         quantile_states,
-        update_quantile_states,
+        quantiles,
     )
 
     QCOL, QK, QPS = "v_qty", 256, [0.5, 0.99]
@@ -192,10 +192,10 @@ def main() -> None:
     q_res = {
         r["p"]: r
         for r in quantile_sketch_bounds(
-            update_quantile_states(
+            update(
+                quantiles(QCOL, QK),
                 spark.read.parquet(qstore),
                 data.where(f"bucket = {last}"),
-                QCOL,
                 "bucket",
             ),
             QPS,

@@ -2404,7 +2404,7 @@ def q_merged_states_lineitem(spark, sf):
     avg/stddev_samp/min/max, proving merged == rescanned. This is the
     metric half of the north rule's per-partition resume: committed
     states mean corpus stats never rescan finished partitions
-    (states.update_states covers the incremental path in pytest)."""
+    (states.update covers the incremental path in pytest)."""
     li = _t(spark, sf, "lineitem")
     from sparkcheck.states import column_states, merge_states
 
@@ -2490,8 +2490,8 @@ def q_runner_profile_documents(spark, sf):
 
 def q_streaming_profile_documents(spark, sf):
     """Continuously-updated corpus profile from per-micro-batch mergeable
-    states (streaming.StreamingProfileMonitor — the streaming half of the
-    metric-resume story): three deterministic micro-batches of documents
+    states (streaming.StateMonitor over states.moments — the streaming
+    half of the metric-resume story): three deterministic micro-batches of documents
     flow through the foreachBatch callable, batch 1 is then REDELIVERED
     (foreachBatch's at-least-once contract) and must be a manifest-keyed
     no-op, and the profile is merge_states over the 3-batch × 1-column
@@ -2499,16 +2499,18 @@ def q_streaming_profile_documents(spark, sf):
     rescan: the claim is exact equality including across the redelivery.
     Live-stream behavior (rate source, crash-orphan supersede) is
     pytest-covered (test_streaming_profile_monitor_*)."""
-    from sparkcheck.streaming import StreamingProfileMonitor
+    from sparkcheck.states import merge_states, moments
+    from sparkcheck.streaming import StateMonitor
 
     d = _t(spark, sf, "documents")
+    kind = moments(["n_chars"])
 
     def build(store):
-        mon = StreamingProfileMonitor(store, ["n_chars"], run_id="entry")
+        mon = StateMonitor(store, [kind], run_id="entry")
         for i in range(3):
             mon(d.where(F.pmod(F.xxhash64("doc_id"), F.lit(3)) == i), i)
         mon(d.where(F.pmod(F.xxhash64("doc_id"), F.lit(3)) == 1), 1)
-        return mon.profile(spark, round_to=5)
+        return merge_states(mon.states(spark, kind), round_to=5)
 
     return _with_temp_store("sparkcheck_sprof_", build).select(
         "column",
@@ -2715,8 +2717,8 @@ _SD_EDGES = [0.0, 500.0, 1000.0, 2000.0, 4000.0]
 
 def q_streaming_drift_documents(spark, sf):
     """Continuously-updated corpus histogram from per-micro-batch
-    mergeable histogram states (streaming.StreamingDriftMonitor — the
-    distribution half of the streaming resume story): three
+    mergeable histogram states (streaming.StateMonitor over
+    states.histogram — the distribution half of the streaming resume story): three
     deterministic micro-batches of documents flow through the
     foreachBatch callable, batch 1 is then REDELIVERED and must be a
     manifest-keyed no-op, and the corpus histogram is a pure-sum fold of
@@ -2727,16 +2729,18 @@ def q_streaming_drift_documents(spark, sf):
     drift math is oracled separately in kl_drift_quantity). Live-stream
     behavior and crash-orphan supersede are pytest-covered
     (test_streaming_drift_monitor_*)."""
-    from sparkcheck.streaming import StreamingDriftMonitor
+    from sparkcheck.states import histogram, merge_histogram_states
+    from sparkcheck.streaming import StateMonitor
 
     d = _t(spark, sf, "documents")
+    kind = histogram({"n_chars": _SD_EDGES})
 
     def build(store):
-        mon = StreamingDriftMonitor(store, {"n_chars": _SD_EDGES}, run_id="entry")
+        mon = StateMonitor(store, [kind], run_id="entry")
         for i in range(3):
             mon(d.where(F.pmod(F.xxhash64("doc_id"), F.lit(3)) == i), i)
         mon(d.where(F.pmod(F.xxhash64("doc_id"), F.lit(3)) == 1), 1)
-        return mon.histogram(spark)
+        return merge_histogram_states(mon.states(spark, kind))
 
     return _with_temp_store("sparkcheck_sdrift_", build)
 

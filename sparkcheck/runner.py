@@ -22,6 +22,7 @@ partition-pruned scan.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
@@ -36,6 +37,23 @@ from pyspark.sql import functions as F
 
 from .expectations import build_domain
 from .schema import EVAL_PARAM_SCHEMA, LINEAGE_SCHEMA, RESULT_SCHEMA, VIOLATION_SCHEMA
+from .sketches import (
+    certified_heavy_hitters,
+    merge_mg_states,
+    misra_gries,
+    quantile_sketch_bounds,
+    quantiles,
+)
+from .states import (
+    StateKind,
+    drift_from_states,
+    histogram,
+    latest_committed,
+    merge_histogram_states,
+    merge_states,
+    moments,
+    quantile_bounds,
+)
 from .suite import ExpectationConfiguration, ExpectationSuite
 from .validator import Validator
 
@@ -553,6 +571,56 @@ def _write_lineage(
     append_control_rows(store, spark, "lineage", rows, LINEAGE_SCHEMA)
 
 
+def write_states(
+    store: Any,
+    kinds: Sequence[StateKind],
+    frame: DataFrame,
+    run_id: str,
+    pid: str,
+    lock: Any = None,
+) -> None:
+    """Append one commit unit's state rows of every kind, each stamped
+    with ``run_id``, ``ts`` and a per-append ``append_id`` so
+    states.latest_committed can supersede a crash's orphan rows as a set.
+    With more than one kind the narrow projection of their source columns
+    is cached for the kinds' jobs. Dimension-sized rows are written
+    through ``append_small`` (driver-side Arrow, lock-free), else a Spark
+    ``append`` under ``lock``, which shares the committer's _temporary
+    dir with the caller's other appends."""
+    if not kinds:
+        return
+    src = frame.select(*sorted({c for k in kinds for c in k.columns}))
+    cache = len(kinds) > 1
+    if cache:
+        src = src.persist()
+    try:
+        for kind in kinds:
+            rows = kind.build(src, f"'{pid}'").select(
+                F.lit(run_id).alias("run_id"),
+                "*",
+                F.lit(_utcnow()).alias("ts"),
+                F.lit(uuid.uuid4().hex).alias("append_id"),
+            )
+            if hasattr(store, "append_small"):
+                store.append_small(kind.table, rows)
+            else:
+                with lock or contextlib.nullcontext():
+                    store.append(kind.table, rows)
+    finally:
+        if cache:
+            src.unpersist()
+
+
+def read_states(
+    store: Any, spark: SparkSession, run_id: str, kind: StateKind
+) -> DataFrame:
+    """``kind``'s state rows of the units of ``run_id`` committed so far,
+    newest append per unit (states.latest_committed) — the input of the
+    family's fold; never a rescan of the data."""
+    rows = store.read(spark, kind.table).where(F.col("run_id") == run_id)
+    return latest_committed(rows, sorted(store.committed_partitions(run_id)))
+
+
 @dataclass
 class RunReport:
     run_id: str
@@ -578,7 +646,6 @@ class CheckpointRunner:
         doc_id_col: str = "doc_id",
         max_concurrency: int = 1,
         profile_columns: Sequence[str] | None = None,
-        profile_hll: bool = False,
         profile_bins: "dict[str, Sequence[float]] | None" = None,
         profile_mg: "tuple[str, int] | None" = None,
         profile_quantiles: "tuple[str, int] | None" = None,
@@ -587,33 +654,27 @@ class CheckpointRunner:
         self.store = store
         self.n_buckets = n_buckets
         self.violations_fn = violations_fn
-        # when set, every committed partition also persists its mergeable
-        # aggregation states (states.column_states) for these numeric
-        # columns into the store's column_states table — corpus-level
-        # profile queries (corpus_profile) then fold the states instead of
-        # rescanning 10^12 rows, and a resumed run only adds states for
-        # the partitions it actually ran
-        self.profile_columns = list(profile_columns) if profile_columns else None
-        self.profile_hll = profile_hll
-        # when set, fixed-bin histogram states (states.histogram_states)
-        # ride the same per-partition pass into the histogram_states
-        # table; corpus_histogram/corpus_drift fold them for incremental
-        # KL/PSI drift against a baseline snapshot — never a rescan
+        # every committed partition also persists the mergeable states of
+        # these kinds beside its EVRs, and the corpus_* readers fold the
+        # committed states instead of rescanning 10^12 rows; a resumed run
+        # only adds states for the partitions it actually ran:
+        #   profile_columns   -> column moments (corpus_profile)
+        #   profile_bins      -> fixed-bin histograms (corpus_histogram,
+        #                        corpus_drift, corpus_quantile_bounds)
+        #   profile_mg        -> (column, k) Misra-Gries summaries
+        #                        (corpus_heavy_hitters)
+        #   profile_quantiles -> (column, k) quantile summaries
+        #                        (corpus_quantile_sketch_bounds)
+        kinds = {
+            "profile_columns": profile_columns and moments(profile_columns),
+            "profile_bins": profile_bins and histogram(profile_bins),
+            "profile_mg": profile_mg and misra_gries(*profile_mg),
+            "profile_quantiles": profile_quantiles and quantiles(*profile_quantiles),
+        }
+        self._kinds = {option: kind for option, kind in kinds.items() if kind}
+        self.states: list[StateKind] = list(self._kinds.values())
+        # corpus_quantile_bounds maps the histogram's bins back to values
         self.profile_bins = dict(profile_bins) if profile_bins else None
-        # (column, k): per-partition Misra-Gries summaries
-        # (sketches.mg_states) ride into the mg_states table;
-        # corpus_heavy_hitters folds them into three-valued certified
-        # hot-key verdicts with no rescan of committed partitions
-        self.profile_mg = tuple(profile_mg) if profile_mg else None
-        # (column, k): per-partition mergeable quantile summaries
-        # (sketches.quantile_states) ride into the quantile_states table;
-        # corpus_quantile_bounds folds them into certified [lo, hi]
-        # brackets (and three-valued verdicts via
-        # states.quantile_bracket_verdicts) with no rescan and NO
-        # pre-chosen bin edges — the edge-free complement of profile_bins
-        self.profile_quantiles = (
-            tuple(profile_quantiles) if profile_quantiles else None
-        )
         # when set, per-row violations for every map expectation in the
         # suite are derived automatically (summarize.suite_violations) and
         # appended alongside any custom violations_fn output
@@ -752,112 +813,19 @@ class CheckpointRunner:
         # NARROW scan (only the profiled columns reach the reader). Outside
         # the lock: it is a real Spark job and must overlap across
         # concurrent partitions; its write is lock-free (Arrow file)
-        self._write_states(part, run_id, pid)
+        write_states(self.store, self.states, part, run_id, pid, self._write_lock)
         self.store.commit_partition(
             run_id, pid, {"success": result["success"], "n_docs": int(n_docs)}
         )
         return pid, n_docs, result
 
-    def _write_states(self, part: DataFrame, run_id: str, pid: str) -> None:
-        """Persist the partition's mergeable aggregation states (one row
-        per profiled column) alongside its EVRs. Called OUTSIDE
-        _write_lock (the aggregation is a real Spark job that must overlap
-        across concurrent partitions); the Spark-append fallback takes the
-        lock itself. The states table is run- and ts-stamped so
-        corpus_profile can apply last-write-wins to orphan rows left by a
-        crash between this append and the manifest commit."""
-        families = [
-            x
-            for x in (
-                self.profile_columns,
-                self.profile_bins,
-                self.profile_mg,
-                self.profile_quantiles,
-            )
-            if x
-        ]
-        if not families:
-            return
-        from .states import column_states, histogram_states
-
-        # each family's aggregation is its own Spark job; with >1 family
-        # (and no partition cache — the bucket is never persisted), share
-        # ONE narrow projection of just the profiled columns across the
-        # jobs so the data is re-read at most once per family from a
-        # cached dimension-thin frame, not from the full-width source
-        needed = sorted(
-            set(self.profile_columns or [])
-            | set(self.profile_bins or {})
-            | ({self.profile_mg[0]} if self.profile_mg else set())
-            | ({self.profile_quantiles[0]} if self.profile_quantiles else set())
-        )
-        src = part.select(*needed)
-        cache_src = len(families) > 1
-        if cache_src:
-            src = src.persist()
-        pending: list[tuple[str, DataFrame]] = []
-        if self.profile_columns:
-            pending.append((
-                "column_states",
-                column_states(
-                    src.select(*self.profile_columns),
-                    self.profile_columns,
-                    # one state per commit unit: the partition id itself
-                    state_key=f"'{pid}'",
-                    include_hll=self.profile_hll,
-                ),
-            ))
-        if self.profile_bins:
-            pending.append((
-                "histogram_states",
-                histogram_states(
-                    src.select(*self.profile_bins),
-                    self.profile_bins,
-                    state_key=f"'{pid}'",
-                ),
-            ))
-        if self.profile_mg:
-            from .sketches import mg_states
-
-            col, k = self.profile_mg
-            pending.append((
-                "mg_states",
-                mg_states(src.select(col), col, k=k, state_key=f"'{pid}'"),
-            ))
-        if self.profile_quantiles:
-            from .sketches import quantile_states
-
-            qcol, qk = self.profile_quantiles
-            pending.append((
-                "quantile_states",
-                quantile_states(
-                    src.select(qcol), qcol, state_key=f"'{pid}'", k=qk
-                ),
-            ))
-        for table, st in pending:
-            stamped = st.select(
-                F.lit(run_id).alias("run_id"),
-                "*",
-                F.lit(_utcnow()).alias("ts"),
-                # per-append unique id: multi-row states (MG summaries)
-                # supersede as a SET, and ts alone can tie when two appends
-                # land in the same clock tick — the id breaks the tie
-                F.lit(uuid.uuid4().hex).alias("append_id"),
-            )
-            if hasattr(self.store, "append_small"):
-                # dimension-sized (#profiled columns rows): the aggregation
-                # runs as one Spark job, the write is driver-side Arrow —
-                # lock-free (uniquely-named file), so concurrent partitions'
-                # state aggregations overlap
-                self.store.append_small(table, stamped)
-            else:
-                # third-party store: a Spark append shares the Hadoop
-                # committer's _temporary dir — serialize like the other
-                # writes
-                with self._write_lock:
-                    self.store.append(table, stamped)
-        if cache_src:
-            src.unpersist()
+    def _committed_states(self, run_id: str, option: str, reader: str):
+        """The run's committed state rows of the kind the runner was
+        constructed with through keyword ``option``, and that kind."""
+        kind = self._kinds.get(option)
+        if kind is None:
+            raise ValueError(f"{reader} needs the runner constructed with {option}")
+        return read_states(self.store, self.spark, run_id, kind), kind
 
     def corpus_profile(self, run_id: str, round_to: int = 6) -> DataFrame:
         """Corpus-level column profile for a run, folded from the
@@ -866,39 +834,16 @@ class CheckpointRunner:
         committed subset's profile; after resume it equals the full
         rescan — the states module's merged == rescan contract, now
         served through the runner API). Requires profile_columns."""
-        if not self.profile_columns:
-            raise ValueError(
-                "corpus_profile needs the runner constructed with "
-                "profile_columns"
-            )
-        from .states import committed_profile
-
-        df = self.store.read(self.spark, "column_states").where(
-            F.col("run_id") == run_id
-        )
-        committed = sorted(self.store.committed_partitions(run_id))
-        # last-write-wins per (state_key, column): a crash between the
-        # state append and the manifest commit leaves an orphan row that
-        # the re-run supersedes (all frames here are dimension-sized)
-        return committed_profile(df, committed, round_to=round_to)
+        rows, _ = self._committed_states(run_id, "profile_columns", "corpus_profile")
+        return merge_states(rows, round_to=round_to)
 
     def corpus_histogram(self, run_id: str) -> DataFrame:
         """Merged corpus histogram (column, bin, cnt) folded from the
         per-partition histogram states of the committed partitions —
         never rescans the corpus, orphan rows superseded like
         corpus_profile. Requires profile_bins."""
-        if not self.profile_bins:
-            raise ValueError(
-                "corpus_histogram needs the runner constructed with "
-                "profile_bins"
-            )
-        from .states import committed_histogram
-
-        df = self.store.read(self.spark, "histogram_states").where(
-            F.col("run_id") == run_id
-        )
-        committed = sorted(self.store.committed_partitions(run_id))
-        return committed_histogram(df, committed)
+        rows, _ = self._committed_states(run_id, "profile_bins", "corpus_histogram")
+        return merge_histogram_states(rows)
 
     def corpus_drift(
         self,
@@ -912,8 +857,6 @@ class CheckpointRunner:
         committed partitions were ever scanned, and the fold itself is
         driver math over a #columns x (bins+2)-row frame. Baseline edges
         must match profile_bins (validated by bin count)."""
-        from .states import drift_from_states
-
         return drift_from_states(
             self.corpus_histogram(run_id),
             baseline,
@@ -926,25 +869,9 @@ class CheckpointRunner:
         committed partitions' Misra-Gries states — never rescans the
         corpus; set-level last-write-wins supersedes redelivered units.
         Requires profile_mg=(column, k)."""
-        if not self.profile_mg:
-            raise ValueError(
-                "corpus_heavy_hitters needs the runner constructed with "
-                "profile_mg=(column, k)"
-            )
-        from .sketches import (
-            certified_heavy_hitters,
-            committed_mg_states,
-            merge_mg_states,
-        )
-
-        df = self.store.read(self.spark, "mg_states").where(
-            F.col("run_id") == run_id
-        )
-        committed = sorted(self.store.committed_partitions(run_id))
-        merged = merge_mg_states(
-            committed_mg_states(df, committed), k=self.profile_mg[1]
-        )
-        return certified_heavy_hitters(merged, min_fraction)
+        rows, kind = self._committed_states(run_id, "profile_mg", "corpus_heavy_hitters")
+        (_, k), = kind.shape
+        return certified_heavy_hitters(merge_mg_states(rows, k), min_fraction)
 
     def corpus_quantile_bounds(
         self, run_id: str, ps: "Sequence[float]"
@@ -954,8 +881,6 @@ class CheckpointRunner:
         corpus_histogram, edges taken from profile_bins. Definite quantile
         expectations (states.quantile_bracket_verdicts) follow without
         ever rescanning committed partitions."""
-        from .states import quantile_bounds
-
         return quantile_bounds(
             self.corpus_histogram(run_id), self.profile_bins, ps
         )
@@ -967,25 +892,13 @@ class CheckpointRunner:
         the run's merged quantile-summary states — the EDGE-FREE
         counterpart of corpus_quantile_bounds: no profile_bins needed,
         the bracket width is the summary's worst-case rank certificate
-        instead of one bin. Set-level last-write-wins supersedes
-        redelivered units (the summary is a multi-row unit, like MG);
-        definite three-valued verdicts follow via
+        instead of one bin. Definite three-valued verdicts follow via
         states.quantile_bracket_verdicts without ever rescanning
         committed partitions. Requires profile_quantiles=(column, k)."""
-        if not self.profile_quantiles:
-            raise ValueError(
-                "corpus_quantile_sketch_bounds needs the runner constructed "
-                "with profile_quantiles=(column, k)"
-            )
-        from .sketches import committed_mg_states, quantile_sketch_bounds
-
-        df = self.store.read(self.spark, "quantile_states").where(
-            F.col("run_id") == run_id
+        rows, _ = self._committed_states(
+            run_id, "profile_quantiles", "corpus_quantile_sketch_bounds"
         )
-        committed = sorted(self.store.committed_partitions(run_id))
-        return quantile_sketch_bounds(
-            committed_mg_states(df, committed), ps
-        )
+        return quantile_sketch_bounds(rows, ps)
 
 
 class PartitionedCorpusRunner(CheckpointRunner):

@@ -69,6 +69,7 @@ from pyspark.sql import functions as F
 
 from .expectations import Expectation, build_domain, register_expectation
 from .metrics import Domain, MetricConfiguration, eager_metric, freeze_kwargs
+from .states import StateKind
 
 __all__ = [
     "BloomFilter",
@@ -561,9 +562,9 @@ def mg_states(
     rescan of finished partitions.
 
     Scale shape: one mapInArrow pass bounded at k counters per
-    (task, unit) pair, then ONE groupBy(state_key) fold of the
-    dimension-sized partial-summary rows (#tasks x k per unit) down to
-    <= k rows per unit — the data is scanned once and never shuffled.
+    (task, unit) pair, then ONE groupBy(state_key).applyInArrow fold of
+    the dimension-sized partial-summary rows (#tasks x k per unit) down
+    to <= k rows per unit — the data is scanned once and never shuffled.
     """
     import pandas as pd  # noqa: PLC0415
     import pyarrow as pa  # noqa: PLC0415
@@ -636,14 +637,45 @@ def mg_states(
                 names=["sk", "v", "w", "pn", "err"],
             )
 
-    partials = src.mapInArrow(
-        summarize,
-        schema=f"`sk` string, `v` {v_simple}, `w` long, `pn` long, `err` double",
+    def fold(tbl: pa.Table) -> pa.Table:
+        # the mergeable-summaries fold of _fold_mg over one unit's task
+        # partials, in Arrow so values keep their exact type: sum weights
+        # per value, decrement by the (k+1)-th largest c, err' = sum(err)
+        # + c, pn/err ride the first row
+        import pyarrow.compute as pc  # noqa: PLC0415
+
+        w = (
+            tbl.filter(pc.is_valid(tbl["v"]))
+            .group_by("v")
+            .aggregate([("w", "sum")])
+            .sort_by([("w_sum", "descending"), ("v", "ascending")])
+        )
+        cut = w["w_sum"][k].as_py() if w.num_rows > k else 0
+        w = w.filter(pc.greater(w["w_sum"], cut))
+        pn = pc.sum(tbl["pn"]).as_py()
+        err = (pc.sum(tbl["err"]).as_py() or 0.0) + cut
+        n = max(w.num_rows, 1)
+        pad = [None] * (n - 1)
+        return pa.table(
+            {
+                "sk": pa.array([tbl["sk"][0].as_py()] * n, type=pa.string()),
+                "v": w["v"] if w.num_rows else pa.nulls(1, tbl.schema.field("v").type),
+                "w": pc.subtract(w["w_sum"], cut) if w.num_rows else pa.array([0], pa.int64()),
+                "pn": pa.array([pn] + pad, type=pa.int64()),
+                "err": pa.array([err] + pad, type=pa.float64()),
+            }
+        )
+
+    schema = f"`sk` string, `v` {v_simple}, `w` long, `pn` long, `err` double"
+    # ONE applyInArrow fold of the per-task partials per commit unit: the
+    # partials feed a single shuffle, so the source is read exactly once.
+    # Stamp the source column and k so states.update can refuse merges of
+    # mismatched states — the rows alone look alike
+    folded = (
+        src.mapInArrow(summarize, schema=schema)
+        .groupBy("sk")
+        .applyInArrow(fold, schema=schema)
     )
-    # fold the per-task partials to ONE summary per commit unit; stamp the
-    # source column and k so merges of mismatched states are detectable
-    # (update_mg_states validates both — the rows alone look alike)
-    folded = _fold_mg(partials, k, key_cols=["sk"])
     return folded.withColumnRenamed("sk", "state_key").select(
         "state_key",
         F.lit(col).alias("column"),
@@ -731,75 +763,17 @@ def merge_mg_states(states: DataFrame, k: int) -> DataFrame:
     return _fold_mg(tagged, k, key_cols=["__g"]).drop("__g")
 
 
-def update_mg_states(
-    existing: DataFrame,
-    new_data: DataFrame,
-    col: str,
-    k: int,
-    state_key: str,
-) -> DataFrame:
-    """Incremental refresh of MG states: recommitted state_keys are
-    dropped null-safely (last-write-wins per commit unit, same contract
-    as states.update_states) and only the new partitions are scanned.
-    The persisted states must cover the SAME column with the SAME k —
-    summaries of a different column (or built at a different k, whose
-    error bounds aren't comparable) are rejected, mirroring
-    update_states/update_histogram_states shape validation."""
-    existing_shape = {
-        (r["column"], r["k"])
-        for r in existing.select("column", "k").distinct().collect()
-    }
-    if existing_shape != {(col, int(k))}:
-        raise ValueError(
-            f"update_mg_states: persisted states cover "
-            f"{sorted(existing_shape)} (column, k) but {(col, int(k))} was "
-            "requested; recompute states from scratch when the profiled "
-            "column or k changes"
-        )
-    fresh = mg_states(new_data, col, k, state_key)
-    keys = fresh.select(F.col("state_key").alias("__new_key")).distinct()
-    kept = existing.join(
-        keys, existing["state_key"].eqNullSafe(keys["__new_key"]), "left_anti"
+def misra_gries(column: str, k: int) -> StateKind:
+    """Misra-Gries summaries of ``column`` at ``k`` counters as a
+    :class:`states.StateKind` (:func:`mg_states`), folded by
+    :func:`merge_mg_states` and read by :func:`certified_heavy_hitters`."""
+    return StateKind(
+        "mg_states",
+        (column,),
+        lambda df, key: mg_states(df, column, k, key),
+        ("column", "k"),
+        frozenset({(column, int(k))}),
     )
-    return kept.unionByName(fresh)
-
-
-def committed_mg_states(states: DataFrame, committed: "list[str]") -> DataFrame:
-    """Restrict stored MG states to the committed commit units with
-    SET-level last-write-wins: an MG summary is a multi-row unit whose
-    value set can change between deliveries, so supersede keeps every
-    row of the NEWEST append per state_key (all rows of one append share
-    one ts) rather than newest-per-row — a redelivered unit's old rows
-    vanish as a set. Orphan rows from a crash between append and manifest
-    commit are excluded by the committed-keys semi-join, exactly like
-    states._latest_committed. Two appends landing in the same clock tick
-    are disambiguated by the runner's per-append unique id (append_id) —
-    without it, a ts tie would keep BOTH row sets and double-count the
-    unit."""
-    from pyspark.sql import Window
-
-    keys = list(committed)
-    if not keys:
-        return states.limit(0).drop("ts", "run_id", "append_id")
-    spark = states.sparkSession
-    kdf = spark.createDataFrame([(s,) for s in keys], "state_key string")
-    df = states.join(F.broadcast(kdf), "state_key", "left_semi")
-    has_aid = "append_id" in df.columns
-    tag = (
-        F.struct(F.col("ts"), F.coalesce(F.col("append_id"), F.lit("")))
-        if has_aid
-        else F.struct(F.col("ts"))
-    )
-    w = Window.partitionBy("state_key")
-    latest = df.withColumn("__tag", tag).withColumn(
-        "__mx", F.max("__tag").over(w)
-    ).where(F.col("__tag") == F.col("__mx"))
-    drop = [
-        c
-        for c in ("run_id", "ts", "append_id", "__tag", "__mx")
-        if c in latest.columns
-    ]
-    return latest.drop(*drop)
 
 
 def certified_heavy_hitters(
@@ -1250,38 +1224,14 @@ def quantile_sketch_bounds(
     )
 
 
-def update_quantile_states(
-    existing: DataFrame, new_data: DataFrame, col: str, state_key: str,
-) -> DataFrame:
-    """Incremental refresh, last-write-wins per commit unit (null-safe,
-    mirroring states.update_states): recommitted state_keys are dropped
-    and only the new partitions are scanned — ONCE: the anti-join key
-    set comes from a cheap distinct over the raw delta, not from the
-    (numpy-heavy) fresh sketch plan, so an action over the result
-    executes the sketch build a single time."""
-    shape = {
-        (r["column"], int(r["k"]))
-        for r in existing.select("column", "k").distinct().collect()
-    }
-    if {c for c, _ in shape} != {col}:
-        raise ValueError(
-            f"update_quantile_states: persisted states cover "
-            f"{sorted({c for c, _ in shape})} but column {col!r} was "
-            "requested; one column per states frame"
-        )
-    if len(shape) != 1:
-        raise ValueError(
-            f"update_quantile_states: persisted states were built with "
-            f"different k values {sorted(k for _, k in shape)}; summaries "
-            "of mixed k are not mergeable — recompute states from scratch"
-        )
-    (_, kk), = shape
-    fresh = quantile_states(new_data, col, state_key, k=kk)
-    keys = (
-        new_data.select(F.expr(state_key).cast("string").alias("__new_key"))
-        .distinct()
+def quantiles(column: str, k: int = QS_DEFAULT_K) -> StateKind:
+    """Quantile summaries of ``column`` at ``k`` items per level as a
+    :class:`states.StateKind` (:func:`quantile_states`), read by
+    :func:`quantile_sketch_bounds`."""
+    return StateKind(
+        "quantile_states",
+        (column,),
+        lambda df, key: quantile_states(df, column, key, k=k),
+        ("column", "k"),
+        frozenset({(column, int(k))}),
     )
-    kept = existing.join(
-        keys, existing["state_key"].eqNullSafe(keys["__new_key"]), "left_anti"
-    )
-    return kept.unionByName(fresh)

@@ -34,11 +34,20 @@ Scale: column_states is one groupBy(state_key) with map-side combine
 over a pruned scan (only the profiled columns are read); states frames
 are dimension-sized (#partitions × #columns rows), so merge_states and
 persistence are free at any corpus size.
+
+Every family — moments and fixed-bin histograms here, Misra-Gries and
+quantile summaries in sketches.py — is described once as a
+:class:`StateKind` (:func:`moments`, :func:`histogram`,
+``sketches.misra_gries``, ``sketches.quantiles``) and goes through one
+incremental refresh (:func:`update`), one supersede rule
+(:func:`latest_committed`) and, in runner.py, one write and read path
+(``write_states``/``read_states``).
 """
 
 from __future__ import annotations
 
-from typing import Sequence
+from dataclasses import dataclass
+from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -203,51 +212,6 @@ def merge_states(states: DataFrame, round_to: int = 6) -> DataFrame:
     return out
 
 
-def _latest_committed(
-    states: DataFrame, committed: Sequence[str], extra_key: Sequence[str] = ()
-) -> DataFrame:
-    """Restrict a stored states frame to the ``committed`` commit units,
-    last-write-wins per (state_key, column[, *extra_key]) on ``ts``.
-
-    The shared read-side of the commit protocol: a crash between a state
-    append and the manifest commit leaves an orphan state row that the
-    re-run supersedes — the newest row per key wins, and uncommitted keys
-    are excluded entirely. All frames here are dimension-sized."""
-    from pyspark.sql import Window
-
-    keys = list(committed)
-    if len(keys) <= 1000:
-        df = states.where(F.col("state_key").isin(keys))
-    else:
-        # a long-running stream commits unboundedly many batches — a
-        # 100k-entry IN-list in the plan is a parse/codegen hazard, so
-        # filter by broadcast semi-join instead (both sides dimension-sized)
-        spark = states.sparkSession
-        kdf = spark.createDataFrame([(k,) for k in keys], "state_key string")
-        df = states.join(F.broadcast(kdf), "state_key", "left_semi")
-    w = Window.partitionBy("state_key", "column", *extra_key).orderBy(
-        F.desc("ts")
-    )
-    latest = (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn", "ts")
-    )
-    drop = [c for c in ("run_id", "append_id") if c in latest.columns]
-    return latest.drop(*drop)
-
-
-def committed_profile(
-    states: DataFrame, committed: Sequence[str], round_to: int = 6
-) -> DataFrame:
-    """Merge the stored states covering exactly the ``committed`` commit
-    units (see _latest_committed for the orphan-supersede contract) —
-    the read side of ``CheckpointRunner.corpus_profile`` and the
-    streaming ``StreamingProfileMonitor``. ``states`` must carry
-    ``state_key`` and ``ts`` columns alongside the state fields."""
-    return merge_states(_latest_committed(states, committed), round_to=round_to)
-
-
 # ---------------------------------------------------------------------------
 # Mergeable histogram states — incremental distribution drift
 # ---------------------------------------------------------------------------
@@ -314,50 +278,6 @@ def merge_histogram_states(states: DataFrame) -> DataFrame:
         states.groupBy("column", "bin")
         .agg(F.sum("cnt").alias("cnt"))
         .orderBy("column", "bin")
-    )
-
-
-def update_histogram_states(
-    existing: DataFrame,
-    new_data: DataFrame,
-    bins_by_column: "dict[str, Sequence[float]]",
-    state_key: str,
-) -> DataFrame:
-    """Incremental refresh of histogram states: recommitted state_keys are
-    dropped null-safely (last-write-wins per commit unit, like
-    :func:`update_states`) and only the new partitions are scanned.
-    The persisted states must cover exactly the requested columns with
-    the same bin count — changed edges are NOT mergeable and require a
-    recompute from scratch."""
-    existing_shape = {
-        (r["column"], r["nb"])
-        for r in existing.groupBy("column")
-        .agg((F.max("bin") + 1).alias("nb"))
-        .collect()
-    }
-    wanted = {(c, len(list(e)) + 1) for c, e in bins_by_column.items()}
-    if existing_shape != wanted:
-        raise ValueError(
-            f"update_histogram_states: persisted states cover "
-            f"{sorted(existing_shape)} (column, n_bins+2) but "
-            f"{sorted(wanted)} was requested; changed edges are not "
-            "mergeable — recompute states from scratch"
-        )
-    fresh = histogram_states(new_data, bins_by_column, state_key)
-    keys = fresh.select(F.col("state_key").alias("__new_key")).distinct()
-    kept = existing.join(
-        keys, existing["state_key"].eqNullSafe(keys["__new_key"]), "left_anti"
-    )
-    return kept.unionByName(fresh)
-
-
-def committed_histogram(states: DataFrame, committed: Sequence[str]) -> DataFrame:
-    """Merged corpus histogram over exactly the committed commit units,
-    orphan rows superseded (see _latest_committed). ``states`` must carry
-    ``state_key``/``ts`` alongside (column, bin, cnt); the extra ``bin``
-    key keeps last-write-wins per bin row."""
-    return merge_histogram_states(
-        _latest_committed(states, committed, extra_key=("bin",))
     )
 
 
@@ -485,7 +405,7 @@ def drift_from_states(
     """Per-column KL and PSI drift of the merged histogram states against
     a baseline partition snapshot — the incremental form of the KL/PSI
     expectations: day N+1 re-profiles only the new commit units
-    (update_histogram_states) and this fold stays driver-side math over
+    (``update(histogram(...), ...)``) and this fold stays driver-side math over
     a #columns × (bins+2)-row frame.
 
     ``merged`` is merge_histogram_states output; ``baseline`` maps column
@@ -536,31 +456,114 @@ def drift_from_states(
     return out
 
 
-def update_states(
-    existing: DataFrame, new_data: DataFrame, columns: Sequence[str], state_key: str
-) -> DataFrame:
-    """Incremental refresh: states for ``new_data`` unioned onto the
-    persisted ``existing`` states after dropping any state_keys being
-    recommitted (last-write-wins per commit unit, matching the runner's
-    per-partition resume contract). Only the new partitions are scanned.
-    """
-    include_hll = "hll" in existing.columns
-    # the persisted states must cover exactly the requested columns —
-    # otherwise kept partitions silently contribute nothing to a new
-    # column and its "corpus" stats would cover only the delta
-    existing_cols = {r["column"] for r in existing.select("column").distinct().collect()}
-    if existing_cols != set(columns):
-        raise ValueError(
-            f"update_states: persisted states cover {sorted(existing_cols)} "
-            f"but {sorted(columns)} was requested; recompute states from "
-            "scratch when the profiled column set changes"
-        )
-    fresh = column_states(new_data, columns, state_key, include_hll=include_hll)
-    keys = fresh.select(F.col("state_key").alias("__new_key")).distinct()
-    # null-safe anti-join: a NULL state_key (nullable partition column)
-    # must still be last-write-wins — a plain equi-join would keep the old
-    # NULL-keyed state AND add the new one, double-counting those rows
-    kept = existing.join(
-        keys, existing["state_key"].eqNullSafe(keys["__new_key"]), "left_anti"
+# ---------------------------------------------------------------------------
+# The mergeable-state protocol: one kind type, one update, one supersede rule
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class StateKind:
+    """One mergeable-state family, described once so the runner, the
+    streaming monitor and :func:`update` share a single code path.
+
+    ``build(frame, state_key)`` returns the family's state rows keyed by
+    the ``state_key`` SQL expression; it reads only ``columns``. Rows land
+    in the store table ``table``. ``shape`` is the set of rows
+    ``states.selectExpr(*shape_sql).distinct()`` yields for states this
+    kind built — the column set, ``(column, n_bins)`` or ``(column, k)`` —
+    so states of another shape are refused instead of merged."""
+
+    table: str
+    columns: "tuple[str, ...]"
+    build: "Callable[[DataFrame, str], DataFrame]"
+    shape_sql: "tuple[str, ...]"
+    shape: frozenset
+
+
+def moments(columns: Sequence[str], include_hll: bool = False) -> StateKind:
+    """Column moments (:func:`column_states`), folded by :func:`merge_states`."""
+    cols = tuple(columns)
+    return StateKind(
+        "column_states",
+        cols,
+        lambda df, key: column_states(df, cols, key, include_hll=include_hll),
+        ("column",),
+        frozenset((c,) for c in cols),
     )
-    return kept.unionByName(fresh)
+
+
+def histogram(bins_by_column: "dict[str, Sequence[float]]") -> StateKind:
+    """Fixed-bin histograms (:func:`histogram_states`), folded by
+    :func:`merge_histogram_states`; bins 0..n_bins-1 include both tails."""
+    bins = {c: [float(b) for b in e] for c, e in bins_by_column.items()}
+    return StateKind(
+        "histogram_states",
+        tuple(bins),
+        lambda df, key: histogram_states(df, bins, key),
+        ("column", "max(bin) OVER (PARTITION BY column) + 1"),
+        frozenset((c, len(e) + 1) for c, e in bins.items()),
+    )
+
+
+def update(
+    kind: StateKind, existing: DataFrame, new_data: DataFrame, state_key: str
+) -> DataFrame:
+    """Incremental refresh: ``kind``'s states for ``new_data`` replace the
+    persisted ``existing`` states of every state_key the delta covers
+    (last-write-wins per commit unit, NULL key included — a nullable
+    partition column must not double-count), and the other units are
+    kept. The delta is read once: the fresh rows are unioned onto
+    ``existing`` and, per state_key, only the fresh ones survive where
+    there are any. ``existing`` must have the shape ``kind`` builds —
+    changed columns, edges or k are not mergeable."""
+    from pyspark.sql import Window
+
+    fresh = kind.build(new_data, state_key)
+    shape = {tuple(r) for r in existing.selectExpr(*kind.shape_sql).distinct().collect()}
+    if shape != kind.shape or set(existing.columns) != set(fresh.columns):
+        raise ValueError(
+            f"{kind.table}: persisted states have shape {sorted(shape, key=str)} "
+            f"and columns {sorted(existing.columns)}, but "
+            f"{sorted(kind.shape, key=str)} with {sorted(fresh.columns)} was "
+            "requested; a changed column set, bin count or a different k is "
+            "not mergeable — recompute states from scratch"
+        )
+    both = existing.withColumn("__new", F.lit(False)).unionByName(
+        fresh.withColumn("__new", F.lit(True))
+    )
+    w = Window.partitionBy("state_key")
+    return (
+        both.withColumn("__any_new", F.max("__new").over(w))
+        .where(F.col("__new") == F.col("__any_new"))
+        .drop("__new", "__any_new")
+    )
+
+
+def latest_committed(states: DataFrame, committed: Sequence[str]) -> DataFrame:
+    """Restrict a stored states frame to the ``committed`` commit units,
+    keeping per state_key every row of its NEWEST append — set-level
+    last-write-wins on ``(ts, append_id)``.
+
+    The read side of the commit protocol for every kind: a crash between
+    a state append and the manifest commit leaves orphan rows; units
+    that never committed are dropped by one broadcast semi-join (a
+    long-running stream commits unboundedly many batches, so no IN-list),
+    and a redelivered unit's older rows vanish as a set — a multi-row
+    summary's value set can change between deliveries. Rows of one
+    append share ts and append_id; the id breaks a same-tick ts tie (a
+    row without one sorts as ""). Returns the state columns only."""
+    from pyspark.sql import Window
+
+    keys = states.sparkSession.createDataFrame(
+        [(k,) for k in committed], "state_key string"
+    )
+    df = states.join(F.broadcast(keys), "state_key", "left_semi")
+    aid = F.col("append_id") if "append_id" in df.columns else F.lit(None)
+    tag = F.struct(F.col("ts"), F.coalesce(aid.cast("string"), F.lit("")))
+    w = Window.partitionBy("state_key")
+    return (
+        df.withColumn("__tag", tag)
+        .withColumn("__newest", F.max("__tag").over(w))
+        .where(F.col("__tag") == F.col("__newest"))
+        .drop("__tag", "__newest", "run_id", "ts", "append_id")
+    )

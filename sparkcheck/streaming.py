@@ -22,6 +22,13 @@ Notes for scale:
     batch-revalidation semantics rather than inventing new ones. Windowed
     drift checks can be layered by pre-aggregating with watermarks before
     the sink.
+
+Corpus-level metrics over a stream come from ``StateMonitor``: every
+micro-batch appends the mergeable states of its ``StateKind``s
+(states.moments/histogram, sketches.misra_gries/quantiles) through the
+batch runner's write path, and reads fold the committed batches through
+the same supersede rule (states.latest_committed) — the streaming
+counterpart of ``update`` on a batch corpus.
 """
 
 from __future__ import annotations
@@ -36,8 +43,11 @@ from .runner import (
     _validate_unit,
     _write_lineage,
     _write_results,
+    read_states,
     store_has_partition,
+    write_states,
 )
+from .states import StateKind
 from .suite import ExpectationSuite
 
 
@@ -460,225 +470,51 @@ class FreshnessMonitor:
             self.on_lag(int(batch_id), float(lag))
 
 
-class StreamingProfileMonitor:
-    """``foreachBatch`` callable maintaining a continuously-updated corpus
-    column profile from mergeable aggregation states (states.py) — the
-    streaming half of the per-partition metric-resume story. Each
-    micro-batch contributes ONE state row per profiled column
-    (state_key = ``batch={id}``, one narrow aggregate over the batch);
-    the corpus-level profile at any moment is ``merge_states`` over the
-    dimension-sized states table, so past batches are never rescanned.
-    (The reference has no analog — GX profiling is batch-rescan only.)
+class StateMonitor:
+    """``foreachBatch`` callable maintaining continuously-updated corpus
+    states of several kinds (states.StateKind: moments, histograms,
+    Misra-Gries and quantile summaries) — the streaming half of the
+    per-partition metric-resume story. Each micro-batch appends its
+    state rows of every kind (state_key = ``batch={id}``) through the
+    batch runner's ``write_states`` and then makes ONE manifest commit;
+    ``states(spark, kind)`` returns the committed rows of a kind at any
+    moment, for the kind's fold (merge_states, drift_from_states over
+    merge_histogram_states, certified_heavy_hitters over merge_mg_states,
+    quantile_sketch_bounds) — past batches are never rescanned. (The
+    reference has no analog — GX profiling is batch-rescan only.)
 
     Exactly-once: foreachBatch delivers at-least-once on restart; the
     manifest keyed by batch id skips batches already committed, and a
-    crash between the state append and the manifest commit leaves an
-    orphan row that the re-delivery supersedes — ``profile()`` keeps only
-    the newest row per (state_key, column) over committed keys, the same
-    last-write-wins fold the batch runner's ``corpus_profile`` uses
-    (states.committed_profile).
+    crash between a state append and the manifest commit leaves orphan
+    rows that the redelivery supersedes as a set per state_key
+    (states.latest_committed, the batch runner's read rule).
     """
 
     def __init__(
         self,
         store: ParquetStore,
-        columns: list[str],
-        run_id: str = "stream_profile",
-        include_hll: bool = False,
+        kinds: "list[StateKind]",
+        run_id: str = "stream_states",
     ):
+        tables = [k.table for k in kinds]
+        if len(set(tables)) != len(tables):
+            # one append per unit and table: a second kind in the same
+            # table would supersede the first one's rows
+            raise ValueError(f"one kind per state table, got {tables}")
         self.store = store
-        self.columns = list(columns)
-        self.run_id = run_id
-        self.include_hll = include_hll
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from .runner import _utcnow
-        from .states import column_states
-
-        pid = f"batch={batch_id}"
-        if store_has_partition(self.store, self.run_id, pid):
-            return
-        st = column_states(
-            batch_df.select(*self.columns),
-            self.columns,
-            state_key=f"'{pid}'",
-            include_hll=self.include_hll,
-        )
-        stamped = st.select(
-            F.lit(self.run_id).alias("run_id"),
-            "*",
-            F.lit(_utcnow()).alias("ts"),
-        )
-        if hasattr(self.store, "append_small"):
-            # dimension-sized (#columns rows): agg runs as one Spark job,
-            # the write is a driver-side Arrow file — off the micro-batch
-            # latency path
-            self.store.append_small("column_states", stamped)
-        else:
-            self.store.append("column_states", stamped)
-        self.store.commit_partition(self.run_id, pid, {})
-
-    def profile(self, spark, round_to: int = 6) -> DataFrame:
-        """Corpus-level profile over every batch committed so far —
-        folds the states, never rescans batch data."""
-        from .states import committed_profile
-
-        df = self.store.read(spark, "column_states").where(
-            F.col("run_id") == self.run_id
-        )
-        committed = sorted(self.store.committed_partitions(self.run_id))
-        return committed_profile(df, committed, round_to=round_to)
-
-
-class StreamingDriftMonitor:
-    """``foreachBatch`` callable maintaining continuously-updated corpus
-    KL/PSI drift against a baseline snapshot from mergeable fixed-bin
-    histogram states (states.histogram_states) — the distribution twin
-    of :class:`StreamingProfileMonitor`. Each micro-batch contributes
-    bin-count rows over FIXED edges (pure sums, so merged == a full
-    rescan with the same edges); ``drift()`` at any moment folds the
-    dimension-sized states table into per-column KL/PSI via
-    states.drift_from_states — past batches are never rescanned, and the
-    drift uses the KL expectation's exact tail-holdout semantics.
-    (The reference has no analog — GX drift is batch-rescan only.)
-
-    Exactly-once is inherited from the same batch-id manifest +
-    newest-row-wins orphan supersede as the profile monitor: redelivered
-    batches are skipped, a crash between the state append and the
-    manifest commit leaves an orphan row that states.committed_histogram
-    supersedes per (state_key, column, bin).
-    """
-
-    def __init__(
-        self,
-        store: ParquetStore,
-        bins_by_column: "dict[str, list[float]]",
-        run_id: str = "stream_drift",
-    ):
-        self.store = store
-        self.bins_by_column = {c: [float(b) for b in e] for c, e in bins_by_column.items()}
+        self.kinds = list(kinds)
         self.run_id = run_id
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from .runner import _utcnow
-        from .states import histogram_states
-
         pid = f"batch={batch_id}"
         if store_has_partition(self.store, self.run_id, pid):
             return
-        st = histogram_states(
-            batch_df.select(*self.bins_by_column),
-            self.bins_by_column,
-            state_key=f"'{pid}'",
-        )
-        stamped = st.select(
-            F.lit(self.run_id).alias("run_id"),
-            "*",
-            F.lit(_utcnow()).alias("ts"),
-        )
-        if hasattr(self.store, "append_small"):
-            # dimension-sized (#columns × (bins+2) rows): agg runs as one
-            # Spark job, the write is a driver-side Arrow file — off the
-            # micro-batch latency path
-            self.store.append_small("histogram_states", stamped)
-        else:
-            self.store.append("histogram_states", stamped)
+        write_states(self.store, self.kinds, batch_df, self.run_id, pid)
         self.store.commit_partition(self.run_id, pid, {})
 
-    def histogram(self, spark) -> DataFrame:
-        """Merged corpus histogram (column, bin, cnt) over every batch
-        committed so far — folds the states, never rescans batch data."""
-        from .states import committed_histogram
-
-        df = self.store.read(spark, "histogram_states").where(
-            F.col("run_id") == self.run_id
-        )
-        committed = sorted(self.store.committed_partitions(self.run_id))
-        return committed_histogram(df, committed)
-
-    def drift(
-        self,
-        spark,
-        baseline: "dict[str, dict]",
-        tail_weight_holdout: float = 0.0,
-    ) -> "list[dict]":
-        """Per-column KL/PSI of the stream-so-far against the baseline
-        partition snapshot ({column: {bins, weights}}); edges must match
-        the monitor's bins (validated by bin count)."""
-        from .states import drift_from_states
-
-        return drift_from_states(
-            self.histogram(spark),
-            baseline,
-            tail_weight_holdout=tail_weight_holdout,
-        )
-
-
-class StreamingQuantileMonitor:
-    """``foreachBatch`` callable maintaining a continuously-updated corpus
-    quantile summary from mergeable MRL-style quantile states
-    (sketches.quantile_states) — the edge-free quantile twin of
-    :class:`StreamingDriftMonitor`: no bin edges to choose up front, and
-    ``bounds()`` at any moment folds the committed batches into CERTIFIED
-    [lo, hi] quantile brackets (worst-case rank certificate, see
-    sketches.py) without rescanning any batch. Three-valued quantile
-    expectations over the stream follow via
-    states.quantile_bracket_verdicts.
-
-    Exactly-once: redelivered batches are skipped by the batch-id
-    manifest; a crash between the state append and the manifest commit
-    leaves orphan rows that sketches.committed_mg_states supersedes as a
-    SET per state_key (the summary is a multi-row unit; the per-append
-    unique id breaks same-tick ts ties)."""
-
-    def __init__(
-        self,
-        store: ParquetStore,
-        column: str,
-        k: int = 256,
-        run_id: str = "stream_quantiles",
-    ):
-        self.store = store
-        self.column = column
-        self.k = int(k)
-        self.run_id = run_id
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        import uuid
-
-        from .runner import _utcnow
-        from .sketches import quantile_states
-
-        pid = f"batch={batch_id}"
-        if store_has_partition(self.store, self.run_id, pid):
-            return
-        st = quantile_states(
-            batch_df.select(self.column), self.column,
-            state_key=f"'{pid}'", k=self.k,
-        )
-        stamped = st.select(
-            F.lit(self.run_id).alias("run_id"),
-            "*",
-            F.lit(_utcnow()).alias("ts"),
-            F.lit(uuid.uuid4().hex).alias("append_id"),
-        )
-        if hasattr(self.store, "append_small"):
-            self.store.append_small("quantile_states", stamped)
-        else:
-            self.store.append("quantile_states", stamped)
-        self.store.commit_partition(self.run_id, pid, {})
-
-    def bounds(self, spark, ps: "list[float]") -> DataFrame:
-        """Certified quantile brackets (column, p, n, lo, hi, est) over
-        every batch committed so far — folds the dimension-sized states,
-        never rescans batch data."""
-        from .sketches import committed_mg_states, quantile_sketch_bounds
-
-        df = self.store.read(spark, "quantile_states").where(
-            F.col("run_id") == self.run_id
-        )
-        committed = sorted(self.store.committed_partitions(self.run_id))
-        return quantile_sketch_bounds(committed_mg_states(df, committed), ps)
+    def states(self, spark, kind: "StateKind") -> DataFrame:
+        """``kind``'s state rows over every batch committed so far."""
+        return read_states(self.store, spark, self.run_id, kind)
 
 
 def streaming_group_cap(

@@ -11,11 +11,11 @@ from pyspark.sql import functions as F
 from sparkcheck import ExpectationConfiguration, ExpectationSuite, validate_df
 from sparkcheck.distribution import histogram_terms, kl_divergence, psi
 from sparkcheck.states import (
-    committed_histogram,
     drift_from_states,
+    histogram,
     histogram_states,
     merge_histogram_states,
-    update_histogram_states,
+    update,
 )
 
 EDGES = [0.0, 10.0, 20.0, 30.0]
@@ -73,7 +73,7 @@ def test_update_recommit_last_write_wins(spark):
     newd = spark.createDataFrame(
         [(3, 35.0) for _ in range(50)], "b int, x double"
     )
-    updated = update_histogram_states(st, newd, {"x": EDGES}, state_key="b")
+    updated = update(histogram({"x": EDGES}), st, newd, state_key="b")
     m = {r["bin"]: r["cnt"] for r in merge_histogram_states(updated).collect()}
     direct = spark.createDataFrame(
         [(float(i % 25),) for i in range(400) if i % 4 != 3] + [(35.0,)] * 50,
@@ -88,7 +88,7 @@ def test_update_null_state_key_not_double_counted(spark):
     )
     st = histogram_states(base, {"x": EDGES}, state_key="b")
     newd = spark.createDataFrame([(None, 25.0)], "b string, x double")
-    updated = update_histogram_states(st, newd, {"x": EDGES}, state_key="b")
+    updated = update(histogram({"x": EDGES}), st, newd, state_key="b")
     m = {r["bin"]: r["cnt"] for r in merge_histogram_states(updated).collect()}
     # NULL-keyed state replaced (not kept AND re-added): k1 row + new row
     assert sum(m.values()) == 2 and m[3] == 2
@@ -98,7 +98,7 @@ def test_update_rejects_changed_edges(spark):
     df = _mk(spark, [1.0, 2.0], parts=1)
     st = histogram_states(df, {"x": EDGES})
     with pytest.raises(ValueError, match="not .?mergeable|recompute"):
-        update_histogram_states(st, df, {"x": [0.0, 5.0]}, state_key="1")
+        update(histogram({"x": [0.0, 5.0]}), st, df, state_key="1")
 
 
 def test_edges_validation(spark):

@@ -187,7 +187,7 @@ def test_update_states_incremental_and_recommit(spark, tmp_path):
     persisted = spark.read.parquet(path)
     # commit partition 3 AND recommit partition 2 (last-write-wins)
     delta = full.where("k >= 2")
-    refreshed = st.update_states(persisted, delta, ["v"], "k")
+    refreshed = st.update(st.moments(["v"]), persisted, delta, "k")
     assert refreshed.count() == 4  # k=2 replaced, not duplicated
     merged = st.merge_states(refreshed).collect()[0]
     direct = _direct_profile(full, "v")
@@ -379,7 +379,7 @@ def test_update_states_column_mismatch_raises(spark):
     df = spark.createDataFrame([(0, 1.0, 2.0)], "k int, v double, w double")
     old = st.column_states(df, ["v"], "k")
     with pytest.raises(ValueError, match="column set"):
-        st.update_states(old, df, ["v", "w"], "k")
+        st.update(st.moments(["v", "w"]), old, df, "k")
 
 
 # ---------------------------------------------------------------------------
@@ -409,7 +409,7 @@ def test_update_states_null_state_key_last_write_wins(spark):
     existing = st.column_states(old, ["v"], "k")
     # recommit the NULL partition with different data
     delta = spark.createDataFrame([(None, 50.0), (None, 70.0)], "k int, v double")
-    refreshed = st.update_states(existing, delta, ["v"], "k")
+    refreshed = st.update(st.moments(["v"]), existing, delta, "k")
     assert refreshed.count() == 2  # k=0 kept, NULL replaced (not 3 rows)
     merged = st.merge_states(refreshed).collect()[0]
     expected = old.where("k = 0").unionByName(delta)
@@ -574,7 +574,7 @@ def test_committed_profile_semi_join_branch(spark):
     ).withColumn("ts", F.current_timestamp())
     keys = [f"k{i}" for i in range(1200)]
     via_join = {r["column"]: r.asDict()
-                for r in st.committed_profile(frame, keys).collect()}
+                for r in st.merge_states(st.latest_committed(frame, keys)).collect()}
     direct = {r["column"]: r.asDict()
               for r in st.merge_states(frame.drop("ts")).collect()}
     assert via_join == direct

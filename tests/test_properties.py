@@ -435,3 +435,104 @@ def test_single_scan_leg_matches_two_pass(spark, tmp_path, docs, picks):
         assert _vkeys(r for r in violations if r["partition_id"] == pid) == _vkeys(
             span_violations(part).collect()
         )
+
+
+
+_UNITS = ["p0", "p1", "p2", "p3", "p4"]
+# one unit's append history: 1-3 deliveries, each 1-6 rows of a value
+# that is sometimes NULL
+_DELIVERIES = st.lists(
+    st.lists(st.one_of(st.none(), st.integers(-5, 35)), min_size=1, max_size=6),
+    min_size=1,
+    max_size=3,
+)
+_HIST_EDGES = {"a": [0.0, 10.0, 20.0, 30.0], "b": [0.0, 3.0, 7.0]}
+_SRC_DDL = "unit string, d int, a double, b double"
+
+
+def _state_history(history, perm, append_ids):
+    """Source rows (unit, delivery, a, b) and delivery records (unit,
+    delivery, ts, append_id) of random append histories: each unit's
+    deliveries get distinct ts, increasing within the unit and interleaved
+    across units by ``perm``, and a random append_id."""
+    from datetime import datetime, timedelta
+
+    slots = iter(perm)
+    meta, rows = [], []
+    for u in _UNITS:
+        ts = sorted(next(slots) for _ in history[u])
+        for d, vals in enumerate(history[u]):
+            meta.append(
+                (u, d, datetime(2026, 1, 1) + timedelta(seconds=ts[d]), append_ids[len(meta)])
+            )
+            rows += [
+                (u, d, None, None) if v is None else (u, d, float(v), float(v % 7))
+                for v in vals
+            ]
+    return rows, meta
+
+
+def _stamped(build, src, meta_df):
+    """State rows of every delivery, keyed by its unit and stamped with the
+    delivery's ts/append_id like a runner append."""
+    from pyspark.sql import functions as F
+
+    parts = F.split("state_key", "#")
+    return (
+        build(src, "concat(unit, '#', cast(d as string))")
+        .withColumn("d", parts[1].cast("int"))
+        .withColumn("state_key", parts[0])
+        .join(meta_df.withColumnRenamed("unit", "state_key"), ["state_key", "d"])
+        .drop("d")
+        .withColumn("run_id", F.lit("r"))
+    )
+
+
+def _rounded(rows):
+    return sorted(
+        tuple(round(x, 6) if isinstance(x, float) else x for x in r) for r in rows
+    )
+
+
+@_settings
+@given(
+    history=st.fixed_dictionaries({u: _DELIVERIES for u in _UNITS}),
+    perm=st.permutations(list(range(15))),
+    append_ids=st.lists(
+        st.text("0123456789abcdef", min_size=4, max_size=4), min_size=15, max_size=15
+    ),
+    committed=st.sets(st.sampled_from(_UNITS)),
+)
+def test_latest_committed_matches_newest_delivery_rescan(
+    spark, history, perm, append_ids, committed
+):
+    """latest_committed over random append histories — orphan deliveries
+    of uncommitted units, redelivered units — folds to exactly what a
+    rescan of each committed unit's newest delivery gives."""
+    from sparkcheck.states import (
+        column_states,
+        histogram_states,
+        latest_committed,
+        merge_histogram_states,
+        merge_states,
+    )
+
+    rows, meta = _state_history(history, perm, append_ids)
+    src = spark.createDataFrame(rows, _SRC_DDL).localCheckpoint()
+    meta_df = spark.createDataFrame(
+        meta, "unit string, d int, ts timestamp, append_id string"
+    )
+    newest = {u: d for u, d, _, _ in sorted(meta, key=lambda m: m[2]) if u in committed}
+    ref = spark.createDataFrame(
+        [r for r in rows if newest.get(r[0]) == r[1]], _SRC_DDL
+    ).localCheckpoint()
+    c = sorted(committed)
+
+    h = _stamped(lambda d, k: column_states(d, ["a", "b"], k), src, meta_df)
+    assert _rounded(merge_states(latest_committed(h, c)).collect()) == _rounded(
+        merge_states(column_states(ref, ["a", "b"], "unit")).collect()
+    )
+    hh = _stamped(lambda d, k: histogram_states(d, _HIST_EDGES, k), src, meta_df)
+    assert merge_histogram_states(latest_committed(hh, c)).collect() == (
+        merge_histogram_states(histogram_states(ref, _HIST_EDGES, "unit")).collect()
+    )

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from sparkcheck import sketches
-from sparkcheck.states import quantile_bracket_verdicts
+from sparkcheck.states import quantile_bracket_verdicts, update
 
 PS = [0.01, 0.25, 0.5, 0.75, 0.95, 0.99]
 
@@ -95,7 +95,7 @@ def test_update_last_write_wins(spark):
     st = sketches.quantile_states(base, "x", state_key="pmod(id, 4)", k=64)
     # recommit unit 0 with shifted data: ids ≡ 0 mod 4 now carry x+10000
     newer = base.where(F.col("id") % 4 == 0).withColumn("x", F.col("x") + 10000)
-    st2 = sketches.update_quantile_states(st, newer, "x", state_key="pmod(id, 4)")
+    st2 = update(sketches.quantiles("x", 64), st, newer, state_key="pmod(id, 4)")
     n_units = st2.select("state_key").distinct().count()
     assert n_units == 4
     b = {r["p"]: r for r in sketches.quantile_sketch_bounds(st2, [0.99]).collect()}
@@ -112,7 +112,7 @@ def test_update_rejects_wrong_column(spark):
     st = sketches.quantile_states(base, "x", state_key="'u'", k=32)
     st = st.withColumn("column", F.lit("y"))
     with pytest.raises(ValueError, match="column"):
-        sketches.update_quantile_states(st, base, "x", state_key="'u'")
+        update(sketches.quantiles("x", 32), st, base, state_key="'u'")
 
 
 def test_merge_rejects_mismatched_k(spark):
@@ -186,17 +186,19 @@ def test_streaming_quantile_monitor(spark, tmp_path):
     brackets certify the true union quantile, a redelivered batch is a
     no-op, and an orphan append (no manifest commit) is superseded."""
     from sparkcheck.runner import ParquetStore, _utcnow
-    from sparkcheck.streaming import StreamingQuantileMonitor
+    from sparkcheck.streaming import StateMonitor
 
     vals = [float((i * 13) % 300) for i in range(3000)]
     df = _df(spark, vals)
     store = ParquetStore(str(tmp_path / "store_q"))
-    mon = StreamingQuantileMonitor(store, "x", k=64, run_id="sq")
+    kind = sketches.quantiles("x", 64)
+    mon = StateMonitor(store, [kind], run_id="sq")
     batches = [df.where(F.col("id") % 3 == i) for i in range(3)]
     for i, b in enumerate(batches):
         mon(b, i)
     mon(batches[2], 2)  # redelivery must not double-count
-    got = {r["p"]: r for r in mon.bounds(spark, [0.5, 0.95]).collect()}
+    got = {r["p"]: r for r in sketches.quantile_sketch_bounds(
+        mon.states(spark, kind), [0.5, 0.95]).collect()}
     assert got[0.5]["n"] == 3000
     for p in (0.5, 0.95):
         tq = _true_q(vals, p)
@@ -212,7 +214,8 @@ def test_streaming_quantile_monitor(spark, tmp_path):
         F.lit(_utcnow()).alias("ts"), F.lit("orph").alias("append_id"),
     )
     store.append_small("quantile_states", orphan)
-    after = {r["p"]: r for r in mon.bounds(spark, [0.95]).collect()}
+    after = {r["p"]: r for r in sketches.quantile_sketch_bounds(
+        mon.states(spark, kind), [0.95]).collect()}
     assert after[0.95]["n"] == 3000 and after[0.95]["hi"] < 99999.0
 
 
@@ -234,6 +237,4 @@ def test_update_rejects_mixed_k(spark):
     a = sketches.quantile_states(df, "x", state_key="'a'", k=32)
     b = sketches.quantile_states(df, "x", state_key="'b'", k=64)
     with pytest.raises(ValueError, match="different k"):
-        sketches.update_quantile_states(
-            a.unionByName(b), df, "x", state_key="'c'"
-        )
+        update(sketches.quantiles("x", 32), a.unionByName(b), df, state_key="'c'")

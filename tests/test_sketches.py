@@ -307,8 +307,9 @@ def test_mg_states_update_last_write_wins(spark):
         certified_heavy_hitters,
         merge_mg_states,
         mg_states,
-        update_mg_states,
+        misra_gries,
     )
+    from sparkcheck.states import update
 
     base = spark.createDataFrame(
         [(i % 4, "a" if i % 5 else "b") for i in range(2000)], "b int, v string"
@@ -316,7 +317,7 @@ def test_mg_states_update_last_write_wins(spark):
     st = mg_states(base, "v", k=16, state_key="b")
     # recommit bucket 3: only "z" now — old bucket-3 rows must vanish
     newd = spark.createDataFrame([(3, "z")] * 500, "b int, v string")
-    updated = update_mg_states(st, newd, "v", k=16, state_key="b")
+    updated = update(misra_gries("v", 16), st, newd, state_key="b")
     merged = merge_mg_states(updated, k=16)
     hh = {r["value"]: r for r in certified_heavy_hitters(merged, 0.2).collect()}
     direct = spark.createDataFrame(
@@ -427,32 +428,45 @@ def test_mg_states_null_state_key_keeps_value_rows(spark):
 
 
 def test_update_mg_states_rejects_mismatched_shape(spark):
-    from sparkcheck.sketches import mg_states, update_mg_states
+    from sparkcheck.sketches import mg_states, misra_gries
+    from sparkcheck.states import update
 
     df = spark.createDataFrame([(0, "a"), (1, "b")], "b int, v string")
     st = mg_states(df, "v", k=8, state_key="b")
     with pytest.raises(ValueError, match="recompute"):
-        update_mg_states(st, df, "v", k=16, state_key="b")  # different k
+        update(misra_gries("v", 16), st, df, state_key="b")  # different k
     df2 = spark.createDataFrame([(0, "a", "x")], "b int, v string, u string")
     with pytest.raises(ValueError, match="recompute"):
-        update_mg_states(st, df2, "u", k=8, state_key="b")  # different col
+        update(misra_gries("u", 8), st, df2, state_key="b")  # different col
 
 
-def test_committed_mg_states_ts_tie_superseded(spark):
+@pytest.mark.parametrize("family", ["moments", "histogram", "mg", "quantiles"])
+def test_latest_committed_ts_tie_superseded(spark, family):
     """Two appends of the same state_key with IDENTICAL timestamps must
     not both survive — the append_id breaks the tie so exactly one
-    summary set remains."""
-    from sparkcheck.sketches import committed_mg_states
+    summary set remains, for every kind."""
+    from collections import Counter
 
-    rows = [
-        # (state_key, v, w, pn, err, run_id, ts, append_id)
-        ("p0", "a", 10, 100, 0.0, "r", "2026-01-01T00:00:00", "aaaa"),
-        ("p0", "b", 90, 100, 0.0, "r", "2026-01-01T00:00:00", "bbbb"),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "state_key string, v string, w long, pn long, err double, "
-        "run_id string, ts string, append_id string",
-    )
-    kept = committed_mg_states(df, ["p0"]).collect()
-    assert len(kept) == 1 and kept[0]["v"] == "b"  # newest append only
+    from sparkcheck.sketches import misra_gries, quantiles
+    from sparkcheck.states import histogram, latest_committed, moments
+
+    kind = {
+        "moments": lambda: moments(["v"]),
+        "histogram": lambda: histogram({"v": [0.0, 50.0, 100.0]}),
+        "mg": lambda: misra_gries("v", 8),
+        "quantiles": lambda: quantiles("v", 8),
+    }[family]()
+
+    def append(value, n, append_id):
+        df = spark.createDataFrame([(float(value),)] * n, "v double")
+        return kind.build(df, "'p0'").select(
+            F.lit("r").alias("run_id"),
+            "*",
+            F.lit("2026-01-01T00:00:00").alias("ts"),
+            F.lit(append_id).alias("append_id"),
+        )
+
+    older, newer = append(10, 10, "aaaa"), append(90, 90, "bbbb")
+    kept = latest_committed(older.unionByName(newer), ["p0"]).collect()
+    expected = newer.drop("run_id", "ts", "append_id").collect()
+    assert Counter(map(tuple, kept)) == Counter(map(tuple, expected))  # newest append only

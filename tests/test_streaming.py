@@ -441,18 +441,23 @@ def test_streaming_profile_monitor_merged_equals_rescan(spark, tmp_path):
     equal a full rescan exactly, and a redelivered batch id must be a
     no-op (foreachBatch's at-least-once contract made exactly-once by
     the manifest)."""
-    from sparkcheck.streaming import StreamingProfileMonitor
+    from sparkcheck.states import merge_states, moments
+    from sparkcheck.streaming import StateMonitor
 
     df = spark.createDataFrame(
         [(float(i), float(i % 13)) for i in range(3000)], "a double, b double"
     )
     store = ParquetStore(str(tmp_path / "store"))
-    mon = StreamingProfileMonitor(store, ["a", "b"], run_id="sp")
+    kind = moments(["a", "b"])
+    mon = StateMonitor(store, [kind], run_id="sp")
     batches = [df.where(F.pmod(F.col("a").cast("long"), F.lit(3)) == i) for i in range(3)]
     for i, b in enumerate(batches):
         mon(b, i)
     mon(batches[1], 1)  # redelivery must not double-count
-    prof = {r["column"]: r for r in mon.profile(spark, round_to=6).collect()}
+    prof = {
+        r["column"]: r
+        for r in merge_states(mon.states(spark, kind), round_to=6).collect()
+    }
     full = df.agg(
         F.count("a").alias("n"),
         F.round(F.avg("a"), 6).alias("mean"),
@@ -474,12 +479,13 @@ def test_streaming_profile_monitor_excludes_uncommitted_orphans(spark, tmp_path)
     append and commit) must not contribute to the profile; after the
     batch is redelivered and committed, the NEWEST row wins."""
     from sparkcheck.runner import _utcnow
-    from sparkcheck.states import column_states
-    from sparkcheck.streaming import StreamingProfileMonitor
+    from sparkcheck.states import column_states, merge_states, moments
+    from sparkcheck.streaming import StateMonitor
 
     df = spark.createDataFrame([(float(i),) for i in range(100)], "a double")
     store = ParquetStore(str(tmp_path / "store"))
-    mon = StreamingProfileMonitor(store, ["a"], run_id="sp2")
+    kind = moments(["a"])
+    mon = StateMonitor(store, [kind], run_id="sp2")
     mon(df, 0)
     # orphan: states for batch=1 written with WRONG data, no commit
     bad = spark.createDataFrame([(1e9,)], "a double")
@@ -487,12 +493,12 @@ def test_streaming_profile_monitor_excludes_uncommitted_orphans(spark, tmp_path)
         F.lit("sp2").alias("run_id"), "*", F.lit(_utcnow()).alias("ts")
     )
     store.append_small("column_states", orphan)
-    prof = {r["column"]: r for r in mon.profile(spark).collect()}
+    prof = {r["column"]: r for r in merge_states(mon.states(spark, kind)).collect()}
     assert prof["a"]["n"] == 100 and prof["a"]["mx"] == 99.0  # orphan excluded
     # redelivery commits batch=1 with the REAL data; newest row wins
     real = spark.createDataFrame([(float(i),) for i in range(100, 200)], "a double")
     mon(real, 1)
-    prof = {r["column"]: r for r in mon.profile(spark).collect()}
+    prof = {r["column"]: r for r in merge_states(mon.states(spark, kind)).collect()}
     assert prof["a"]["n"] == 200 and prof["a"]["mx"] == 199.0
 
 
@@ -500,10 +506,12 @@ def test_streaming_profile_monitor_live(spark, tmp_path):
     """Live rate-source stream: the profile over committed batches must
     match the committed batches' own data exactly (n = sum of batch
     sizes; mean over the contiguous value range)."""
-    from sparkcheck.streaming import StreamingProfileMonitor
+    from sparkcheck.states import merge_states, moments
+    from sparkcheck.streaming import StateMonitor
 
     store = ParquetStore(str(tmp_path / "store"))
-    mon = StreamingProfileMonitor(store, ["value"], run_id="spl")
+    kind = moments(["value"])
+    mon = StateMonitor(store, [kind], run_id="spl")
     stream = (
         spark.readStream.format("rate").option("rowsPerSecond", "200").load()
         .select(F.col("value").cast("double").alias("value"))
@@ -519,7 +527,7 @@ def test_streaming_profile_monitor_live(spark, tmp_path):
             time.sleep(1)
     finally:
         q.stop()
-    prof = {r["column"]: r for r in mon.profile(spark).collect()}
+    prof = {r["column"]: r for r in merge_states(mon.states(spark, kind)).collect()}
     row = prof["value"]
     # rate source emits a contiguous run 0..n-1 across batches; committed
     # batches may be a prefix of what streamed, so recompute the expected
@@ -536,21 +544,24 @@ def test_streaming_drift_monitor_merged_equals_rescan(spark, tmp_path):
     equal the batch KL expectation's observed_value on the union, and a
     redelivered batch id must be a no-op."""
     from sparkcheck import ExpectationConfiguration, ExpectationSuite, validate_df
-    from sparkcheck.streaming import StreamingDriftMonitor
+    from sparkcheck.states import drift_from_states, histogram, merge_histogram_states
+    from sparkcheck.streaming import StateMonitor
 
     edges = [0.0, 10.0, 20.0, 30.0]
     df = spark.createDataFrame(
         [(float((i * 13) % 30),) for i in range(3000)], "x double"
     )
     store = ParquetStore(str(tmp_path / "store_drift"))
-    mon = StreamingDriftMonitor(store, {"x": edges}, run_id="sd")
+    kind = histogram({"x": edges})
+    mon = StateMonitor(store, [kind], run_id="sd")
     batches = [
         df.where(F.pmod(F.col("x").cast("long"), F.lit(3)) == i) for i in range(3)
     ]
     for i, b in enumerate(batches):
         mon(b, i)
     mon(batches[2], 2)  # redelivery must not double-count
-    hist = {r["bin"]: r["cnt"] for r in mon.histogram(spark).collect()}
+    merged = merge_histogram_states(mon.states(spark, kind))
+    hist = {r["bin"]: r["cnt"] for r in merged.collect()}
     assert sum(hist.values()) == 3000
     po = {"bins": edges, "weights": [0.3, 0.4, 0.3]}
     suite = ExpectationSuite(
@@ -565,7 +576,7 @@ def test_streaming_drift_monitor_merged_equals_rescan(spark, tmp_path):
         ],
     )
     evr = validate_df(df, suite, result_format="SUMMARY")["results"][0]
-    drift = mon.drift(spark, {"x": po})
+    drift = drift_from_states(merged, {"x": po})
     assert drift[0]["kl"] == pytest.approx(evr["result"]["observed_value"], rel=1e-12)
     assert drift[0]["n"] == 3000
     # states table holds one committed row per (batch, bin) — no replay dups
@@ -577,12 +588,13 @@ def test_streaming_drift_monitor_orphan_superseded(spark, tmp_path):
     contribute; after redelivery commits the batch, the newest row wins
     per (state_key, column, bin)."""
     from sparkcheck.runner import _utcnow
-    from sparkcheck.states import histogram_states
-    from sparkcheck.streaming import StreamingDriftMonitor
+    from sparkcheck.states import histogram, histogram_states, merge_histogram_states
+    from sparkcheck.streaming import StateMonitor
 
     edges = [0.0, 10.0, 20.0, 30.0]
     store = ParquetStore(str(tmp_path / "store_drift2"))
-    mon = StreamingDriftMonitor(store, {"x": edges}, run_id="sd2")
+    kind = histogram({"x": edges})
+    mon = StateMonitor(store, [kind], run_id="sd2")
     mon(spark.createDataFrame([(5.0,)] * 10, "x double"), 0)
     orphan = histogram_states(
         spark.createDataFrame([(25.0,)] * 999, "x double"),
@@ -590,8 +602,10 @@ def test_streaming_drift_monitor_orphan_superseded(spark, tmp_path):
         state_key="'batch=1'",
     ).select(F.lit("sd2").alias("run_id"), "*", F.lit(_utcnow()).alias("ts"))
     store.append_small("histogram_states", orphan)
-    hist = {r["bin"]: r["cnt"] for r in mon.histogram(spark).collect()}
+    hist = {r["bin"]: r["cnt"]
+            for r in merge_histogram_states(mon.states(spark, kind)).collect()}
     assert sum(hist.values()) == 10 and hist[1] == 10  # orphan excluded
     mon(spark.createDataFrame([(15.0,)] * 7, "x double"), 1)  # real batch 1
-    hist = {r["bin"]: r["cnt"] for r in mon.histogram(spark).collect()}
+    hist = {r["bin"]: r["cnt"]
+            for r in merge_histogram_states(mon.states(spark, kind)).collect()}
     assert sum(hist.values()) == 17 and hist[2] == 7 and hist[3] == 0
