@@ -4903,7 +4903,7 @@ def oracle_sql() -> dict[str, str]:
             # "groups containing t" — then tf >= 2 prunes candidates;
             # rank on the 6-dp-rounded score, token tie-break
             f"WITH tok AS (SELECT source, unnest({_TOKS}) AS token "
-            "FROM documents), "
+            "FROM documents WHERE source IS NOT NULL), "
             "tf AS (SELECT source, token, count(*)::BIGINT AS tf "
             "FROM tok GROUP BY 1, 2), "
             "sc AS (SELECT source, token, tf, "

@@ -2,8 +2,8 @@
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ..., "docs_per_sec": ...,
-   "cores": N}
+   "queries": {name: median sec, ...}, "queries_min": {name: min sec, ...},
+   "sf": ..., "docs_per_sec": ..., "cores": N, "repeats": 3}
 
 Env:
   SPARK_GRAFT_SF_DIR  input dir (default /root/testdata/sf0.1)
@@ -26,26 +26,20 @@ stage that exists to verify LSH candidates) are timed separately under
 headline wall-clock. A warmup pass runs before any timing so the first
 timed query does not absorb JVM/codegen JIT.
 
-Variance protocol (round-4 verdict item 1), in code rather than prose:
-the fixed-cost sentinels (text_profile, span_profile) are timed FIRST
-against their quiet-box band from BENCH/BASELINE.md; if a sentinel sits
->20% above quiet, the box is contended — the bench pauses and re-probes
-(bounded) before timing anything. Each timed query with a known quiet
-number that lands >15% above it is re-run (<=2 bounded retries, min
-kept — contention inflates, it never deflates). Sentinels are re-timed
-after the suite, and the JSON embeds the full evidence: quiet refs,
-pre/post sentinel timings, every retry sample, and any queries still
-over band after retries — so the committed artifact itself carries the
-box-vs-engine proof instead of builder prose. Quiet refs apply only at
-the reference configuration (sf0.1, 32 cores); other SF/core settings
-run single-shot. BENCH_NO_RETRY=1 disables the protocol (scaling legs
-time adjacent pairs instead).
+Every timed query runs a fixed REPEATS (3) times back to back. The JSON
+reports the median per query under "queries" and the min under
+"queries_min"; "value" is the sum of the medians, and the docs/sec
+figures use the median validation wall. A fixed repeat count with median
+and min replaces any retry-until-quiet rule: contention only inflates a
+sample, so min vs median shows how noisy the box was, and nothing is
+tuned to one machine's quiet-box numbers.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -95,65 +89,8 @@ HEADLINE = [
     "embedding_decontamination",
 ]
 
-# Quiet-box per-query references (seconds) at the reference configuration
-# (sf0.1, local[32]) — the min of the BENCH/BASELINE.md quiet-box records
-# and the round-3/4 driver snapshots. Used ONLY to decide whether a timed
-# sample is noise-inflated (>15% over) and worth a bounded retry; they
-# are not targets and never lower a measured value.
-QUIET_REF = {
-    "null_profile_orders": 0.32,
-    "agg_profile_lineitem": 0.28,
-    "quantiles_quantity": 0.47,
-    "distinct_counts": 0.76,
-    "histogram_extendedprice": 0.36,
-    "kl_drift_quantity": 0.74,
-    "unique_violations_custkey": 0.32,
-    "referential_violations": 0.87,
-    "in_set_violations": 0.28,
-    "text_profile": 0.64,
-    "prefix_dups": 0.34,
-    "minhash_candidate_count": 1.14,
-    "simhash_neardup_count": 3.50,
-    "ann_topk": 1.12,
-    "lsh_ann_topk": 2.17,
-    "span_profile": 0.26,
-    "corr_profile_lineitem": 0.70,
-    "dataset_diff_orders": 0.89,
-    "segment_validation_returnflag": 0.58,
-    "windowed_drift_events": 0.79,
-    "quarantine_split": 0.83,
-    "per_source_cap": 0.34,
-    # 0.67 was a best-ever sample, not a typical quiet number — r5 quiet
-    # runs sit 0.80-0.85 with text.py untouched (BENCH/BASELINE.md r5)
-    "curation_funnel": 0.80,
-    "passage_dedup_documents": 2.01,
-    "lm_quality_documents": 0.64,
-    # 2.90 predates the r5 oversize-cluster re-clustering: dense modes
-    # are now split and pair-compared instead of skipped (strictly more
-    # work for strictly more recall); steady-state quiet is 3.5-4.3
-    "semantic_dedup": 3.60,
-    "importance_resample": 1.33,
-    "robust_stats_quantity": 0.84,
-    "novelty_documents": 1.30,
-    "kmeans_refine": 4.24,
-    # r5: control-plane store writes became driver-side Arrow appends
-    # (ParquetStore.append_rows) and the entry runner validates its 4
-    # buckets concurrently — 8.8 -> ~2 s
-    "runner_profile_documents": 2.0,
-    # round-5 additions, quiet-box measured 2026-08-21 (BENCH/BASELINE.md)
-    "chunked_documents": 0.32,
-    "fuzzy_name_pairs": 2.5,  # guard-on default (see keys.py in-plan guard)
-    "embedding_decontamination": 1.0,
-    "validate_synth_corpus": 3.65,
-    "validate_synth_corpus_fused": 2.16,
-}
-
-#: fixed-cost sentinels: narrow, stable queries whose inflation indicates
-#: host contention, not engine change (BENCH/BASELINE.md noise studies)
-SENTINELS = ("text_profile", "span_profile")
-RETRY_TOL = 1.15  # >15% over quiet -> retry
-SENTINEL_TOL = 1.20  # >20% over quiet -> the box is contended
-MAX_RETRIES = 2
+#: samples per timed query; the JSON reports their median and min
+REPEATS = 3
 
 
 def main() -> None:
@@ -225,48 +162,29 @@ def main() -> None:
                  "embedding_decontamination"):
         qs[warm](spark, SF_DIR).write.format("noop").mode("overwrite").save()
 
-    # the quiet-band protocol only applies at the reference configuration
-    at_ref = SF_DIR.rstrip("/").endswith("sf0.1") and CPUS == 32
-    no_retry = os.environ.get("BENCH_NO_RETRY", "0") == "1"
-    use_protocol = at_ref and not no_retry
-
-    def run_once(name: str) -> float:
-        t0 = time.monotonic()
-        qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        return round(time.monotonic() - t0, 3)
-
-    attempts: dict[str, list[float]] = {}
-
-    def timed(name: str) -> float:
-        """One sample; then bounded retries while >15% over quiet. The min
-        is kept: contention only inflates, so the smallest sample is the
-        best estimate of engine cost."""
-        samples = [run_once(name)]
-        quiet = QUIET_REF.get(name)
-        if use_protocol and quiet is not None:
-            while samples[-1] > RETRY_TOL * quiet and len(samples) <= MAX_RETRIES:
-                samples.append(run_once(name))
-        attempts[name] = samples
-        return min(samples)
-
-    def probe_sentinels() -> dict[str, float]:
-        return {s: run_once(s) for s in SENTINELS}
-
-    sentinel_pre: dict[str, float] = {}
-    if use_protocol:
-        # contention gate: don't start timing into a known-bad window
-        for _probe in range(3):
-            sentinel_pre = probe_sentinels()
-            if all(
-                sentinel_pre[s] <= SENTINEL_TOL * QUIET_REF[s] for s in SENTINELS
-            ):
-                break
-            time.sleep(15)
-
     timings: dict[str, float] = {}
+    timings_min: dict[str, float] = {}
+
+    def timed(name: str, run) -> float:
+        """REPEATS samples of ``run()``; records median and min, returns
+        the median."""
+        samples = []
+        for _ in range(REPEATS):
+            t0 = time.monotonic()
+            run()
+            samples.append(time.monotonic() - t0)
+        timings[name] = round(statistics.median(samples), 3)
+        timings_min[name] = round(min(samples), 3)
+        return timings[name]
+
+    def noop(name: str):
+        return lambda: qs[name](spark, SF_DIR).write.format("noop").mode(
+            "overwrite"
+        ).save()
+
     t_all = time.monotonic()
     for name in HEADLINE:
-        timings[name] = timed(name)
+        timed(name, noop(name))
 
     # north-rule leg: full validation suite + span checks over the synthetic
     # interleaved corpus. The corpus is materialized to parquet ONCE
@@ -288,24 +206,13 @@ def main() -> None:
 
     report_holder: list = []
 
-    def run_validate_classic() -> float:
-        t0 = time.monotonic()
+    def run_validate_classic() -> None:
         report_holder.append(
             validate_df(docs, _synth_suite(), result_format="BOOLEAN_ONLY")
         )
         span_violations(docs).write.format("noop").mode("overwrite").save()
-        return round(time.monotonic() - t0, 3)
 
-    samples = [run_validate_classic()]
-    if use_protocol:
-        while (
-            samples[-1] > RETRY_TOL * QUIET_REF["validate_synth_corpus"]
-            and len(samples) <= MAX_RETRIES
-        ):
-            samples.append(run_validate_classic())
-    attempts["validate_synth_corpus"] = samples
-    validate_secs = min(samples)
-    timings["validate_synth_corpus"] = round(validate_secs, 3)
+    validate_secs = timed("validate_synth_corpus", run_validate_classic)
     report = report_holder[0]
     n_expectations = report["statistics"]["evaluated_expectations"]
     docs_per_sec = SYNTH_DOCS / validate_secs
@@ -322,35 +229,15 @@ def main() -> None:
         wdocs, _synth_suite(), span_violations, result_format="BOOLEAN_ONLY"
     )
 
-    def run_validate_fused() -> float:
-        t0 = time.monotonic()
-        validate_and_extract(
+    fused_secs = timed(
+        "validate_synth_corpus_fused",
+        lambda: validate_and_extract(
             docs, _synth_suite(), span_violations, result_format="BOOLEAN_ONLY"
-        )
-        return round(time.monotonic() - t0, 3)
-
-    samples = [run_validate_fused()]
-    if use_protocol:
-        while (
-            samples[-1] > RETRY_TOL * QUIET_REF["validate_synth_corpus_fused"]
-            and len(samples) <= MAX_RETRIES
-        ):
-            samples.append(run_validate_fused())
-    attempts["validate_synth_corpus_fused"] = samples
-    fused_secs = min(samples)
-    timings["validate_synth_corpus_fused"] = round(fused_secs, 3)
+        ),
+    )
 
     elapsed = time.monotonic() - t_all
-    # the comparable wall: sum of best-attempt timings (retries excluded);
-    # raw elapsed (incl. retries + untimed warm slices) rides alongside
     total = sum(timings.values())
-
-    sentinel_post = probe_sentinels() if use_protocol else {}
-    noisy = sorted(
-        n
-        for n, t in timings.items()
-        if n in QUIET_REF and t > RETRY_TOL * QUIET_REF[n]
-    )
 
     # oracle/verification stages: quadratic by declaration, not engine cost
     oracle_timings: dict[str, float] = {}
@@ -360,10 +247,11 @@ def main() -> None:
         oracle_timings[name] = round(time.monotonic() - t0, 3)
 
     out = {
-        "metric": "validated docs/sec on synthetic interleaved corpus + headline query suite wall-clock (sum of best-attempt query timings)",
+        "metric": "validated docs/sec on synthetic interleaved corpus + headline query suite wall-clock (sum of median query timings)",
         "value": round(total, 3),
         "unit": "sec",
         "queries": timings,
+        "queries_min": timings_min,
         "oracle_stage_queries": oracle_timings,
         "sf": SF_DIR.rstrip("/").rsplit("sf", 1)[-1],
         "docs_per_sec": round(docs_per_sec, 1),
@@ -373,18 +261,8 @@ def main() -> None:
         "expectation_evals_per_sec": round(n_expectations * docs_per_sec, 1),
         "cores": CPUS,
         "elapsed_secs": round(elapsed, 3),
+        "repeats": REPEATS,
     }
-    if use_protocol:
-        out["variance_protocol"] = {
-            "quiet_ref": {k: QUIET_REF[k] for k in timings if k in QUIET_REF},
-            "sentinels_pre": sentinel_pre,
-            "sentinels_post": sentinel_post,
-            "sentinel_quiet": {s: QUIET_REF[s] for s in SENTINELS},
-            "retried": {
-                k: v for k, v in attempts.items() if len(v) > 1
-            },
-            "still_over_band_after_retries": noisy,
-        }
     print(json.dumps(out))
 
 

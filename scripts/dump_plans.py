@@ -3,6 +3,7 @@ the properties worth checking (pushdown, pruning, broadcast, codegen spans,
 fused aggregates)."""
 import io
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 sys.path.insert(0, ".")
@@ -55,12 +56,16 @@ def main():
         "(`HashAggregate(keys=[o_custkey], functions=[partial_count ...])` "
         "before the exchange) — the full-row window form would shuffle every "
         "column of every row.")
-    add("Span-level violations (single-pass native plan)",
-        span_violations(generate_docs(spark, 1000)),
-        "One generator (`Generate explode`) over one projection computing all "
-        "three span checks as array lambdas — one scan, zero shuffles, zero "
-        "Python; compare the three-scan union + pandas-UDF variant "
-        "(span_violations_arrow) kept for parity testing.")
+    with tempfile.TemporaryDirectory() as nested_dir:
+        generate_docs(spark, 1000).write.parquet(nested_dir, mode="overwrite")
+        add("Span-level violations over a stored nested corpus",
+            span_violations(spark.read.parquet(nested_dir)),
+            "`explode_spans` is one `Generate posexplode(spans)` inside "
+            "whole-stage codegen; `prev_offset` is read straight from the "
+            "array with `element_at`, so there is no higher-order function. "
+            "The three span checks of `span_violations_flat` are flat "
+            "predicates in one Filter, and a second `Generate explode` tags "
+            "each violation row — one scan, zero shuffles, zero Python.")
     add("Brute-force ANN top-k (ann_topk)",
         qs["ann_topk"](spark, SF),
         "The small query side is broadcast (`BroadcastNestedLoopJoin`), the "
@@ -85,21 +90,19 @@ def main():
         "window form would shuffle entire rows keyed by value.")
 
     from sparkcheck.spans import span_violations_flat
-    from sparkcheck.synth import FLAT_SPAN_COLUMNS  # noqa: F401
-    import tempfile, os as _os
-    flat_dir = tempfile.mkdtemp()
     from sparkcheck.synth import write_flat_corpus
-    write_flat_corpus(spark, flat_dir, 1000)
-    add("Span violations over the FLAT span layout (storage-level fix)",
-        span_violations_flat(spark.read.parquet(f"{flat_dir}/spans.parquet")),
-        "The pre-exploded Iceberg-style layout turns the span pass into a "
-        "pure vectorized flat-column scan + predicates: `ReadSchema` lists "
-        "exactly the seven flat columns, there is no Generate/explode for "
-        "the scan itself, and the nested-array reader (the round-1 "
-        "memory-bandwidth bottleneck) is out of the picture entirely. "
-        "Measured: 3.0x throughput at local[8], 3.4x at local[32], 0.876 "
-        "scaling efficiency at 2->8 cores (BENCH/BASELINE.md round-2 "
-        "campaign).")
+    with tempfile.TemporaryDirectory() as flat_dir:
+        write_flat_corpus(spark, flat_dir, 1000)
+        add("Span violations over the FLAT span layout (storage-level fix)",
+            span_violations_flat(spark.read.parquet(f"{flat_dir}/spans.parquet")),
+            "The pre-exploded Iceberg-style layout turns the span pass into a "
+            "pure vectorized flat-column scan + predicates: `ReadSchema` lists "
+            "exactly the seven flat columns, there is no Generate/explode for "
+            "the scan itself, and the nested-array reader (the round-1 "
+            "memory-bandwidth bottleneck) is out of the picture entirely. "
+            "Measured: 3.0x throughput at local[8], 3.4x at local[32], 0.876 "
+            "scaling efficiency at 2->8 cores (BENCH/BASELINE.md round-2 "
+            "campaign).")
 
     from sparkcheck.similarity import ivf_assign
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")

@@ -2,27 +2,30 @@
 
 GX has no analog for nested-array validation (SURVEY.md §1: "GX never
 explodes nested data"); this is the north-rule capability on top of the
-expectation engine. Two execution styles, both driver-loop-free:
+expectation engine. Driver-loop-free and Python-free:
 
-1. **Exploded-native**: ``posexplode(spans)`` flattens to one row per span
-   (doc_id, span_index, kind, text, media_ref, offset); every registered
-   column expectation then applies unchanged — e.g.
-   ``expect_column_values_to_match_regex`` over ``text``. The explode is a
-   narrow transformation (no shuffle) so this composes with the fused agg
-   pass at full scan speed.
+1. **One span layout**: :func:`explode_spans` runs one ``posexplode(spans)``
+   and emits one row per span in the flat layout
+   :data:`FLAT_SPAN_COLUMNS` (doc_id, span_index, kind, text, media_ref,
+   offset, prev_offset). Every registered column expectation then applies
+   unchanged — e.g. ``expect_column_values_to_match_regex`` over ``text``.
+   The explode is narrow (no shuffle) and runs inside whole-stage codegen,
+   so it composes with the fused agg pass at full scan speed.
 
-2. **Arrow pandas UDFs** over the intact spans array (input_hint: "all
-   span-level checks done via vectorized pandas/Arrow UDFs ... without
-   per-row Python [scalar UDFs]") — used where per-document *sequence*
-   semantics matter: offset monotonicity, kind/payload consistency, and
-   the span-sequence fingerprint that backs the row-for-row equality
-   invariant (kind, text, media_ref, order) against reference results.
+2. **One span-check predicate set**: :func:`span_violations_flat` holds the
+   three checks (printable text, kind/payload consistency, offset
+   monotonicity against the immediate previous span) as flat row
+   predicates; :func:`span_violations` is those predicates over
+   :func:`explode_spans`.
+
+The only Python-worker path left is :func:`span_sequence_fingerprint`, the
+md5 span-sequence fingerprint behind the row-for-row equality invariant
+(kind, text, media_ref, order) against reference results.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -81,14 +84,24 @@ def interleave_documents(
     )
 
 
-def explode_spans(docs: DataFrame) -> DataFrame:
-    """One row per span: (doc_id, span_index, kind, text, media_ref, offset).
+#: the flat span layout: one row per span, previous offset denormalized
+FLAT_SPAN_COLUMNS = (
+    "doc_id", "span_index", "kind", "text", "media_ref", "offset", "prev_offset"
+)
 
-    posexplode is narrow — no shuffle; Catalyst still prunes unused struct
-    fields from the parquet scan (nested schema pruning).
+
+def explode_spans(docs: DataFrame) -> DataFrame:
+    """One row per span in the flat layout :data:`FLAT_SPAN_COLUMNS`:
+    (doc_id, span_index, kind, text, media_ref, offset, prev_offset).
+
+    One ``posexplode``, narrow (no shuffle), inside whole-stage codegen;
+    Catalyst still prunes unused struct fields from the parquet scan
+    (nested schema pruning). ``prev_offset`` is the immediate previous
+    span's offset, read straight from the array: ``element_at`` is
+    1-based, so index ``span_index`` is the previous span.
     """
     return docs.select(
-        "doc_id", F.posexplode("spans").alias("span_index", "span")
+        "doc_id", "spans", F.posexplode("spans").alias("span_index", "span")
     ).select(
         "doc_id",
         "span_index",
@@ -96,46 +109,15 @@ def explode_spans(docs: DataFrame) -> DataFrame:
         F.col("span.text").alias("text"),
         F.col("span.media_ref").alias("media_ref"),
         F.col("span.offset").alias("offset"),
+        F.when(
+            F.col("span_index") > 0,
+            F.element_at("spans", F.col("span_index"))["offset"],
+        ).alias("prev_offset"),
     )
 
 
 # ---------------------------------------------------------------------------
-# Native whole-array checks (no explode, no Python): per-doc predicates
-# ---------------------------------------------------------------------------
-
-
-def offsets_strictly_increasing() -> Column:
-    """True iff spans.offset is strictly increasing (native higher-order fns:
-    zip_with the array against its own tail — stays in codegen)."""
-    spans = F.col("spans")
-    pairs_bad = F.zip_with(
-        F.slice(spans, 1, F.greatest(F.size(spans) - 1, F.lit(0))),
-        F.slice(spans, 2, F.greatest(F.size(spans) - 1, F.lit(0))),
-        lambda a, b: b["offset"] <= a["offset"],
-    )
-    return ~F.exists(pairs_bad, lambda x: x)
-
-
-def kind_payload_consistent() -> Column:
-    """True iff every span has text XOR media_ref matching its kind."""
-    ok = lambda s: F.when(  # noqa: E731
-        s["kind"] == "text", s["text"].isNotNull() & s["media_ref"].isNull()
-    ).otherwise(s["media_ref"].isNotNull() & s["text"].isNull())
-    return F.forall(F.col("spans"), ok)
-
-
-def doc_violation_flags(docs: DataFrame) -> DataFrame:
-    """Per-doc boolean flags for the whole-array invariants."""
-    return docs.select(
-        "doc_id",
-        offsets_strictly_increasing().alias("offsets_ok"),
-        kind_payload_consistent().alias("kinds_ok"),
-        F.size("spans").alias("n_spans"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Arrow pandas UDFs over the intact spans array
+# Arrow pandas UDF over the intact spans array
 # ---------------------------------------------------------------------------
 
 
@@ -166,121 +148,32 @@ def span_sequence_fingerprint(spans: pd.Series) -> pd.Series:
     return spans.map(fp)
 
 
-@F.pandas_udf(T.ArrayType(T.IntegerType()))
-def offset_violation_indices(spans: pd.Series) -> pd.Series:
-    """Indices i where offset[i] <= offset[i-1] — the violation-row payload
-    for the offset-monotonicity check, computed per Arrow batch."""
-
-    def bad(arr):
-        if arr is None:
-            return []
-        out = []
-        prev = None
-        for i, s in enumerate(arr):
-            off = s["offset"]
-            if prev is not None and off is not None and off <= prev:
-                out.append(i)
-            if off is not None:
-                prev = off
-        return out
-
-    return spans.map(bad)
-
-
 PRINTABLE_RE = r"^[\x20-\x7E]*$"
 KNOWN_KINDS = ("text", "image", "audio", "video")
 
 
 def span_violations(docs: DataFrame, run_id: str = "", partition_id: str = "") -> DataFrame:
-    """Violation rows (doc_id, span_index, expectation, observed_value) for
-    ALL span-level invariants in ONE narrow scan.
-
-    Plan shape: zip each span with the previous span's offset
-    (``arrays_zip`` against the offset array shifted by one), ``posexplode``
-    once, then evaluate all three checks (printable text, kind/payload
-    consistency, offset monotonicity) as FLAT row predicates. Explode is a
-    codegen-friendly generator and flat predicates stay inside
-    whole-stage codegen, which measured ~1.7x faster than evaluating the
-    checks as array lambdas (higher-order functions are interpreted,
-    allocation-bound, and thread-scale poorly — see BENCH/BASELINE.md).
-    One scan, zero shuffles, zero Python. ``span_violations_arrow`` is the
-    pandas-UDF variant kept for parity testing."""
-    spans = F.col("spans")
-    offs = F.transform(spans, lambda s: s["offset"])
-    prev = F.concat(
-        F.array(F.lit(None).cast("int")),
-        F.slice(offs, 1, F.greatest(F.size(spans) - 1, F.lit(0))),
-    )
-    z = F.arrays_zip(spans, prev.alias("prev_offset"))
-    ex = docs.select(
-        "doc_id", F.posexplode(z).alias("span_index", "zz")
-    ).select(
-        "doc_id",
-        "span_index",
-        F.col("zz.spans.kind").alias("kind"),
-        F.col("zz.spans.text").alias("text"),
-        F.col("zz.spans.media_ref").alias("media_ref"),
-        F.col("zz.spans.offset").alias("offset"),
-        F.col("zz.prev_offset").alias("prev_offset"),
-    )
-    text_bad = (
-        (F.col("kind") == "text")
-        & F.col("text").isNotNull()
-        & ~F.col("text").rlike(PRINTABLE_RE)
-    )
-    kind_bad = (
-        ~F.col("kind").isin(*KNOWN_KINDS)
-        | ((F.col("kind") == "text") & (F.col("text").isNull() | F.col("media_ref").isNotNull()))
-        | ((F.col("kind") != "text") & (F.col("media_ref").isNull() | F.col("text").isNotNull()))
-    )
-    off_bad = (
-        F.col("prev_offset").isNotNull()
-        & F.col("offset").isNotNull()
-        & (F.col("offset") <= F.col("prev_offset"))
-    )
-    vs = "array<struct<expectation:string,observed_value:string>>"
-
-    def tagged(cond, name, observed):
-        return F.when(
-            cond,
-            F.array(F.struct(F.lit(name).alias("expectation"), observed.alias("observed_value"))),
-        ).otherwise(F.array().cast(vs))
-
-    out = ex.where(text_bad | kind_bad | off_bad).select(
-        "doc_id",
-        "span_index",
-        F.explode(
-            F.concat(
-                tagged(text_bad, "expect_span_text_printable", F.col("text")),
-                tagged(kind_bad, "expect_span_kind_payload_consistent", F.col("kind")),
-                tagged(off_bad, "expect_span_offsets_increasing", F.lit(None).cast("string")),
-            )
-        ).alias("v"),
-    )
-    return out.select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(partition_id).alias("partition_id"),
-        "doc_id",
-        F.col("span_index").cast("int").alias("span_index"),
-        F.col("v.expectation").alias("expectation"),
-        F.col("v.observed_value").alias("observed_value"),
-    )
+    """Violation rows (run_id, partition_id, doc_id, span_index,
+    expectation, observed_value) for ALL span-level invariants of nested
+    (doc_id, spans) documents in ONE narrow scan:
+    :func:`span_violations_flat` over :func:`explode_spans`. One scan,
+    zero shuffles, zero Python."""
+    return span_violations_flat(explode_spans(docs), run_id, partition_id)
 
 
 def span_violations_flat(
     flat_spans: DataFrame, run_id: str = "", partition_id: str = ""
 ) -> DataFrame:
-    """span_violations over the pre-exploded FLAT span layout
-    (synth.write_flat_corpus): same three checks, but the input is already
-    one row per span with ``prev_offset`` denormalized at ingest — so the
-    plan is a pure scan + flat predicates with exact column pruning and no
-    generator, and the parquet decode uses the vectorized flat readers
-    instead of the nested array<struct> reader (the round-1 scaling
-    bottleneck was nested-decode allocation pressure; this layout removes
-    it at the storage level, exactly what an Iceberg table would do).
-    Violation rows match span_violations on the equivalent nested corpus
-    row-for-row."""
-    ex = flat_spans
+    """The one span-check predicate set, over the flat span layout
+    :data:`FLAT_SPAN_COLUMNS`: :func:`explode_spans` output, or the
+    stored pre-exploded corpus of ``synth.write_flat_corpus``, whose scan
+    prunes to exactly the referenced columns and decodes with the
+    vectorized flat readers instead of the nested array<struct> reader.
+
+    Three flat row predicates, NULL never flags: printable ``text`` on
+    text spans, kind/payload consistency (text XOR media_ref by kind,
+    kind in ``KNOWN_KINDS``), and ``offset > prev_offset`` against the
+    immediate previous span."""
     text_bad = (
         (F.col("kind") == "text")
         & F.col("text").isNotNull()
@@ -304,7 +197,7 @@ def span_violations_flat(
             F.array(F.struct(F.lit(name).alias("expectation"), observed.alias("observed_value"))),
         ).otherwise(F.array().cast(vs))
 
-    out = ex.where(text_bad | kind_bad | off_bad).select(
+    out = flat_spans.where(text_bad | kind_bad | off_bad).select(
         "doc_id",
         "span_index",
         F.explode(
@@ -322,60 +215,6 @@ def span_violations_flat(
         F.col("span_index").cast("int").alias("span_index"),
         F.col("v.expectation").alias("expectation"),
         F.col("v.observed_value").alias("observed_value"),
-    )
-
-
-def span_violations_arrow(
-    docs: DataFrame, run_id: str = "", partition_id: str = ""
-) -> DataFrame:
-    """Pandas-UDF/union variant of :func:`span_violations` — three scans,
-    offset check through the Arrow-batched UDF. Kept as the cross-check
-    oracle for the single-pass native form (results must match row-for-row)
-    and as the template for span checks that genuinely need Python."""
-    ex = explode_spans(docs)
-
-    text_bad = ex.where(
-        (F.col("kind") == "text")
-        & F.col("text").isNotNull()
-        & ~F.col("text").rlike(r"^[\x20-\x7E]*$")
-    ).select(
-        "doc_id",
-        "span_index",
-        F.lit("expect_span_text_printable").alias("expectation"),
-        F.col("text").alias("observed_value"),
-    )
-
-    kind_bad = ex.where(
-        ~F.col("kind").isin("text", "image", "audio", "video")
-        | ((F.col("kind") == "text") & (F.col("text").isNull() | F.col("media_ref").isNotNull()))
-        | ((F.col("kind") != "text") & (F.col("media_ref").isNull() | F.col("text").isNotNull()))
-    ).select(
-        "doc_id",
-        "span_index",
-        F.lit("expect_span_kind_payload_consistent").alias("expectation"),
-        F.col("kind").alias("observed_value"),
-    )
-
-    offset_bad = (
-        docs.select(
-            "doc_id", F.explode(offset_violation_indices("spans")).alias("span_index")
-        )
-        .select(
-            "doc_id",
-            "span_index",
-            F.lit("expect_span_offsets_increasing").alias("expectation"),
-            F.lit(None).cast("string").alias("observed_value"),
-        )
-    )
-
-    out = text_bad.unionByName(kind_bad).unionByName(offset_bad)
-    return out.select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(partition_id).alias("partition_id"),
-        "doc_id",
-        F.col("span_index").cast("int").alias("span_index"),
-        "expectation",
-        "observed_value",
     )
 
 

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .spans import FLAT_SPAN_COLUMNS, explode_spans  # noqa: F401
+
 WORDS = [
     "spark", "table", "scan", "merge", "join", "window", "batch", "stream",
     "vector", "column", "filter", "group", "order", "query", "hash", "sort",
@@ -156,11 +158,6 @@ def write_sharded_corpus(
     ).write.mode("overwrite").partitionBy("shard").parquet(out_dir)
 
 
-FLAT_SPAN_COLUMNS = (
-    "doc_id", "span_index", "kind", "text", "media_ref", "offset", "prev_offset"
-)
-
-
 def write_flat_corpus(spark: SparkSession, out_dir: str, n_docs: int) -> None:
     """The pre-exploded storage layout: spans as FLAT columns
     (doc_id, span_index, kind, text, media_ref, offset, prev_offset) plus a
@@ -172,25 +169,10 @@ def write_flat_corpus(spark: SparkSession, out_dir: str, n_docs: int) -> None:
     allocation pressure), prune to exactly the referenced columns, and push
     predicates down. ``prev_offset`` is denormalized at ingest (one narrow
     pass here) so the offset-monotonicity check needs no window at read
-    time. Span-sequence order stays recoverable via (doc_id, span_index)."""
+    time. Span-sequence order stays recoverable via (doc_id, span_index).
+    The rows are exactly :func:`spans.explode_spans` of the nested corpus."""
     docs = generate_docs(spark, n_docs)
-    flat = docs.select(
-        "doc_id", F.posexplode("spans").alias("span_index", "s"),
-        F.transform(F.col("spans"), lambda x: x["offset"]).alias("__offs"),
-    ).select(
-        "doc_id",
-        F.col("span_index").cast("int").alias("span_index"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        F.col("s.offset").alias("offset"),
-        # element_at is 1-based: index span_index is the PREVIOUS span
-        F.when(
-            F.col("span_index") > 0,
-            F.element_at(F.col("__offs"), F.col("span_index")),
-        ).alias("prev_offset"),
-    )
-    flat.write.mode("overwrite").parquet(f"{out_dir}/spans.parquet")
+    explode_spans(docs).write.mode("overwrite").parquet(f"{out_dir}/spans.parquet")
     docs.select("doc_id", F.size("spans").alias("n_spans")).write.mode(
         "overwrite"
     ).parquet(f"{out_dir}/docs.parquet")

@@ -1200,11 +1200,16 @@ def distinctive_terms(
     over that dimension-sized frame (not the corpus), and N_groups rides
     in as a broadcast 1×1 aggregate — no driver collect, no second scan
     of the data. ``min_tf`` prunes the hapax tail AFTER the df window, so df keeps its true meaning.
+
+    Rows with a NULL group are dropped before tokenizing: a NULL group is
+    not a group, so it counts toward neither df nor N_groups (df <= N, and
+    every score is >= 0).
     """
     from pyspark.sql import Window
 
     if top_k < 1:
         raise ValueError("top_k must be >= 1")
+    docs = docs.where(F.col(group_col).isNotNull())
     tok = docs.select(
         F.col(group_col).alias("group"), F.explode(tokens(text_col)).alias("token")
     )

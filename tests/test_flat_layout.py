@@ -7,7 +7,14 @@ same violations, but the scan decodes plain columns.
 
 from __future__ import annotations
 
-from sparkcheck.spans import span_violations, span_violations_flat
+import re
+
+from sparkcheck.spans import (
+    FLAT_SPAN_COLUMNS,
+    explode_spans,
+    span_violations,
+    span_violations_flat,
+)
 from sparkcheck.synth import generate_docs, write_flat_corpus
 
 
@@ -36,6 +43,19 @@ def test_flat_plan_is_scan_plus_filter(spark, tmp_path):
     assert "Window" not in plan
     # the read schema is the flat columns — no array<struct> decode
     assert "array<struct" not in plan.lower().replace(" ", "")
+
+
+def test_nested_plan_is_one_codegen_generate(spark, tmp_path):
+    """span_violations over a stored nested corpus: one posexplode inside
+    whole-stage codegen, no shuffle and no higher-order function."""
+    out = str(tmp_path / "nested")
+    generate_docs(spark, 500).write.parquet(out)
+    docs = spark.read.parquet(out)
+    assert tuple(explode_spans(docs).columns) == FLAT_SPAN_COLUMNS
+    plan = span_violations(docs)._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    assert "lambdafunction" not in plan and "arrays_zip" not in plan
+    assert re.search(r"\*\(\d+\) Generate posexplode", plan), plan
 
 
 def test_docs_table_matches(spark, tmp_path):

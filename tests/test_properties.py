@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import math
+import re
 
 import pandas as pd
 from hypothesis import HealthCheck, given, settings
@@ -319,7 +320,8 @@ _SPAN = st.tuples(
     st.one_of(st.none(), st.integers(0, 40)),
 )
 _DOC_FRAMES = st.lists(
-    st.tuples(_DOC_IDS, st.lists(_SPAN, max_size=4)), min_size=1, max_size=16
+    st.tuples(_DOC_IDS, st.one_of(st.none(), st.lists(_SPAN, max_size=4))),
+    min_size=1, max_size=16,
 )
 _SUITE_POOL = [
     # observable whole-table aggregates
@@ -362,6 +364,32 @@ def _vkeys(rows):
         (r["doc_id"] or "", r["span_index"], r["expectation"], r["observed_value"] or "")
         for r in rows
     )
+
+
+def _py_span_violations(docs):
+    """Pure-Python reference for ``spans.span_violations`` over
+    ``(doc_id, spans)`` tuples, keyed like :func:`_vkeys`. SQL three-valued
+    logic: a NULL kind, text or offset never makes a predicate true. The
+    offset check compares each span with the IMMEDIATE previous span, so a
+    NULL offset hides the pair on both of its sides."""
+    from sparkcheck.spans import KNOWN_KINDS, PRINTABLE_RE
+
+    out = []
+    for doc_id, spans in docs:
+        for i, (kind, text, ref, off) in enumerate(spans or []):
+            key = doc_id or "", i
+            if kind == "text" and text is not None and not re.search(PRINTABLE_RE, text):
+                out.append((*key, "expect_span_text_printable", text))
+            if kind is not None and (
+                kind not in KNOWN_KINDS
+                or (kind == "text" and (text is None or ref is not None))
+                or (kind != "text" and (ref is None or text is not None))
+            ):
+                out.append((*key, "expect_span_kind_payload_consistent", kind))
+            prev = spans[i - 1][3] if i > 0 else None
+            if prev is not None and off is not None and off <= prev:
+                out.append((*key, "expect_span_offsets_increasing", ""))
+    return sorted(out)
 
 
 def _result_rows(evrs):
@@ -415,7 +443,9 @@ def test_single_scan_leg_matches_two_pass(spark, tmp_path, docs, picks):
     assert json.dumps(_canon(rep), sort_keys=True, default=str) == json.dumps(
         _canon(ref), sort_keys=True, default=str
     )
-    assert _vkeys(rows.collect()) == _vkeys(span_violations(df).collect())
+    span_rows = _vkeys(span_violations(df).collect())
+    assert _vkeys(rows.collect()) == span_rows
+    assert span_rows == _py_span_violations(docs)
 
     n_buckets = 2
     store = ParquetStore(str(tmp_path / uuid.uuid4().hex))

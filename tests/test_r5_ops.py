@@ -130,6 +130,16 @@ def test_distinctive_terms_min_tf_and_ties(spark):
     assert pruned == []
 
 
+def test_distinctive_terms_null_group_is_dropped(spark):
+    """A NULL group is not a group: it must not raise df above N."""
+    df = spark.createDataFrame(
+        [("a", "tok x"), ("b", "tok y"), (None, "tok z")], "source string, text string"
+    )
+    got = text.distinctive_terms(df, top_k=5).collect()
+    assert got and all(r["score"] >= 0 for r in got)
+    assert {r["source"] for r in got} == {"a", "b"}
+
+
 # ---------------------------------------------------------------------------
 # fuzzy_join
 # ---------------------------------------------------------------------------

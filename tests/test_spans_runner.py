@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from sparkcheck import ExpectationSuite
 from sparkcheck.runner import CheckpointRunner, ParquetStore
 from sparkcheck.spans import (
-    doc_violation_flags,
     explode_spans,
     span_sequence_fingerprint,
     span_violations,
@@ -41,10 +40,9 @@ def test_explode_and_oracle(spark, docs):
     pdf = docs.toPandas()
     expected_spans = int(sum(len(s) for s in pdf.spans))
     assert ex.count() == expected_spans
-    # text xor media_ref by kind, minus seeded inconsistencies (none seeded
-    # for payload-consistency so the native check agrees with pandas)
-    flags = doc_violation_flags(docs).toPandas()
-    assert flags.kinds_ok.all()
+    v = span_violations(docs).cache()
+    # text xor media_ref by kind: none seeded, so no payload rows
+    assert v.where("expectation = 'expect_span_kind_payload_consistent'").count() == 0
 
     def offsets_ok(spans):
         offs = [s["offset"] for s in spans]
@@ -57,9 +55,10 @@ def test_explode_and_oracle(spark, docs):
     }
     got_bad = {
         r["doc_id"]
-        for r in flags.to_dict("records")
-        if not r["offsets_ok"] and r["doc_id"] is not None
+        for r in v.where("expectation = 'expect_span_offsets_increasing'").collect()
+        if r["doc_id"] is not None
     }
+    v.unpersist()
     assert got_bad == expected_bad
     assert len(expected_bad) > 0  # defects seeded
 
@@ -167,18 +166,37 @@ def test_runner_checkpoint_resume(spark, docs, tmp_path):
     assert int(total) == N_DOCS
 
 
-def test_span_violations_native_matches_arrow(spark, docs):
-    """The single-pass native plan and the pandas-UDF/union variant must
-    produce identical violation rows."""
-    from sparkcheck.spans import span_violations, span_violations_arrow
+_EDGE_DOCS = [
+    # NULL offset mid-array: neither neighbour of the NULL is compared
+    ("d-nullmid", [("text", "a", None, 5), ("text", "b", None, None),
+                   ("text", "c", None, 3), ("text", "d", None, 3)]),
+    ("d-empty", []),
+    ("d-null", None),
+    # unknown kind, NULL kind (never flagged), bad text, image with text
+    ("d-kinds", [("bogus", "x", None, 0), (None, "y", None, 1),
+                 ("text", "bad\x01", None, 2),
+                 ("image", "z", "media://m", 3)]),
+    # equal offsets on a doc whose doc_id is NULL
+    (None, [("text", "e", None, 7), ("text", "f", None, 7),
+            ("image", None, "media://n", 8)]),
+]
 
-    key = lambda r: (  # noqa: E731
-        r["doc_id"] or "", r["span_index"], r["expectation"], r["observed_value"] or ""
-    )
-    native = sorted(span_violations(docs, "r", "p").collect(), key=key)
-    arrow = sorted(span_violations_arrow(docs, "r", "p").collect(), key=key)
-    assert len(native) == len(arrow)
-    assert [key(r) for r in native] == [key(r) for r in arrow]
+
+def test_span_violations_edge_frame(spark):
+    """span_violations on the hand-built edge frame equals the pure-Python
+    reference, and both equal the pinned rows."""
+    from test_properties import _DOCS_DDL, _py_span_violations, _vkeys
+
+    docs = spark.createDataFrame(_EDGE_DOCS, _DOCS_DDL)
+    got = _vkeys(span_violations(docs, "r", "p").collect())
+    assert got == _py_span_violations(_EDGE_DOCS)
+    assert got == [
+        ("", 1, "expect_span_offsets_increasing", ""),
+        ("d-kinds", 0, "expect_span_kind_payload_consistent", "bogus"),
+        ("d-kinds", 2, "expect_span_text_printable", "bad\x01"),
+        ("d-kinds", 3, "expect_span_kind_payload_consistent", "image"),
+        ("d-nullmid", 3, "expect_span_offsets_increasing", ""),
+    ]
 
 
 def test_runner_suite_violation_rows(spark, docs, tmp_path):
