@@ -96,6 +96,48 @@ def _histogram(domain: Domain, cfg: MetricConfiguration, ctx=None) -> Column:
     return F.array(*histogram_terms(col, bins))
 
 
+_NUMERIC_DTYPES = ("tinyint", "smallint", "int", "bigint", "float", "double")
+# a categorical partition above this many values keeps value_counts. One
+# sum(when) per value costs generated-code size, not rows: a KL check plus
+# the row count, validate_df and validate_and_extract, 4 cores, the
+# counts against a value_counts pass took 0.21 vs 0.20 s at 17 values on
+# 5k rows and 0.30 vs 0.28-0.30 s on 200k rows; at 32 values 0.29 vs
+# 0.18 s (5k) and 0.44 vs 0.20 s (200k); at 256 values 2.3 vs 0.18 s
+# (200k).
+CATEGORICAL_AGG_MAX_VALUES = 17
+
+
+@agg_metric("column.categorical_histogram")
+def _categorical_histogram(domain: Domain, cfg: MetricConfiguration, ctx=None) -> Column:
+    """The categorical twin of ``column.histogram``: ONE aggregate array
+    ``[count(col = v_0), ..., count(col = v_k), count of non-null values
+    outside the partition]`` for the partition ``values``, so categorical
+    KL rides the suite's aggregate pass instead of a value_counts job.
+
+    Spark's ``=`` agrees with the Python equality that the value_counts
+    path applies on the driver only for a string column against string
+    values and a numeric column against int/float values (not bool); any
+    other pairing — or an unknown column type, or more than
+    CATEGORICAL_AGG_MAX_VALUES values — yields NULL, and the expectation
+    reads ``column.value_counts`` instead."""
+    from .metrics import domain_col
+
+    values = list(cfg.kw("values"))
+    dtype = (getattr(ctx, "dtypes", None) or {}).get(domain.column)
+    strings = dtype == "string" and all(isinstance(v, str) for v in values)
+    numbers = dtype in _NUMERIC_DTYPES and all(
+        isinstance(v, (int, float)) and not isinstance(v, bool) for v in values
+    )
+    if not (strings or numbers) or len(values) > CATEGORICAL_AGG_MAX_VALUES:
+        return F.max(F.lit(None).cast("array<bigint>"))
+    col = domain_col(domain, ctx)  # NaN≡NULL on float columns
+    terms = [
+        F.coalesce(F.sum(F.when(col == F.lit(v), 1).otherwise(0)), F.lit(0))
+        for v in values
+    ]
+    return F.array(*terms, F.count(F.when(~col.isin(*values), col)))
+
+
 def _quantile_cfg(domain: Domain, n_bins: int, exact: bool) -> MetricConfiguration:
     qs = tuple(float(i) / n_bins for i in range(n_bins + 1))
     return MetricConfiguration(
@@ -169,6 +211,11 @@ def psi(pk: np.ndarray, qk: np.ndarray, eps: float = 1e-6) -> float:
     return float(np.sum((p - q) * np.log(p / q)))
 
 
+# stands for "some value outside the categorical partition" when only
+# the count of such values is known (see _categorical_counts)
+_OUTSIDE = object()
+
+
 class KLDivergenceExpectation(Expectation):
     """expect_column_kl_divergence_to_be_less_than.
 
@@ -206,13 +253,47 @@ class KLDivergenceExpectation(Expectation):
                 "column.histogram", domain, freeze_kwargs(bins=tuple(po["bins"]))
             )
         else:  # categorical partition
-            reqs["value_counts"] = MetricConfiguration(
-                "column.value_counts", domain, freeze_kwargs(sort="value")
+            reqs["counts"] = MetricConfiguration(
+                "column.categorical_histogram",
+                domain,
+                freeze_kwargs(values=tuple(po["values"])),
             )
         return reqs
 
+    @staticmethod
+    def _value_counts_cfg(cfg) -> MetricConfiguration:
+        return MetricConfiguration(
+            "column.value_counts", build_domain(cfg), freeze_kwargs(sort="value")
+        )
+
+    @staticmethod
+    def _needs_value_counts(cfg, counts) -> bool:
+        """The labels of values outside a categorical partition matter
+        only when a tail holdout spreads weight over them; without one any
+        outside value makes the divergence infinite."""
+        if counts is None:  # the column type needs the driver-side equality
+            return True
+        return counts[-1] > 0 and float(cfg.get("tail_weight_holdout", 0.0)) > 0
+
+    def _categorical_counts(self, cfg, rf, resolver) -> list:
+        """(value, count) pairs for the categorical path: the partition's
+        values with their observed counts plus one stand-in for "values
+        outside the partition", or ``column.value_counts`` when the
+        outside labels are needed."""
+        po = cfg.get("partition_object")
+        counts = resolver[self.metric_requests(cfg, rf)["counts"]]
+        if self._needs_value_counts(cfg, counts):
+            return resolver[self._value_counts_cfg(cfg)]
+        pairs = list(zip(po["values"], counts[:-1]))
+        return pairs + ([(_OUTSIDE, counts[-1])] if counts[-1] else [])
+
     def stage2_requests(self, cfg, rf, resolver):
         po = cfg.get("partition_object")
+        if po is not None and "bins" not in po:
+            counts = resolver[self.metric_requests(cfg, rf)["counts"]]
+            if self._needs_value_counts(cfg, counts):
+                return {"value_counts": self._value_counts_cfg(cfg)}
+            return {}
         if po is None and cfg.get("bucketize_data", True):
             domain = build_domain(cfg)
             reqs = self.metric_requests(cfg, rf)
@@ -240,7 +321,7 @@ class KLDivergenceExpectation(Expectation):
 
         if po is not None and "bins" not in po:
             observed_kl, details = self._categorical(
-                resolver[reqs["value_counts"]], po, nonnull, tail_holdout
+                self._categorical_counts(cfg, rf, resolver), po, nonnull, tail_holdout
             )
         else:
             if po is None:

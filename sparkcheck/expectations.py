@@ -188,42 +188,26 @@ class ColumnMapExpectation(Expectation):
         reqs["unexpected_count"] = MetricConfiguration(
             count_metric, domain, self._frozen_cond(cfg)
         )
-        if rf["result_format"] in ("BASIC", "SUMMARY", "COMPLETE"):
-            limit = (
-                None
-                if rf["result_format"] == "COMPLETE"
-                else rf["partial_unexpected_count"]
-            )
-            reqs["unexpected_values"] = MetricConfiguration(
-                "map.unexpected_values", domain, self._frozen_cond(cfg, limit=limit)
-            )
-        if rf["result_format"] != "BOOLEAN_ONLY" and rf.get(
-            "include_unexpected_rows"
-        ):
-            limit = (
-                None
-                if rf["result_format"] == "COMPLETE"
-                else rf["partial_unexpected_count"]
-            )
-            reqs["unexpected_rows"] = MetricConfiguration(
-                "map.unexpected_rows", domain, self._frozen_cond(cfg, limit=limit)
-            )
-        if rf["result_format"] in ("SUMMARY", "COMPLETE") and rf.get(
-            "unexpected_index_column_names"
-        ):
-            limit = (
-                None
-                if rf["result_format"] == "COMPLETE"
-                else rf["partial_unexpected_count"]
-            )
-            reqs["unexpected_index_list"] = MetricConfiguration(
-                "map.unexpected_index_list",
-                domain,
-                self._frozen_cond(
-                    cfg,
-                    limit=limit,
-                    index_columns=tuple(rf["unexpected_index_column_names"]),
-                ),
+        # a sample limit of 0 requests no sample at all (reference limit(0));
+        # only COMPLETE is unlimited
+        limit = (
+            None if rf["result_format"] == "COMPLETE" else rf["partial_unexpected_count"]
+        )
+        samples = {
+            "unexpected_values": rf["result_format"] in ("BASIC", "SUMMARY", "COMPLETE"),
+            "unexpected_rows": rf["result_format"] != "BOOLEAN_ONLY"
+            and rf.get("include_unexpected_rows"),
+            "unexpected_index_list": rf["result_format"] in ("SUMMARY", "COMPLETE")
+            and rf.get("unexpected_index_column_names"),
+        }
+        for key, wanted in samples.items():
+            if not wanted or limit == 0:
+                continue
+            extra = {"limit": limit}
+            if key == "unexpected_index_list":
+                extra["index_columns"] = tuple(rf["unexpected_index_column_names"])
+            reqs[key] = MetricConfiguration(
+                f"map.{key}", domain, self._frozen_cond(cfg, **extra)
             )
         return reqs
 
@@ -238,17 +222,16 @@ class ColumnMapExpectation(Expectation):
         mostly = float(cfg.get("mostly", 1.0))
         success = mostly_success(nonnull_count, unexpected_count, mostly)
 
-        values = (
-            resolver[reqs["unexpected_values"]] if "unexpected_values" in reqs else []
+        def sample(key: str, wanted: Any) -> Any:
+            if key in reqs:
+                return resolver[reqs[key]]
+            return [] if wanted else None  # [] under a limit of 0
+
+        values = sample("unexpected_values", True)
+        index_list = sample(
+            "unexpected_index_list", rf.get("unexpected_index_column_names")
         )
-        index_list = (
-            resolver[reqs["unexpected_index_list"]]
-            if "unexpected_index_list" in reqs
-            else None
-        )
-        rows = (
-            resolver[reqs["unexpected_rows"]] if "unexpected_rows" in reqs else None
-        )
+        rows = sample("unexpected_rows", rf.get("include_unexpected_rows"))
         return format_map_output(
             rf,
             success,

@@ -18,14 +18,18 @@ exactly the whole-table aggregates the validator would have computed.
 
 What rides the observe node: metrics whose spec is a bundled aggregate
 (kind == "agg"), with no metric dependencies, over the UNFILTERED table
-domain (no row_condition / filter_conditions / explode). Everything else
-— uniqueness groupBys, filtered domains, value_counts, quantile sketches
-with deps, span-domain metrics — resolves through the normal bundled
-path afterwards; those jobs are key-/column-pruned scans, not full-width
-passes. The seeded resolver cache makes the handoff exact: the validator
-sees pre-resolved metric values keyed by the same metric ids it would
-have requested, so EVRs are bit-identical to the two-pass report
-(tests/test_fused.py asserts this).
+domain (no row_condition / filter_conditions / explode) — counts,
+min/max/mean/stddev, quantiles, histogram bins and the categorical
+KL counts (``column.categorical_histogram``). A filtered domain stays
+off the node, so a row_condition that raises at run time (an ANSI cast)
+fails only its own EVR, never the violation append. Everything else
+resolves in a prefetch thread that overlaps the append: one sample pass
+per row set (the unexpected-value samples), one uniqueness pass per
+uniqueness check (count and sample together) and one ``df.agg`` bundle
+per filtered domain. The seeded resolver cache
+makes the handoff exact: the validator sees pre-resolved metric values
+keyed by the same metric ids it would have requested, so EVRs are
+bit-identical to the two-pass report (tests/test_fused.py asserts this).
 
 Reference analog: GE computes validation metrics and row-level
 unexpected extraction as separate passes (validator.py graph_validate +
@@ -166,12 +170,13 @@ def validate_and_extract(
 
     validator = Validator(df)
 
-    # overlap the NON-observable metric jobs (uniqueness groupBys,
-    # filtered-domain aggs — narrow, key-/column-pruned scans) with the
-    # row-extraction action: Spark schedules concurrent jobs from separate
-    # threads across the same executors, so their wall-time hides behind
-    # the full-width pass instead of following it. Memoized into the same
-    # resolver the validator reads, so nothing recomputes.
+    # overlap the NON-observable metric jobs (the sample pass, the
+    # uniqueness passes, the filtered-domain bundles — narrow,
+    # column-pruned scans) with the row-extraction action: Spark schedules
+    # concurrent jobs from separate threads across the same executors, so
+    # their wall-time hides behind the full-width pass instead of
+    # following it. Memoized into the same resolver the validator reads,
+    # so nothing recomputes.
     prefetch_thread = None
     if prefetch and obs is not None:
         all_reqs = _all_stage1_requests(

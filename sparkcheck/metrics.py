@@ -9,8 +9,17 @@ execution_engine/execution_engine.py:378-477). We keep that design — it is
 the one GX optimization Catalyst cannot do for us (it fuses aggregates
 within one action, not across actions) — and extend it: map-condition
 unexpected-counts and histogram bins also become ``sum(when(...))`` columns
-of the same fused pass, so a typical suite costs ONE Spark job for all
-aggregate/count metrics plus one job per violation-sample collection.
+of the same fused pass. Requests that need rows rather than an aggregate
+are bundled too (``SharedPass``): every unexpected-value sample over one
+row set comes from ONE sample-pass query, and each uniqueness domain's
+count and sample from ONE uniqueness-pass query. An unlimited (COMPLETE)
+sample pass reads every row of its row set in its result stage, so the
+ready aggregates of every domain over that row set ride it as an
+Observation — filtered domains as conditional aggregates
+(``in_domain``); every other aggregate keeps the per-compute-domain
+``df.agg`` bundle (whose row_condition filter Spark pushes into the
+scan). A bundled pass that raises is resolved one request at a time, so
+one bad request fails only itself.
 
 Metric kinds (reference enum core/metric_function_types.py:26-112):
   - ``agg``     -> returns an unevaluated Spark Column aggregate; bundled.
@@ -66,8 +75,42 @@ def domain_col(domain: "Domain", ctx: "MetricResolver | None" = None) -> Column:
     """
     c = F.col(domain.column)
     if ctx is not None and domain.column in ctx.float_cols:
-        return F.when(~F.isnan(c), c)
-    return c
+        c = F.when(~F.isnan(c), c)
+    return in_domain(c, ctx)
+
+
+def in_domain(c: Column, ctx: Any = None) -> Column:
+    """``c`` on the rows of the aggregate's domain and NULL elsewhere.
+
+    An aggregate normally runs over its domain frame (``Domain.apply``),
+    where every row belongs to the domain. When it rides a sample pass it
+    runs over the whole row set instead, and ``ctx.where`` holds the
+    domain predicate (see :class:`RowSetContext`): the aggregate becomes a
+    conditional aggregate, e.g. ``count(when(pred, 1))``."""
+    where = getattr(ctx, "where", None)
+    return c if where is None else F.when(where, c)
+
+
+def domain_predicate(domain: "Domain") -> Column | None:
+    """The domain's row filters (row_condition AND filter_conditions) as
+    one Column, or None for a domain that keeps every row of its row set."""
+    preds = [domain.row_condition] if domain.row_condition else []
+    preds += list(domain.filter_conditions)
+    out = None
+    for p in preds:
+        out = F.expr(p) if out is None else (out & F.expr(p))
+    return out
+
+
+@dataclass(frozen=True)
+class RowSetContext:
+    """Aggregate context over a domain's whole row set (the table, or its
+    exploded spans) rather than the filtered domain frame: ``where`` is the
+    domain predicate that :func:`in_domain` applies."""
+
+    float_cols: frozenset[str]
+    dtypes: dict[str, str]
+    where: Column | None
 
 
 @dataclass(frozen=True)
@@ -178,6 +221,25 @@ class MetricSpec:
     derived_fn: Callable[..., Any] | None = None
     # deps: (metric_cfg) -> dict[dep_key, MetricConfiguration]
     deps_fn: Callable[[MetricConfiguration], dict[str, MetricConfiguration]] | None = None
+    # eager only: (metric_cfg) -> the SharedPass that resolves this request
+    # together with the other ready requests of the same pass, or None
+    shared_pass: Callable[[MetricConfiguration], "SharedPass | None"] | None = None
+
+
+@dataclass(frozen=True)
+class SharedPass:
+    """One Spark query that resolves every ready request naming the same
+    ``(run, key)``: ``run(resolver, requests, riders)`` returns
+    ``{metric id: value}`` (an exception as the value fails that request
+    alone). A pass that ``reads_row_set`` reads every row of the row set
+    ``key`` (a ``Domain.explode_col``), so the ready aggregates over that
+    row set ride it as an Observation (``riders``) instead of costing
+    their own ``df.agg`` job; a rider missing from the result goes back
+    to its ``df.agg`` bundle."""
+
+    run: Callable[..., dict[tuple, Any]]
+    key: Any
+    reads_row_set: bool = False
 
 
 _REGISTRY: dict[str, MetricSpec] = {}
@@ -205,9 +267,14 @@ def agg_metric(name: str):
     return deco
 
 
-def eager_metric(name: str, deps_fn=None):
+def eager_metric(name: str, deps_fn=None, shared_pass=None):
     def deco(fn):
-        register_metric(MetricSpec(name=name, kind="eager", eager_fn=fn, deps_fn=deps_fn))
+        register_metric(
+            MetricSpec(
+                name=name, kind="eager", eager_fn=fn, deps_fn=deps_fn,
+                shared_pass=shared_pass,
+            )
+        )
         return fn
 
     return deco
@@ -229,11 +296,29 @@ def _is_transient(e: Exception) -> bool:
     we classify: analysis/type/value errors are deterministic and fail the
     same way every time, so only infrastructure-flavored failures retry)."""
     try:  # pyspark exception taxonomy (Spark 3.4+)
-        from pyspark.errors import AnalysisException, PySparkException  # noqa: PLC0415
+        from pyspark.errors import (  # noqa: PLC0415
+            AnalysisException,
+            ArithmeticException,
+            ArrayIndexOutOfBoundsException,
+            DateTimeException,
+            IllegalArgumentException,
+            PySparkException,
+        )
 
-        if isinstance(e, AnalysisException):
+        # analysis errors, and ANSI run-time errors of the data itself
+        # (CAST_INVALID_INPUT, DIVIDE_BY_ZERO, INVALID_ARRAY_INDEX, ...)
+        if isinstance(
+            e,
+            (
+                AnalysisException,
+                ArithmeticException,
+                ArrayIndexOutOfBoundsException,
+                DateTimeException,
+                IllegalArgumentException,
+            ),
+        ):
             return False
-        if isinstance(e, PySparkException) and not isinstance(e, AnalysisException):
+        if isinstance(e, PySparkException):
             # runtime Spark failures (executor loss, fetch failure, ...)
             return True
     except ImportError:  # pragma: no cover
@@ -293,6 +378,8 @@ class MetricResolver:
         def add(cfg: MetricConfiguration) -> None:
             if cfg.id in self.cache or cfg.id in pending:
                 return
+            if cfg.id in self.failed and not _is_transient(self.failed[cfg.id]):
+                return  # an earlier resolve recorded a failure that would recur
             pending[cfg.id] = cfg
             spec = get_metric_spec(cfg.name)
             if spec.deps_fn:
@@ -308,9 +395,13 @@ class MetricResolver:
             self.failed[cfg.id] = e
             pending.pop(cfg.id, None)
 
+        def done(cfg: MetricConfiguration, value: Any) -> None:
+            self.cache[cfg.id] = value
+            pending.pop(cfg.id, None)
+
         # iterate: compute everything whose deps are satisfied, bundling aggs
         while pending:
-            ready_aggs: dict[str, list[MetricConfiguration]] = {}
+            ready_aggs: list[MetricConfiguration] = []
             ready_other: list[MetricConfiguration] = []
             for cfg in list(pending.values()):
                 spec = get_metric_spec(cfg.name)
@@ -323,7 +414,7 @@ class MetricResolver:
                     continue
                 if all(d.id in self.cache for d in deps.values()):
                     if spec.kind == "agg":
-                        ready_aggs.setdefault(cfg.domain.compute_id, []).append(cfg)
+                        ready_aggs.append(cfg)
                     else:
                         ready_other.append(cfg)
             if not pending:
@@ -334,8 +425,43 @@ class MetricResolver:
                     f"{[c.name for c in pending.values()]}"
                 )
 
+            passes: dict[tuple, tuple[SharedPass, list[MetricConfiguration]]] = {}
+            singles: list[MetricConfiguration] = []
+            alone: dict[tuple, SharedPass] = {}  # failed pass: one request each
+            for cfg in ready_other:
+                spec = get_metric_spec(cfg.name)
+                sp = spec.shared_pass(cfg) if spec.shared_pass else None
+                if sp is None:
+                    singles.append(cfg)
+                else:
+                    passes.setdefault((sp.run, sp.key), (sp, []))[1].append(cfg)
+
+            # --- shared passes: ONE query per row set / uniqueness domain ---
+            for sp, cfgs in passes.values():
+                riders: list[MetricConfiguration] = []
+                if sp.reads_row_set:
+                    riders = [c for c in ready_aggs if c.domain.explode_col == sp.key]
+                    ready_aggs = [c for c in ready_aggs if c.domain.explode_col != sp.key]
+                try:
+                    values = sp.run(self, cfgs, riders)
+                except Exception:  # noqa: BLE001 — isolate: one at a time
+                    singles += cfgs
+                    alone.update((cfg.id, sp) for cfg in cfgs)
+                    ready_aggs += riders
+                    continue
+                for cfg in cfgs + riders:
+                    if cfg.id not in values:  # a rider the pass could not carry
+                        ready_aggs.append(cfg)
+                    elif isinstance(values[cfg.id], Exception):
+                        fail(cfg, values[cfg.id])
+                    else:
+                        done(cfg, values[cfg.id])
+
             # --- bundled aggregate pass: ONE Spark job per compute domain ---
-            for compute_id, cfgs in ready_aggs.items():
+            bundles: dict[str, list[MetricConfiguration]] = {}
+            for cfg in ready_aggs:
+                bundles.setdefault(cfg.domain.compute_id, []).append(cfg)
+            for cfgs in bundles.values():
                 ddf = self.domain_df(cfgs[0].domain)
                 aliased, good = [], []
                 for cfg in cfgs:
@@ -353,24 +479,25 @@ class MetricResolver:
                 except Exception:  # noqa: BLE001 — isolate the bad aggregate
                     for i, cfg in enumerate(good):
                         try:
-                            row1 = ddf.agg(aliased[i]).collect()[0]
-                            self.cache[cfg.id] = row1[f"m_{i}"]
-                            pending.pop(cfg.id, None)
+                            done(cfg, ddf.agg(aliased[i]).collect()[0][f"m_{i}"])
                         except Exception as e:  # noqa: BLE001
                             fail(cfg, e)
                     continue
                 for i, cfg in enumerate(good):
-                    self.cache[cfg.id] = row[f"m_{i}"]
-                    pending.pop(cfg.id, None)
+                    done(cfg, row[f"m_{i}"])
 
-            # --- eager / derived metrics ---
-            for cfg in ready_other:
+            # --- eager / derived metrics, one at a time ---
+            for cfg in singles:
                 spec = get_metric_spec(cfg.name)
                 value: Any
                 last_err: Exception | None = None
                 for _attempt in range(self.MAX_RETRIES):
                     try:
-                        if spec.kind == "eager":
+                        if cfg.id in alone:
+                            value = alone[cfg.id].run(self, [cfg], [])[cfg.id]
+                            if isinstance(value, Exception):
+                                raise value
+                        elif spec.kind == "eager":
                             value = spec.eager_fn(
                                 self, self.domain_df(cfg.domain), cfg, self.cache
                             )
@@ -389,8 +516,7 @@ class MetricResolver:
                 if last_err is not None:
                     fail(cfg, last_err)
                     continue
-                self.cache[cfg.id] = value
-                pending.pop(cfg.id, None)
+                done(cfg, value)
 
         return self.cache
 
@@ -408,13 +534,13 @@ class MetricResolver:
 @agg_metric("table.row_count")
 def _row_count(domain: Domain, cfg: MetricConfiguration, ctx=None) -> Column:
     # reference: table_metrics/table_row_count.py:58-66 (F.count(F.lit(1)))
-    return F.count(F.lit(1))
+    return F.count(in_domain(F.lit(1), ctx))
 
 
 @agg_metric("column.null_count")
 def _null_count(domain: Domain, cfg: MetricConfiguration, ctx=None) -> Column:
     # NaN counts as missing on float columns (pandas parity, see domain_col)
-    return F.count(F.lit(1)) - F.count(domain_col(domain, ctx))
+    return F.count(in_domain(F.lit(1), ctx)) - F.count(domain_col(domain, ctx))
 
 
 @agg_metric("column.nonnull_count")
@@ -489,12 +615,12 @@ def _median(domain: Domain, cfg: MetricConfiguration, ctx=None) -> Column:
 @agg_metric("column_values.length.min")
 def _len_min(domain: Domain, cfg: MetricConfiguration, ctx=None) -> Column:
     # reference: column_values_length_min.py:31-32
-    return F.min(F.length(F.col(domain.column)))
+    return F.min(in_domain(F.length(F.col(domain.column)), ctx))
 
 
 @agg_metric("column_values.length.max")
 def _len_max(domain: Domain, cfg: MetricConfiguration, ctx=None) -> Column:
-    return F.max(F.length(F.col(domain.column)))
+    return F.max(in_domain(F.length(F.col(domain.column)), ctx))
 
 
 @derived_metric(

@@ -100,7 +100,7 @@ def _ref_unexpected_values(resolver, ddf: DataFrame, cfg: MetricConfiguration, _
         salt_factor=int(cfg.kw("salt_factor", DEFAULT_SALT_FACTOR)),
     ).select(F.col(cfg.domain.column).alias("v"))
     limit = cfg.kw("limit")
-    rows = (out.limit(int(limit)) if limit else out).collect()
+    rows = (out.limit(int(limit)) if limit is not None else out).collect()
     return [r["v"] for r in rows]
 
 
@@ -130,12 +130,11 @@ class ReferentialExpectation(Expectation):
                 "referential.unexpected_count", domain, self._vk(cfg)
             ),
         }
-        if rf["result_format"] in ("BASIC", "SUMMARY", "COMPLETE"):
-            limit = (
-                None
-                if rf["result_format"] == "COMPLETE"
-                else rf["partial_unexpected_count"]
-            )
+        limit = (
+            None if rf["result_format"] == "COMPLETE" else rf["partial_unexpected_count"]
+        )
+        # a sample limit of 0 requests no sample (reference limit(0))
+        if rf["result_format"] in ("BASIC", "SUMMARY", "COMPLETE") and limit != 0:
             reqs["unexpected_values"] = MetricConfiguration(
                 "referential.unexpected_values", domain, self._vk(cfg, limit=limit)
             )

@@ -2066,10 +2066,14 @@ def embedding_decontaminate(
     vector crosses the JVM/Python boundary once, nothing shuffles, and
     the output is corpus-sized (narrow plan end-to-end).
     ``assign_impl="fold"`` is the pure-JVM replay path (broadcast join +
-    groupBy max over the HOF cosine) used by the oracle gate. The eval
-    side is driver-collected and capped at MAX_CLOSURE_QUERIES
+    groupBy max over the HOF cosine) used by the oracle gate. The arrow
+    eval side is driver-collected and capped at MAX_CLOSURE_QUERIES
     (benchmarks are dimension-sized); for eval sets beyond the cap,
-    pre-reduce them (e.g. cluster-representative vectors via kmeans).
+    pre-reduce them (e.g. cluster-representative vectors via kmeans) or
+    use the fold path. Eval ids need not be unique: every eval vector
+    counts. Corpus ids must be unique: the fold path groups by
+    ``id_col``, so duplicate corpus ids collapse to one row there while
+    the arrow path keeps one row per input row.
 
     Scale: at 10^12 corpus rows this is a single pruned-scan map pass —
     no exchange in the plan; throughput is the gemm (dim × |eval| flops
@@ -2079,10 +2083,17 @@ def embedding_decontaminate(
         import numpy as np  # noqa: PLC0415
         import pyarrow as pa  # noqa: PLC0415
 
-        qmap = _collect_query_map(eval_set, id_col, vec_col)
-        if not qmap:
+        # a list, not an id-keyed map: eval vectors sharing an id all count
+        rows = eval_set.select(vec_col).limit(MAX_CLOSURE_QUERIES + 1).collect()
+        if len(rows) > MAX_CLOSURE_QUERIES:
+            raise ValueError(
+                "embedding_decontaminate: assign_impl='arrow' collects the eval "
+                f"set to the driver and is capped at {MAX_CLOSURE_QUERIES} "
+                "vectors; pre-reduce the eval set or use assign_impl='fold'"
+            )
+        if not rows:
             raise ValueError("embedding_decontaminate: eval_set is empty")
-        qmat = np.asarray(list(qmap.values()), dtype=np.float64)
+        qmat = np.asarray([r[0] for r in rows], dtype=np.float64)
         qnorm = np.sqrt(np.einsum("ij,ij->i", qmat, qmat))
         dim = qmat.shape[1]
         id_dtype = dict(corpus.dtypes)[id_col]

@@ -173,7 +173,9 @@ def span_violations_flat(
     Three flat row predicates, NULL never flags: printable ``text`` on
     text spans, kind/payload consistency (text XOR media_ref by kind,
     kind in ``KNOWN_KINDS``), and ``offset > prev_offset`` against the
-    immediate previous span."""
+    immediate previous span. A span with a NULL ``kind`` is missing, not
+    unexpected — GX's map expectations skip NULLs the same way — so it
+    is never flagged by the kind/payload check; the DuckDB oracles agree."""
     text_bad = (
         (F.col("kind") == "text")
         & F.col("text").isNotNull()

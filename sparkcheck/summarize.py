@@ -6,8 +6,15 @@ Two halves:
    ``map.unexpected_count`` joins the fused agg pass as
    ``sum(when(unexpected, 1))`` (reference:
    map_condition_auxilliary_methods.py:625-640 — zero extra Spark job for
-   COLUMN domains); window conditions and sample collection run as their
-   own filter jobs (reference :643-700).
+   COLUMN domains). The reference collects unexpected-value samples with
+   one action per expectation (:337-384); here every sample of a row-local
+   condition over one row set comes from one sample pass
+   (``_sample_pass``; an unlimited one also carries that row set's
+   aggregates), and a uniqueness check's count and sample from one
+   uniqueness pass (``_uniqueness_pass``). Other window conditions, row
+   extraction (``unexpected_rows``/``unexpected_index_list``) and a
+   pass's failure-isolation fallback run as their own filter jobs
+   (reference :643-700).
 
 2. ``format_map_output`` — field-by-field port of the reference's result
    contract (expectations/expectation.py:3465-3609 ``_format_map_output``):
@@ -27,16 +34,21 @@ from __future__ import annotations
 from collections import Counter
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from .conditions import get_condition
 from .metrics import (
     Domain,
     MetricConfiguration,
+    RowSetContext,
+    SharedPass,
     agg_metric,
+    domain_predicate,
     eager_metric,
     float_columns,
+    get_metric_spec,
+    in_domain,
 )
 
 
@@ -71,41 +83,207 @@ def _unexpected_count_agg(domain: Domain, cfg: MetricConfiguration, ctx=None) ->
     # joins the fused df.agg pass — reference :625-640
     fc = ctx.float_cols if ctx is not None else frozenset()
     dt = ctx.dtypes if ctx is not None else None
-    return F.sum(F.when(unexpected_mask(cfg, fc, dt), 1).otherwise(0))
+    flag = F.when(unexpected_mask(cfg, fc, dt), 1).otherwise(0)
+    return F.sum(in_domain(flag, ctx))
 
 
-@eager_metric("map.unexpected_count.window")
+_UNIQUENESS = ("column_values.unique", "compound_columns.unique")
+
+
+def _shared_pass(cfg: MetricConfiguration) -> SharedPass | None:
+    """The pass that resolves a sample or window-count request together
+    with the other ready requests: the uniqueness pass of its domain for
+    the two uniqueness conditions, the sample pass of its row set for a
+    sample of any other row-local condition, else None (own query)."""
+    name, _ = condition_kwargs(cfg)
+    if name in _UNIQUENESS:
+        return SharedPass(_uniqueness_pass, (cfg.domain.domain_id, name))
+    if cfg.name == "map.unexpected_values" and not get_condition(name).is_window:
+        return SharedPass(_sample_pass, cfg.domain.explode_col, reads_row_set=True)
+    return None
+
+
+def _value_columns(dom: Domain) -> list[str]:
+    if dom.column is not None:
+        return [dom.column]
+    return list(dom.column_list) if dom.column_list else [dom.column_a, dom.column_b]
+
+
+def _aliases(cfgs: list[MetricConfiguration]) -> dict[str, str]:
+    """Plain aliases for the value columns of ``cfgs`` (an accessor such as
+    ``__span.kind`` would otherwise come back named ``kind``)."""
+    cols = dict.fromkeys(c for cfg in cfgs for c in _value_columns(cfg.domain))
+    return {c: f"__v{k}" for k, c in enumerate(cols)}
+
+
+def _sample_value(dom: Domain, row: Any, alias: dict[str, str]) -> Any:
+    """One EVR sample value: the column value, a dict of a multicolumn
+    domain (reference compound-unique fixtures: {"b": 1, "c": 1}), or the
+    [A, B] pair (reference pair fixtures: [[6.0, null], ...])."""
+    if dom.column is not None:
+        return row[alias[dom.column]]
+    if dom.column_list:
+        return {c: row[alias[c]] for c in dom.column_list}
+    return [row[alias[dom.column_a]], row[alias[dom.column_b]]]
+
+
+def _sample_pass(resolver, cfgs: list[MetricConfiguration], riders) -> dict:
+    """Every ready sample request over one row set (a ``Domain.explode_col``)
+    in ONE query.
+
+    The query numbers the rows (``__pos``, partition order), builds one
+    flag per request — its unexpected mask on the rows of its domain —
+    posexplodes the flag array, keeps the hits and, unless a request is
+    unlimited (COMPLETE), keeps ``row_number() over (partition by __i
+    order by __pos) <= limit``: Spark plans that as a partial
+    WindowGroupLimit below the exchange, so each task ships at most
+    ``limit`` rows per request. The driver sorts each request's hits by
+    ``__pos``: it gets its first ``limit`` unexpected rows in partition
+    order, exactly what ``filter(mask).limit(n).collect()`` returns.
+
+    An unlimited pass has no exchange and reads every row of the row set
+    in its result stage, so the ready aggregates over that row set ride
+    it as an Observation — filtered domains as conditional aggregates
+    (see ``metrics.in_domain``). Spark applies a result task's
+    accumulator update once; a map task's update is applied again each
+    time a fetch failure or a lost executor re-runs it, so a limited
+    pass, whose rows are read below the rank window's exchange, carries
+    no riders. A request whose mask or aggregate cannot be built gets
+    its exception as its value; riders left out of the result go back
+    to their ``df.agg`` bundle."""
+    fc, dt = resolver.float_cols, resolver.dtypes
+    out: dict[tuple, Any] = {}
+    flags, sampled = [], []
+    for cfg in cfgs:
+        try:
+            mask = unexpected_mask(cfg, fc, dt)
+        except Exception as e:  # noqa: BLE001
+            out[cfg.id] = e
+            continue
+        pred = domain_predicate(cfg.domain)  # the mask never sees other rows
+        flags.append(F.coalesce(mask if pred is None else F.when(pred, mask), F.lit(False)))
+        sampled.append(cfg)
+    if not sampled:  # no mask could be built: nothing to read rows for
+        raise out[cfgs[0].id]
+    limits = [cfg.kw("limit") for cfg in sampled]
+    ranked = None not in limits
+
+    base = resolver.domain_df(Domain(explode_col=cfgs[0].domain.explode_col))
+    aggs, agg_ids = [], []
+    for cfg in [] if ranked else riders:
+        ctx = RowSetContext(fc, dt, domain_predicate(cfg.domain))
+        try:
+            aggs.append(get_metric_spec(cfg.name).agg_fn(cfg.domain, cfg, ctx))
+        except Exception as e:  # noqa: BLE001 — e.g. type guards
+            out[cfg.id] = e
+            continue
+        agg_ids.append(cfg.id)
+    obs = None
+    if aggs:
+        obs = Observation()
+        try:
+            base = base.observe(obs, *[a.alias(f"m_{k}") for k, a in enumerate(aggs)])
+        except Exception:  # noqa: BLE001 — e.g. DISTINCT cannot be observed
+            obs, agg_ids = None, []  # the riders keep their df.agg bundle
+
+    alias = _aliases(sampled)
+    hits = (
+        base.withColumn("__pos", F.monotonically_increasing_id())
+        .select(
+            "__pos",
+            *[F.col(c).alias(a) for c, a in alias.items()],
+            F.posexplode(F.array(*flags)).alias("__i", "__hit"),
+        )
+        .where(F.col("__hit"))
+    )
+    if ranked:
+        rank = F.row_number().over(Window.partitionBy("__i").orderBy("__pos"))
+        hits = hits.withColumn("__rn", rank).where(F.col("__rn") <= max(limits))
+    by_request: dict[int, list] = {}
+    for r in hits.select("__i", "__pos", *alias.values()).collect():
+        by_request.setdefault(r["__i"], []).append(r)
+    for i, cfg in enumerate(sampled):
+        mine = sorted(by_request.get(i, []), key=lambda r: r["__pos"])
+        out[cfg.id] = [
+            _sample_value(cfg.domain, r, alias) for r in mine[: cfg.kw("limit")]
+        ]
+    if obs is not None:
+        got = obs.get
+        for k, mid in enumerate(agg_ids):
+            out[mid] = got[f"m_{k}"]
+    return out
+
+
+def _uniqueness_pass(resolver, cfgs: list[MetricConfiguration], riders) -> dict:
+    """Count and sample of one uniqueness domain from ONE query.
+
+    With a sample requested, the query projects the key columns and
+    ``__pos`` (partition order), keeps ``count(1) over (partition by
+    keys) > 1``, and observes the count of those rows while
+    ``orderBy(__pos).limit(n)`` — a top-N with no exchange of its own, so
+    the Observation is in the result stage — collects the first
+    duplicated rows in partition order. The window shuffles every (key,
+    ``__pos``) pair and sorts a key's rows in one task. Against the
+    skew-safe pair of queries — a groupBy count, then a left-semi-join
+    sample — ``validate_df`` of one BASIC uniqueness check over 2M
+    parquet rows on 4 cores took 1.2-1.5 vs 2.7-4.4 s with 7% of rows
+    duplicated, 1.1-1.3 vs 1.5-1.7 s with one key on half the rows,
+    1.2-1.3 vs 1.3-1.5 s with a compound key's NULL group on half the
+    rows, and 1.1-1.2 vs 0.75-0.84 s with 100 distinct keys (where the
+    groupBy's map-side combine wins). Observing the semi-join's output to
+    make that one query is not safe: under adaptive execution a top-N
+    over a join re-planned from sort-merge to broadcast ran the observed
+    plan twice and doubled the count (a 5-row frame). A count-only
+    request takes the groupBy count. A single-column key skips NULLs (a
+    NULL is missing, not a duplicate); a compound key groups NULLs
+    together, as GX's window does."""
+    dom = cfgs[0].domain
+    name, _ = condition_kwargs(cfgs[0])
+    alias = _aliases(cfgs[:1])
+    keys = list(alias.values())
+    ddf = resolver.domain_df(dom)
+    if name == "column_values.unique":
+        ddf = ddf.where(F.col(dom.column).isNotNull())
+    keyed = ddf.select(*[F.col(c).alias(a) for c, a in alias.items()])
+    samples = [c for c in cfgs if c.name == "map.unexpected_values"]
+    out: dict[tuple, Any] = {}
+    if samples:
+        dup = (
+            keyed.withColumn("__pos", F.monotonically_increasing_id())
+            .withColumn("__n", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
+            .where(F.col("__n") > 1)
+        )
+        obs = Observation()
+        q = dup.observe(obs, F.count(F.lit(1)).alias("n"))
+        limits = [c.kw("limit") for c in samples]
+        # unlimited: sort on the driver — a global orderBy would run the
+        # observed plan twice (its range-partition sampling job) and
+        # double the count
+        if None in limits:
+            rows = sorted(q.collect(), key=lambda r: r["__pos"])
+        else:
+            rows = q.orderBy("__pos").limit(max(limits)).collect()
+        n = obs.get["n"]
+        for cfg in samples:
+            out[cfg.id] = [
+                _sample_value(dom, r, alias) for r in rows[: cfg.kw("limit")]
+            ]
+    else:
+        groups = keyed.groupBy(*keys).count().where(F.col("count") > 1)
+        n = groups.agg(F.sum("count")).collect()[0][0] or 0
+    for cfg in cfgs:
+        if cfg.name == "map.unexpected_count.window":
+            out[cfg.id] = int(n)
+    return out
+
+
+@eager_metric("map.unexpected_count.window", shared_pass=_shared_pass)
 def _unexpected_count_window(resolver, ddf: DataFrame, cfg: MetricConfiguration, _):
     # window conditions can't live inside agg() — reference :643-668.
-    # Uniqueness counts take the groupBy-count form instead of the window
-    # form: the window shuffles FULL rows (at 10^12 docs that includes the
-    # spans payload), while groupBy shuffles only the key column with
-    # map-side combine — same result, orders of magnitude less shuffle I/O,
-    # and AQE skew-split applies to the aggregation.
+    # Uniqueness counts come from the uniqueness pass, not from here.
     name, _kw = condition_kwargs(cfg)
     if name in ("column_values.increasing", "column_values.decreasing"):
         _guard_global_window(ddf, name, _kw)
-    if name == "column_values.unique":
-        col = cfg.domain.column
-        dup = (
-            ddf.where(F.col(col).isNotNull())
-            .groupBy(col)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .where(F.col("__n") > 1)
-            .agg(F.sum("__n"))
-            .collect()[0][0]
-        )
-        return int(dup or 0)
-    if name == "compound_columns.unique":
-        cols = list(cfg.domain.column_list)
-        dup = (
-            ddf.groupBy(*cols)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .where(F.col("__n") > 1)
-            .agg(F.sum("__n"))
-            .collect()[0][0]
-        )
-        return int(dup or 0)
     return ddf.withColumn(
         "__unexpected", unexpected_mask(cfg, resolver.float_cols, resolver.dtypes)
     ).filter(F.col("__unexpected")).count()
@@ -198,27 +376,17 @@ def _filter_unexpected(
     return filter_unexpected_rows(ddf, name, cfg.domain, kw, float_cols, dtypes)
 
 
-@eager_metric("map.unexpected_values")
+@eager_metric("map.unexpected_values", shared_pass=_shared_pass)
 def _unexpected_values(resolver, ddf: DataFrame, cfg: MetricConfiguration, _):
-    # reference: column_map_condition_auxilliary_methods.py:337-384
+    # reference: column_map_condition_auxilliary_methods.py:337-384. Row-
+    # local and uniqueness conditions are sampled by their shared pass;
+    # only the other window conditions reach this filter + limit.
     limit = cfg.kw("limit")
+    alias = _aliases([cfg])
     out = _filter_unexpected(ddf, cfg, resolver.float_cols, resolver.dtypes)
-    dom = cfg.domain
-    if dom.column is not None:
-        out = out.select(F.col(dom.column).alias("v"))
-        rows = (out.limit(int(limit)) if limit else out).collect()
-        return [r["v"] for r in rows]
-    if dom.column_list:
-        # multicolumn domains: dicts of the domain columns (reference
-        # multicolumn fixtures, e.g. compound unique: {"b": 1, "c": 1})
-        out = out.select(*dom.column_list)
-        rows = (out.limit(int(limit)) if limit else out).collect()
-        return [r.asDict() for r in rows]
-    # pair domains: [A, B] value lists (reference pair fixtures, e.g.
-    # expect_column_pair_values_to_be_equal: [[6.0, null], ...])
-    out = out.select(dom.column_a, dom.column_b)
-    rows = (out.limit(int(limit)) if limit else out).collect()
-    return [[r[0], r[1]] for r in rows]
+    out = out.select(*[F.col(c).alias(a) for c, a in alias.items()])
+    rows = (out.limit(int(limit)) if limit is not None else out).collect()
+    return [_sample_value(cfg.domain, r, alias) for r in rows]
 
 
 @eager_metric("map.unexpected_index_list")
@@ -236,7 +404,7 @@ def _unexpected_index_list(resolver, ddf: DataFrame, cfg: MetricConfiguration, _
     )
     sel = list(dict.fromkeys(index_cols + value_cols))
     out = _filter_unexpected(ddf, cfg, resolver.float_cols, resolver.dtypes).select(*sel)
-    rows = (out.limit(int(limit)) if limit else out).collect()
+    rows = (out.limit(int(limit)) if limit is not None else out).collect()
     return [r.asDict() for r in rows]
 
 
@@ -248,7 +416,7 @@ def _unexpected_rows(resolver, ddf: DataFrame, cfg: MetricConfiguration, _):
     surfaced in the EVR by expectation.py:3543-3548)."""
     limit = cfg.kw("limit")
     out = _filter_unexpected(ddf, cfg, resolver.float_cols, resolver.dtypes)
-    rows = (out.limit(int(limit)) if limit else out).collect()
+    rows = (out.limit(int(limit)) if limit is not None else out).collect()
     return [r.asDict(recursive=True) for r in rows]
 
 

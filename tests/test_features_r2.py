@@ -136,6 +136,25 @@ def test_include_unexpected_rows(spark):
     assert len(rep3["results"][0]["result"]["unexpected_rows"]) == 1
 
 
+def test_partial_unexpected_count_zero_returns_no_rows(spark):
+    """A sample limit of 0 returns no values and no rows (reference
+    ``limit(0)``); only an unset limit (COMPLETE) returns every row."""
+    df = spark.createDataFrame([(None,), (None,), (None,), ("a",)], "v string")
+    suite = ExpectationSuite("z", [ExpectationConfiguration(
+        "expect_column_values_to_not_be_null", {"column": "v"})])
+    res = validate_df(df, suite, result_format={
+        "result_format": "BASIC", "partial_unexpected_count": 0,
+        "include_unexpected_rows": True,
+    })["results"][0]["result"]
+    assert res["unexpected_count"] == 3
+    assert res["partial_unexpected_list"] == []
+    assert res["unexpected_rows"] == []
+    full = validate_df(df, suite, result_format={
+        "result_format": "COMPLETE", "include_unexpected_rows": True,
+    })["results"][0]["result"]
+    assert len(full["unexpected_rows"]) == 3
+
+
 # --- legacy multicolumn unique + ignore_row_if -----------------------------
 
 

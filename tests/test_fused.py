@@ -14,7 +14,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from sparkcheck import ExpectationSuite, validate_df
+from sparkcheck import ExpectationConfiguration, ExpectationSuite, validate_df
 from sparkcheck.fused import observable_requests, validate_and_extract
 from sparkcheck.metrics import MetricResolver
 from sparkcheck.runner import CheckpointRunner, ParquetStore
@@ -222,3 +222,118 @@ def test_runner_profile_states(spark, docs, tmp_path):
     assert merged["mean"] == pytest.approx(direct["m"], abs=1e-6)
     assert merged["stddev_samp"] == pytest.approx(direct["s"], abs=1e-6)
     assert store.read(spark, "column_states").count() == 4
+
+
+def _ingest_suite():
+    """A micro-batch ingest suite: uniqueness, a row_condition map check,
+    categorical KL, mean/stdev/quantiles and the row count."""
+    s = _suite()
+    s.add("expect_column_values_to_be_between", column="n_spans",
+          min_value=1, max_value=16, mostly=0.9,
+          row_condition='doc_id LIKE "hot%"', condition_parser="spark")
+    s.add("expect_column_kl_divergence_to_be_less_than", column="n_spans",
+          partition_object={"values": list(range(17)), "weights": [1 / 17] * 17},
+          threshold=0.05)
+    s.add("expect_column_mean_to_be_between", column="n_spans",
+          min_value=0, max_value=20)
+    s.add("expect_column_stdev_to_be_between", column="n_spans",
+          min_value=0, max_value=20)
+    s.add("expect_column_quantile_values_to_be_between", column="n_spans",
+          quantile_ranges={"quantiles": [0.25, 0.5, 0.75],
+                           "value_ranges": [[0, 20], [0, 20], [0, 20]]})
+    return s
+
+
+@pytest.fixture(scope="module")
+def unit(spark, docs):
+    """A two-partition commit unit with an n_spans column."""
+    return (docs.repartition(2).withColumn("n_spans", F.size("spans"))
+            .localCheckpoint())
+
+
+def _last_job_id(spark):
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+def test_unit_job_count(spark, unit):
+    """A commit unit validates and lands its violation rows in at most
+    seven Spark jobs: the append (carrying the observe node), the sample
+    pass (2), the uniqueness pass (2) and the row_condition domain's
+    aggregate bundle (2)."""
+    suite = _ingest_suite()
+    before = _last_job_id(spark)
+    rep, _, _ = validate_and_extract(unit, suite, span_violations,
+                                     result_format="BASIC")
+    jobs = _last_job_id(spark) - before
+    assert all(not r["exception_info"]["raised_exception"] for r in rep["results"])
+    assert jobs <= 7, jobs
+
+
+def test_runtime_row_condition_error_is_isolated(spark, unit):
+    """A row_condition that raises at run time (ANSI cast) fails only its
+    own EVR: every other EVR equals validate_df of the suite without it, and
+    the violation rows still land."""
+    bad = {"expectation_type": "expect_column_values_to_match_regex",
+           "kwargs": {"column": "doc_id", "regex": "^hot", "mostly": 0.5,
+                      "row_condition": "CAST(doc_id AS INT) > 0",
+                      "condition_parser": "spark"}}
+    suite = _ingest_suite()
+    suite.expectations.insert(2, ExpectationConfiguration.from_dict(bad))
+    before = _last_job_id(spark)
+    rep, rows, _ = validate_and_extract(unit, suite, span_violations,
+                                        result_format="BASIC")
+    jobs = _last_job_id(spark) - before
+    evr = rep["results"][2]
+    assert evr["exception_info"]["raised_exception"]
+    assert evr["success"] is False
+    ref = validate_df(unit, _ingest_suite(), result_format="BASIC")["results"]
+    assert _norm(rep["results"][:2] + rep["results"][3:]) == _norm(ref)
+    assert sorted(map(_vkey, rows.collect())) == sorted(
+        map(_vkey, span_violations(unit).collect()))
+    # every failure is paid once: the seven jobs of the suite without it,
+    # the failed sample pass, one pass per request after it (3 x 2 + 1),
+    # the failed bundle and its three aggregates one at a time — and
+    # validate() re-runs none of what the prefetch thread saw fail
+    assert jobs <= 17, jobs
+
+
+def test_only_unlimited_sample_pass_carries_riders(spark, unit):
+    """Aggregates ride a sample pass only when its Observation is in the
+    result stage: a limited pass reads its rows below the rank window's
+    exchange, where a re-run map task would apply its update twice."""
+    from sparkcheck.expectations import get_expectation
+    from sparkcheck.suite import parse_result_format
+    from sparkcheck.summarize import _sample_pass
+
+    cfg = ExpectationConfiguration.from_dict(
+        {"expectation_type": "expect_column_values_to_match_regex",
+         "kwargs": {"column": "doc_id", "regex": "^hot", "mostly": 0.5,
+                    "row_condition": 'doc_id LIKE "%1%"',
+                    "condition_parser": "spark"}})
+    exp = get_expectation(cfg.expectation_type)
+    for rf, carried in (("BASIC", False), ("COMPLETE", True)):
+        reqs = exp.metric_requests(cfg, parse_result_format(rf))
+        rider = reqs["unexpected_count"]
+        out = _sample_pass(MetricResolver(unit), [reqs["unexpected_values"]], [rider])
+        assert (rider.id in out) is carried
+        if carried:
+            want = MetricResolver(unit).resolve([rider])[rider.id]
+            assert out[rider.id] == want
+
+
+@pytest.mark.parametrize("n_values", [5, 18])
+def test_categorical_kl_paths_agree(spark, unit, monkeypatch, n_values):
+    """Categorical KL reads the same counts from conditional aggregates
+    (partitions up to CATEGORICAL_AGG_MAX_VALUES) and from value_counts
+    (larger partitions)."""
+    from sparkcheck import distribution
+
+    s = ExpectationSuite("kl")
+    s.add("expect_column_kl_divergence_to_be_less_than", column="n_spans",
+          partition_object={"values": list(range(n_values)),
+                            "weights": [1 / n_values] * n_values},
+          threshold=0.5)
+    default = validate_df(unit, s, result_format="BASIC")
+    other_path = 10**6 if n_values > distribution.CATEGORICAL_AGG_MAX_VALUES else 0
+    monkeypatch.setattr(distribution, "CATEGORICAL_AGG_MAX_VALUES", other_path)
+    assert _norm(validate_df(unit, s, result_format="BASIC")) == _norm(default)

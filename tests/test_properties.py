@@ -339,6 +339,14 @@ _SUITE_POOL = [
      {"column": "n_spans", "min_value": 0, "max_value": 3}),
     ("expect_column_values_to_be_between",
      {"column": "n_spans", "min_value": 0, "max_value": 3, "mostly": 0.5}),
+    # categorical KL: values outside 0..4 need their labels only with a
+    # tail holdout
+    ("expect_column_kl_divergence_to_be_less_than",
+     {"column": "n_spans", "threshold": 0.5, "tail_weight_holdout": 0,
+      "partition_object": {"values": [0, 1, 2, 3, 4], "weights": [0.2] * 5}}),
+    ("expect_column_kl_divergence_to_be_less_than",
+     {"column": "n_spans", "threshold": 0.5, "tail_weight_holdout": 0.1,
+      "partition_object": {"values": [0, 1, 2, 3, 4], "weights": [0.2] * 5}}),
 ]
 _DOCS_DDL = (
     "doc_id string, "
@@ -346,17 +354,37 @@ _DOCS_DDL = (
 )
 
 
-def _canon(v):
-    """EVR with its sampled value lists order-free: the partial lists of a
-    uniqueness check follow shuffle fetch order, not the data."""
-    if isinstance(v, dict):
-        return {
-            k: sorted(map(repr, x)) if k.endswith("_list") and x else _canon(x)
-            for k, x in v.items()
-        }
-    if isinstance(v, list):
-        return [_canon(x) for x in v]
-    return v
+def _py_partial_unexpected(rows, cfg, limit):
+    """Pure-Python reference for an EVR's ``partial_unexpected_list``: the
+    first ``limit`` values the ``_SUITE_POOL`` entry ``cfg`` flags, in the
+    order of ``rows`` (``df.collect()``, i.e. partition order). None for an
+    expectation without a sample. Uniqueness flags a non-null value that
+    occurs more than once."""
+    etype, kw = cfg
+    col = kw.get("column")
+    if etype == "expect_column_values_to_not_be_null":
+        cond = kw.get("row_condition")
+        assert cond in (None, "n_spans > 1")
+        flagged = [
+            r[col] for r in rows
+            if r[col] is None and (cond is None or (r["n_spans"] or 0) > 1)
+        ]
+    elif etype == "expect_column_values_to_match_regex":
+        flagged = [
+            r[col] for r in rows
+            if r[col] is not None and not re.search(kw["regex"], r[col])
+        ]
+    elif etype == "expect_column_values_to_be_unique":
+        seen = [r[col] for r in rows if r[col] is not None]
+        flagged = [v for v in seen if seen.count(v) > 1]
+    elif etype == "expect_column_values_to_be_between":
+        flagged = [
+            r[col] for r in rows
+            if r[col] is not None and not kw["min_value"] <= r[col] <= kw["max_value"]
+        ]
+    else:
+        return None
+    return flagged[:limit]
 
 
 def _vkeys(rows):
@@ -400,7 +428,7 @@ def _result_rows(evrs):
             bool(r["success"]),
             r.get("result", {}).get("element_count"),
             r.get("result", {}).get("unexpected_count"),
-            json.dumps(_canon(r), sort_keys=True, default=str),
+            json.dumps(r, sort_keys=True, default=str),
         )
         for r in evrs
     )
@@ -412,11 +440,13 @@ def _result_rows(evrs):
     picks=st.lists(
         st.integers(0, len(_SUITE_POOL) - 1), min_size=1, max_size=4, unique=True
     ),
+    limit=st.sampled_from([3, 20]),
 )
-def test_single_scan_leg_matches_two_pass(spark, tmp_path, docs, picks):
+def test_single_scan_leg_matches_two_pass(spark, tmp_path, docs, picks, limit):
     """validate_and_extract == validate_df + span_violations on random doc
-    frames and suites, and every runner bucket's committed results rows
-    == validate_df on that bucket."""
+    frames and suites, every sampled EVR list == the pure-Python first
+    ``limit`` flagged values in partition order, and every runner bucket's
+    committed results rows == validate_df on that bucket."""
     import uuid
 
     from pyspark.sql import functions as F
@@ -427,22 +457,31 @@ def test_single_scan_leg_matches_two_pass(spark, tmp_path, docs, picks):
 
     # checkpointed: a frame parallelized from Python would re-run Python
     # workers on every one of the many scans below
+    # two partitions, so "first in partition order" spans a boundary
     df = (
         spark.createDataFrame(docs, _DOCS_DDL)
+        .repartition(2)
         .withColumn("n_spans", F.size("spans"))
         .localCheckpoint()
     )
     suite = ExpectationSuite(
         "diff", [ExpectationConfiguration(*_SUITE_POOL[i]) for i in picks]
     )
+    rf = {"result_format": "BASIC", "partial_unexpected_count": limit}
 
     rep, rows, _ = validate_and_extract(
-        df, suite, span_violations, result_format=None
+        df, suite, span_violations, result_format=rf
     )
-    ref = validate_df(df, suite)
-    assert json.dumps(_canon(rep), sort_keys=True, default=str) == json.dumps(
-        _canon(ref), sort_keys=True, default=str
+    ref = validate_df(df, suite, result_format=rf)
+    assert json.dumps(rep, sort_keys=True, default=str) == json.dumps(
+        ref, sort_keys=True, default=str
     )
+    collected = df.collect()
+    for i, report in ((i, r) for i in picks for r in (rep, ref)):
+        want = _py_partial_unexpected(collected, _SUITE_POOL[i], limit)
+        evr = report["results"][picks.index(i)]
+        if want is not None:
+            assert evr["result"]["partial_unexpected_list"] == want
     span_rows = _vkeys(span_violations(df).collect())
     assert _vkeys(rows.collect()) == span_rows
     assert span_rows == _py_span_violations(docs)

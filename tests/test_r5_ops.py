@@ -288,6 +288,26 @@ def test_embedding_decontaminate_impls_agree(spark):
     assert a.exceptAll(f).count() == 0 and f.exceptAll(a).count() == 0
 
 
+def test_embedding_decontaminate_eval_ids_need_not_be_unique(spark):
+    """Two eval vectors sharing an id both count on both paths."""
+    ev = _vec_df(spark, [("e", [1.0, 0.0]), ("e", [0.0, 1.0])])
+    corpus = _vec_df(spark, [("c1", [1.0, 0.0])])
+    out = {
+        impl: [tuple(r) for r in similarity.embedding_decontaminate(
+            corpus, ev, threshold=0.95, assign_impl=impl).collect()]
+        for impl in ("arrow", "fold")
+    }
+    assert out["arrow"] == out["fold"] == [("c1", 1.0, True)]
+
+
+def test_embedding_decontaminate_cap_names_fold(spark, monkeypatch):
+    monkeypatch.setattr(similarity, "MAX_CLOSURE_QUERIES", 1)
+    ev = _vec_df(spark, [(100, [1.0, 0.0]), (101, [0.0, 1.0])])
+    corpus = _vec_df(spark, [(0, [1.0, 0.0])])
+    with pytest.raises(ValueError, match="assign_impl='fold'"):
+        similarity.embedding_decontaminate(corpus, ev)
+
+
 def test_embedding_decontaminate_empty_eval_raises(spark):
     corpus = _vec_df(spark, [(0, [1.0, 0.0])])
     ev = corpus.where(F.col("vec_id") < 0)
