@@ -504,16 +504,17 @@ def main():
     add("Misra-Gries heavy hitters (heavy_hitters_users)",
         heavy_hitters(spark.read.parquet(f"{SF}/events.parquet"),
                       "user_id", min_fraction=0.008, k=200),
-        "Pass 2 of the exact heavy-hitter pipeline: the candidate set — "
-        "collected while the MG summaries were persisted, and bounded at "
-        "<= 1/(min_fraction - 1/(k+1)) values regardless of data size — "
-        "is a local relation broadcast (`BroadcastHashJoin ... BuildRight`) "
-        "against the narrow (user_id) scan, then ONE HashAggregate pair "
-        "(partial -> final) whose shuffle carries at most |candidates| "
-        "grouped rows. The summaries subtree does NOT reappear here (it "
-        "would if candidates stayed lazy past the unpersist): the plan has "
-        "exactly one parquet scan. Pass 1 (the MG summaries) is scan -> "
-        "MapInArrow emitting <= k rows per task.")
+        "Pass 2 of the exact heavy-hitter pipeline. Pass 1 is one `df.agg` "
+        "row — `approx_top_k_accumulate` over the (user_id) scan plus "
+        "count(1), an ObjectHashAggregate pair with no Python worker — and "
+        "its candidates (sketch items whose upper bound reaches the "
+        "threshold, at most 0.75 * maxMapSize(k) = 384 values at k=200 "
+        "regardless of data size) are collected before this plan is built. "
+        "They are a local relation broadcast (`BroadcastHashJoin ... "
+        "BuildRight`) against the narrow (user_id) scan, then ONE "
+        "HashAggregate pair (partial -> final) whose shuffle carries at "
+        "most |candidates| grouped rows: the plan has exactly one parquet "
+        "scan.")
 
     add("A-ES weighted sample (weighted_sample_documents)",
         qs["weighted_sample_documents"](spark, SF),

@@ -49,47 +49,10 @@ from .suite import ExpectationSuite, parse_result_format
 from .validator import Validator, _bind_config
 
 
-def observable_requests(
-    df: DataFrame,
+def stage1_requests(
     suite: ExpectationSuite,
-    resolver: MetricResolver,
     result_format: Any = None,
     evaluation_parameters: dict[str, Any] | None = None,
-) -> dict[tuple, Any]:
-    """Stage-1 metric requests of ``suite`` that can ride a CollectMetrics
-    node on the bare table: bundled aggregates, no deps, unfiltered
-    whole-table domain. Returns {metric_id: MetricConfiguration}."""
-    out: dict[tuple, Any] = {}
-    for cfg in suite.expectations:
-        rf = parse_result_format(cfg.get("result_format", result_format))
-        try:
-            bcfg = _bind_config(cfg, evaluation_parameters or {}, None)
-            exp = get_expectation(bcfg.expectation_type)
-            requests = exp.metric_requests(bcfg, rf)
-        except Exception:  # noqa: BLE001 — fails into its own EVR later
-            continue
-        for m in requests.values():
-            try:
-                spec = get_metric_spec(m.name)
-            except KeyError:
-                continue
-            d = m.domain
-            if (
-                spec.kind == "agg"
-                and spec.deps_fn is None
-                and d.row_condition is None
-                and not d.filter_conditions
-                and d.explode_col is None
-            ):
-                out[m.id] = m
-    return out
-
-
-def _all_stage1_requests(
-    df: DataFrame,
-    suite: ExpectationSuite,
-    result_format: Any,
-    evaluation_parameters: dict[str, Any] | None,
 ) -> dict[tuple, Any]:
     """Every stage-1 metric request of the suite, by id (errors skipped —
     the validator converts them to failed EVRs later)."""
@@ -106,6 +69,23 @@ def _all_stage1_requests(
     return out
 
 
+def is_observable(m: Any) -> bool:
+    """Whether request ``m`` can ride a CollectMetrics node on the bare
+    table: a bundled aggregate, no deps, unfiltered whole-table domain."""
+    try:
+        spec = get_metric_spec(m.name)
+    except KeyError:
+        return False
+    d = m.domain
+    return (
+        spec.kind == "agg"
+        and spec.deps_fn is None
+        and d.row_condition is None
+        and not d.filter_conditions
+        and d.explode_col is None
+    )
+
+
 def validate_and_extract(
     df: DataFrame,
     suite: ExpectationSuite,
@@ -113,7 +93,6 @@ def validate_and_extract(
     action: Callable[[DataFrame], Any] | None = None,
     result_format: Any = "BOOLEAN_ONLY",
     evaluation_parameters: dict[str, Any] | None = None,
-    prefetch: bool = True,
 ) -> tuple[dict[str, Any], DataFrame, Any]:
     """Run ``suite`` against ``df`` and ``rows_builder(df)`` in ONE scan.
 
@@ -127,7 +106,12 @@ def validate_and_extract(
     fully materializes every row without driver collection). Its return
     value is passed through as the third tuple element — pass e.g.
     ``lambda r: r.write.parquet(path)`` to land violations durably in the
-    same pass.
+    same pass. It must execute the row plan exactly once, because every
+    execution adds to the observed metrics. A global sort runs it twice:
+    ``orderBy`` first samples its input for the range partitioner, so
+    ``observe(count).orderBy(x).collect()`` over 2 rows observes 4 and
+    every report count doubles. Sort after the action, or use
+    ``orderBy(...).limit(n)``, which plans as one top-N pass.
 
     Returns ``(report, rows_df, action_result)`` where ``report`` is the
     standard validate_df report — identical to the two-pass result — and
@@ -138,9 +122,8 @@ def validate_and_extract(
     in the suite is observable (report correctness never depends on the
     fusion)."""
     seed_resolver = MetricResolver(df)
-    reqs = observable_requests(
-        df, suite, seed_resolver, result_format, evaluation_parameters
-    )
+    all_reqs = stage1_requests(suite, result_format, evaluation_parameters)
+    reqs = {mid: m for mid, m in all_reqs.items() if is_observable(m)}
 
     aliased = []
     alias_to_id: dict[str, tuple] = {}
@@ -178,10 +161,7 @@ def validate_and_extract(
     # following it. Memoized into the same resolver the validator reads,
     # so nothing recomputes.
     prefetch_thread = None
-    if prefetch and obs is not None:
-        all_reqs = _all_stage1_requests(
-            df, suite, result_format, evaluation_parameters
-        )
+    if obs is not None:
         nonobs = [m for mid, m in all_reqs.items() if mid not in reqs]
         if nonobs:
             import threading

@@ -209,13 +209,21 @@ def _gemm_topk_scores(
     )
 
 
-def _collect_query_map(queries: DataFrame, id_col: str, vec_col: str) -> dict:
+def _collect_query_map(
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    cause: str = "scorer='numpy'",
+    remedy: str = "partition the query set or use scorer='hof'",
+) -> dict:
+    """The query side as {id: vector} on the driver; over the cap the
+    error names the caller's option that needs it (``cause``) and what
+    the caller can do instead (``remedy``)."""
     rows = queries.select(id_col, vec_col).limit(MAX_CLOSURE_QUERIES + 1).collect()
     if len(rows) > MAX_CLOSURE_QUERIES:
         raise ValueError(
-            f"scorer='numpy' collects the query side to the driver and is "
-            f"capped at {MAX_CLOSURE_QUERIES} queries; partition the query "
-            "set or use scorer='hof'"
+            f"{cause} collects the query side to the driver and is capped at "
+            f"{MAX_CLOSURE_QUERIES} queries; {remedy}"
         )
     return {r[id_col]: [float(x) for x in r[vec_col]] for r in rows}
 
@@ -1106,7 +1114,12 @@ def lsh_topk(
     use_numpy = scorer == "numpy"
     qmap = None
     if use_numpy or n_probe > 1:
-        qmap = _collect_query_map(queries, id_col, vec_col)
+        causes = ["scorer='numpy'"] * use_numpy + [f"n_probe={n_probe}"] * (n_probe > 1)
+        fixes = ["use the default scorer"] * use_numpy + ["lower n_probe to 1"] * (n_probe > 1)
+        qmap = _collect_query_map(
+            queries, id_col, vec_col, " with ".join(causes),
+            "partition the query set or " + " and ".join(fixes),
+        )
     if n_probe > 1:
         id_dtype = dict(corpus.dtypes)[id_col]
         pairs = [

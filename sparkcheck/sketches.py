@@ -35,20 +35,20 @@ filter built in one session probes identically in another.
 
 **Misra-Gries heavy hitters.** ``column.value_counts`` shuffles one row
 per DISTINCT value — at 10^12 rows with 10^9 distinct join keys that is a
-10^9-row shuffle just to ask "is any key hot?". The Misra-Gries /
-space-saving summary bounds state at ``k`` counters per task and is
-MERGEABLE (Agarwal et al., "Mergeable Summaries", PODS'12): per-partition
-summaries of <= k (value, weight) rows shuffle ``#tasks x k`` rows
-regardless of cardinality, and any value with true frequency
-> N/(k+1) is guaranteed to survive into the merged candidate set
-(per partition: freq_p - w_p <= n_p/(k+1); summing over partitions,
-a value absent from EVERY summary has freq <= N/(k+1)). A second
-narrow pass counts ONLY the broadcast candidates exactly (map-side
-combined, <= |candidates| grouped rows), so the final output is EXACT:
-precisely the values with count >= min_fraction * N, with their true
-counts. Two narrow scans + dimension-sized shuffles replace one
-full-cardinality shuffle — and the result powers the skew check you
-want BEFORE launching the big join (see ``keys.py`` salting).
+10^9-row shuffle just to ask "is any key hot?". Spark's built-in
+frequent-items sketch (``approx_top_k_accumulate``/``_combine``,
+DataSketches' ``ItemsSketch``, a Misra-Gries summary) bounds state at a
+hash map of maxMapSize(k) counters per task and is MERGEABLE (Agarwal et
+al., "Mergeable Summaries", PODS'12): per-task partial sketches combine
+into one, and every value whose count exceeds the sketch's maximum error
+(at most 3.5/maxMapSize(k) of the non-NULL rows) is listed with
+lower <= count <= upper. A second narrow pass counts ONLY the broadcast
+candidates exactly (map-side combined, <= |candidates| grouped rows), so
+the final output is EXACT: precisely the values with count >=
+min_fraction * N, with their true counts. Two narrow scans +
+dimension-sized shuffles replace one full-cardinality shuffle — and the
+result powers the skew check you want BEFORE launching the big join (see
+``keys.py`` salting). No Python worker runs on this path.
 
 The reference GX has no sketch tier — ``expect_column_values_to_be_in_set``
 takes literal lists only (reference
@@ -60,12 +60,16 @@ column_value_counts.py:32). These are north-rule scale additions.
 
 from __future__ import annotations
 
+import datetime
 import math
 from dataclasses import dataclass
-from typing import Any, Iterator
+from decimal import Decimal
+from typing import Any, Callable, Iterator
 
-from pyspark.sql import DataFrame
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .expectations import Expectation, build_domain, register_expectation
 from .metrics import Domain, MetricConfiguration, eager_metric, freeze_kwargs
@@ -402,65 +406,109 @@ def bloom_referential_check(
 
 
 # ---------------------------------------------------------------------------
-# Misra-Gries heavy hitters: mergeable summaries + exact verification
+# Heavy hitters on Spark's frequent-items sketch (approx_top_k_*)
 # ---------------------------------------------------------------------------
 
+_EPOCH_DATE = datetime.date(1970, 1, 1)
+_EPOCH_TS = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+# item types a sketch returns through py4j in the column's own Python form
+_AS_IS = (
+    T.StringType, T.BooleanType, T.ByteType, T.ShortType, T.IntegerType,
+    T.LongType, T.FloatType, T.DoubleType,
+)
+# ... and the three it returns in Spark's internal form
+_FROM_INTERNAL = {
+    T.DateType: lambda days: _EPOCH_DATE + datetime.timedelta(days=days),
+    T.TimestampType: lambda us: _EPOCH_TS + datetime.timedelta(microseconds=us),
+    T.DecimalType: lambda dec: Decimal(dec.toString()),
+}
 
-def _mg_summaries(df: DataFrame, col: str, k: int) -> DataFrame:
-    """Per-partition Misra-Gries summaries: <= k (v, w) rows per task plus
-    the partition row-count ``pn`` stamped on one row (so N = sum(pn)
-    without a second full scan). All per-batch work is vectorized pandas
-    ``value_counts`` + aligned adds — state never exceeds k counters."""
-    import pandas as pd  # noqa: PLC0415
-    import pyarrow as pa  # noqa: PLC0415
 
-    src = df.select(F.col(col).alias("v"))
-    v_field = src.schema.fields[0]
+def _item_converter(dtype: T.DataType) -> Callable[[Any], Any]:
+    """Sketch item -> Python value of ``dtype``; refuses other types."""
+    if isinstance(dtype, _AS_IS):
+        return lambda v: v
+    for t, convert in _FROM_INTERNAL.items():
+        if isinstance(dtype, t):
+            return convert
+    raise ValueError(
+        f"heavy-hitter sketches support string, boolean, numeric, date and "
+        f"timestamp columns, not {dtype.simpleString()}"
+    )
 
-    def summarize(batches: Iterator) -> Iterator:
-        mg = None
-        n_part = 0
-        v_type = None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            v_type = batch.column(0).type
-            n_part += batch.num_rows  # N counts every row, like count(*)
-            vals = batch.column(0).drop_null().to_pandas()
-            if len(vals) == 0:
-                continue
-            vc = vals.value_counts()  # vectorized; nulls already dropped
-            mg = vc if mg is None else mg.add(vc, fill_value=0)
-            if len(mg) > k:
-                cut = mg.nlargest(k + 1).iloc[-1]
-                mg = mg - cut
-                mg = mg[mg > 0]
-        if v_type is None:
-            return
-        if mg is None or len(mg) == 0:
-            # all-null partition: still report its row count toward N
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([None], type=v_type),
-                    pa.array([0], type=pa.int64()),
-                    pa.array([n_part], type=pa.int64()),
-                ],
-                names=["v", "w", "pn"],
-            )
-            return
-        w = mg.astype("int64")
-        pn = pd.array([n_part] + [None] * (len(w) - 1), dtype="Int64")
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(w.index.to_numpy(), type=v_type),
-                pa.array(w.to_numpy()),
-                pa.array(pn),
-            ],
-            names=["v", "w", "pn"],
+
+def _max_map_size(k: int) -> int:
+    """Hash-map size of a sketch tracking ``k`` items: the smallest power
+    of 2 >= k/0.75 (Spark's ``ApproxTopK.calMaxMapSize``)."""
+    return 1 << (math.ceil(4 * k / 3) - 1).bit_length()
+
+
+def _sketch_items(state: Any, threshold: float) -> "tuple[list[tuple], T.DataType]":
+    """The items of one ``approx_top_k`` state whose upper bound reaches
+    ``threshold``, as (value, lower, upper) with ``value`` in the column's
+    type, and that type. The only code that reads a sketch.
+
+    It goes through py4j because SQL ``approx_top_k_estimate`` lists only
+    the NO_FALSE_POSITIVES items (lower bound above the maximum error), so
+    it drops a value whose count may still reach the threshold. Read with
+    ``ErrorType.NO_FALSE_NEGATIVES`` the sketch lists every value whose
+    count exceeds ``getMaximumError()``, with lower <= count <= upper."""
+    jvm = SparkContext._jvm
+    agg = jvm.org.apache.spark.sql.catalyst.expressions.aggregate
+    topk = getattr(agg, "ApproxTopK$").__getattr__("MODULE$")
+    ddl = state["itemDataTypeDDL"]
+    serde = topk.genSketchSerDe(topk.DDLToDataType(ddl))
+    sketch = agg.ApproxTopKAggregateBuffer.deserialize(state["sketch"], serde).sketch()
+    dtype = T.StructType.fromDDL(ddl).fields[0].dataType
+    convert = _item_converter(dtype)
+    # the sketch keeps upper > its argument, and counts are integers
+    rows = sketch.getFrequentItems(
+        max(math.ceil(threshold) - 1, 0),
+        jvm.org.apache.datasketches.frequencies.ErrorType.NO_FALSE_NEGATIVES,
+    )
+    return [
+        (convert(r.getItem()), r.getLowerBound(), r.getUpperBound()) for r in rows
+    ], dtype
+
+
+def _accumulate(col: str, k: int) -> Column:
+    return F.call_function("approx_top_k_accumulate", F.col(col), F.lit(int(k)))
+
+
+def _heavy_hitters(
+    df: DataFrame, col: str, min_fraction: float, k: int | None
+) -> "tuple[DataFrame, int]":
+    """:func:`heavy_hitters` plus the row count N of its first pass."""
+    # maxMapSize(k) > k, so k >= 3.5/min_fraction keeps eps below min_fraction
+    k_min = math.ceil(3.5 / max(min_fraction, 1e-9))
+    if k is None:
+        k = max(64, k_min)
+    eps = 3.5 / _max_map_size(k)
+    if min_fraction <= eps:
+        raise ValueError(
+            f"min_fraction={min_fraction} <= 3.5/maxMapSize={eps:.6g} at "
+            f"k={k}: the sketch cannot guarantee completeness; raise k to "
+            f"{k_min} or more"
         )
-
-    schema = f"`v` {v_field.dataType.simpleString()}, `w` long, `pn` long"
-    return src.mapInArrow(summarize, schema=schema)
+    src = df.select(F.col(col).alias("v"))
+    _item_converter(src.schema[0].dataType)
+    first = src.agg(
+        _accumulate("v", k).alias("sketch"), F.count(F.lit(1)).alias("n")
+    ).collect()[0]
+    n_rows = int(first["n"])
+    threshold = min_fraction * n_rows
+    items, _ = _sketch_items(first["sketch"], threshold)
+    candidates = df.sparkSession.createDataFrame(
+        [(v,) for v, _, _ in items], schema=src.schema
+    )
+    exact = (
+        src.where(F.col("v").isNotNull())
+        .join(F.broadcast(candidates), on="v", how="inner")
+        .groupBy("v")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .where(F.col("cnt") >= F.lit(threshold))
+    )
+    return exact.select(F.col("v").alias("value"), "cnt"), n_rows
 
 
 def heavy_hitters(
@@ -472,300 +520,83 @@ def heavy_hitters(
     """EXACT set of values with ``count >= min_fraction * N`` and their
     exact counts — without ever shuffling the column's full cardinality.
 
-    Pass 1: per-partition MG summaries (<= tasks x k rows) are persisted;
-    N and the merged candidate weights come from that dimension-sized
-    frame. Completeness: a value with true freq > N/(k+1) survives into
-    some summary, so requiring ``min_fraction > 1/(k+1)`` makes the
-    candidate set a guaranteed superset of the answer; candidates are
-    pruned to ``w >= threshold - N/(k+1)`` (true freq <= w + N/(k+1)).
-    Pass 2: a broadcast semi-join counts ONLY the candidates exactly
-    (map-side combine → <= |candidates| grouped rows), then the exact
-    threshold filter lands. Output columns: (value, cnt), value keeping
-    the source dtype.
+    Pass 1 is one ``df.agg`` row: Spark's frequent-items sketch of the
+    column at ``k`` tracked items (``approx_top_k_accumulate``) and N,
+    which counts NULL rows too. The sketch's maximum error is at most
+    3.5/maxMapSize(k) of the non-NULL rows, with maxMapSize(k) the
+    smallest power of 2 >= k/0.75, so requiring ``min_fraction`` above
+    that bound makes every heavy value a candidate: its count exceeds the
+    maximum error, so its upper bound reaches the threshold. The default
+    ``k = max(64, ceil(3.5/min_fraction))`` always meets it. Pass 2: a
+    broadcast semi-join counts ONLY the candidates exactly (map-side
+    combine → <= |candidates| grouped rows), then the exact threshold
+    filter lands. Output columns: (value, cnt), value keeping the source
+    dtype.
     """
-    if k is None:
-        k = max(64, int(2.0 / max(min_fraction, 1e-9)))
-    if min_fraction <= 1.0 / (k + 1):
-        raise ValueError(
-            f"min_fraction={min_fraction} <= 1/(k+1)={1.0/(k+1):.6g}: the "
-            f"MG summary cannot guarantee completeness; raise k above "
-            f"{int(1.0/min_fraction)}"
-        )
-    summaries = _mg_summaries(df, col, k).persist()
-    try:
-        total = summaries.agg(F.sum("pn").alias("n")).collect()[0]["n"]
-        n_rows = int(total or 0)
-        if n_rows == 0:
-            return (
-                df.sparkSession.createDataFrame([], schema=summaries.select("v").schema)
-                .withColumnRenamed("v", "value")
-                .withColumn("cnt", F.lit(0).cast("long"))
-            )
-        threshold = min_fraction * n_rows
-        slack = n_rows / (k + 1.0)
-        # The pruned candidate set is bounded independent of data size:
-        # sum(w) <= N, so |{v : w >= threshold - slack}| <=
-        # 1/(min_fraction - 1/(k+1)) values (default k ⇒ <= 2/min_fraction).
-        # Collecting it here — while the summaries are still persisted —
-        # keeps the returned plan at exactly ONE further scan; leaving the
-        # candidate subtree lazy would recompute the summaries (a second
-        # full pass) once the persist is released.
-        cand_rows = (
-            summaries.groupBy("v")
-            .agg(F.sum("w").alias("w"))
-            .where(F.col("w") >= F.lit(threshold - slack))
-            .where(F.col("v").isNotNull())
-            .select("v")
-            .collect()
-        )
-        v_schema = summaries.select("v").schema
-        candidates = df.sparkSession.createDataFrame(cand_rows, schema=v_schema)
-        exact = (
-            df.select(F.col(col).alias("v"))
-            .where(F.col("v").isNotNull())
-            .join(F.broadcast(candidates), on="v", how="inner")
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .where(F.col("cnt") >= F.lit(threshold))
-        )
-        return exact.select(F.col("v").alias("value"), "cnt")
-    finally:
-        summaries.unpersist()
+    return _heavy_hitters(df, col, min_fraction, k)[0]
 
 
 # ---------------------------------------------------------------------------
-# Mergeable Misra-Gries states — incremental heavy hitters from commit units
+# Mergeable heavy-hitter states — incremental heavy hitters from commit units
 # ---------------------------------------------------------------------------
 
 
 def mg_states(
     df: DataFrame, col: str, k: int, state_key: str
 ) -> DataFrame:
-    """Per-commit-unit Misra-Gries summaries with an EXPLICIT error bound
-    — the frequency member of the mergeable-states family
-    (states.column_states / histogram_states): long rows
-    (state_key, v, w, pn, err) where each unit contributes <= k value
-    rows, ``pn`` (the unit's total row count incl. nulls) and ``err``
-    ride the unit's first row.
+    """Per-commit-unit frequent-items sketches — the frequency member of
+    the mergeable-states family (states.column_states /
+    histogram_states): one row (state_key, column, k, sketch, pn) per
+    unit, where ``sketch`` is Spark's ``approx_top_k_accumulate`` state
+    tracking ``k`` items (DataSketches' ``ItemsSketch``, a Misra-Gries
+    summary) and ``pn`` counts the unit's rows, NULL values included.
+    NULL values never enter the sketch; a NULL ``state_key`` is an
+    ordinary unit.
 
-    The MG invariant carried per unit: every value's true count f in the
-    unit satisfies w_v <= f_v <= w_v + err (values absent from the
-    summary have f <= err), with err = (nonnull - W)/(k+1) <= n/(k+1)
-    computed from the ACTUAL residual (nonnull items minus surviving
-    weight), which is far tighter than the worst case on skewed data.
-    Summaries are mergeable (Agarwal et al., "Mergeable Summaries",
-    PODS'12): add weights, decrement by the (k+1)-th largest c to keep k
-    counters, and the bounds stay valid with err' = err_1 + err_2 + c —
-    :func:`merge_mg_states` does exactly that, so
-    :func:`certified_heavy_hitters` answers corpus-level hot-key
-    questions from committed states with three-valued certainty and NO
-    rescan of finished partitions.
-
-    Scale shape: one mapInArrow pass bounded at k counters per
-    (task, unit) pair, then ONE groupBy(state_key).applyInArrow fold of
-    the dimension-sized partial-summary rows (#tasks x k per unit) down
-    to <= k rows per unit — the data is scanned once and never shuffled.
+    The sketch bounds every value's count f: lower <= f <= upper, and a
+    value it does not list has f <= its maximum error, which stays below
+    3.5/maxMapSize(k) of the non-NULL rows under merges (Agarwal et al.,
+    "Mergeable Summaries", PODS'12). :func:`merge_mg_states` combines the
+    units, so :func:`certified_heavy_hitters` answers corpus-level
+    hot-key questions from committed states with three-valued certainty
+    and NO rescan of finished partitions. Scale shape: one
+    groupBy(state_key) aggregate; the data is scanned once, and only the
+    per-task partial sketches are shuffled.
     """
-    import pandas as pd  # noqa: PLC0415
-    import pyarrow as pa  # noqa: PLC0415
-
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    src = df.select(F.expr(state_key).cast("string").alias("sk"), F.col(col).alias("v"))
-    v_field = src.schema.fields[1]
-    v_simple = v_field.dataType.simpleString()
-
-    def summarize(batches: Iterator) -> Iterator:
-        # per-(task, state_key): MG counters + rows seen + nonnull seen
-        mg: dict = {}
-        seen: dict = {}
-        nonnull: dict = {}
-        v_type = None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            v_type = batch.column(1).type
-            pdf = batch.to_pandas()
-            for sk, grp in pdf.groupby("sk", dropna=False):
-                key = None if (sk is None or sk != sk) else sk
-                seen[key] = seen.get(key, 0) + len(grp)
-                vals = grp["v"].dropna()
-                if len(vals) == 0:
-                    mg.setdefault(key, None)
-                    continue
-                nonnull[key] = nonnull.get(key, 0) + len(vals)
-                vc = vals.value_counts()
-                cur = mg.get(key)
-                cur = vc if cur is None else cur.add(vc, fill_value=0)
-                if len(cur) > k:
-                    cut = cur.nlargest(k + 1).iloc[-1]
-                    cur = cur - cut
-                    cur = cur[cur > 0]
-                mg[key] = cur
-        if v_type is None:
-            return
-        for key in seen:
-            cur = mg.get(key)
-            nn = nonnull.get(key, 0)
-            if cur is None or len(cur) == 0:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([key], type=pa.string()),
-                        pa.array([None], type=v_type),
-                        pa.array([0], type=pa.int64()),
-                        pa.array([seen[key]], type=pa.int64()),
-                        pa.array([float(nn) / (k + 1)], type=pa.float64()),
-                    ],
-                    names=["sk", "v", "w", "pn", "err"],
-                )
-                continue
-            w = cur.astype("int64")
-            err = (nn - int(w.sum())) / (k + 1.0)
-            n_out = len(w)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([key] * n_out, type=pa.string()),
-                    pa.array(w.index.to_numpy(), type=v_type),
-                    pa.array(w.to_numpy()),
-                    pa.array(
-                        pd.array([seen[key]] + [None] * (n_out - 1), dtype="Int64")
-                    ),
-                    pa.array(
-                        pd.array([err] + [None] * (n_out - 1), dtype="Float64")
-                    ),
-                ],
-                names=["sk", "v", "w", "pn", "err"],
-            )
-
-    def fold(tbl: pa.Table) -> pa.Table:
-        # the mergeable-summaries fold of _fold_mg over one unit's task
-        # partials, in Arrow so values keep their exact type: sum weights
-        # per value, decrement by the (k+1)-th largest c, err' = sum(err)
-        # + c, pn/err ride the first row
-        import pyarrow.compute as pc  # noqa: PLC0415
-
-        w = (
-            tbl.filter(pc.is_valid(tbl["v"]))
-            .group_by("v")
-            .aggregate([("w", "sum")])
-            .sort_by([("w_sum", "descending"), ("v", "ascending")])
-        )
-        cut = w["w_sum"][k].as_py() if w.num_rows > k else 0
-        w = w.filter(pc.greater(w["w_sum"], cut))
-        pn = pc.sum(tbl["pn"]).as_py()
-        err = (pc.sum(tbl["err"]).as_py() or 0.0) + cut
-        n = max(w.num_rows, 1)
-        pad = [None] * (n - 1)
-        return pa.table(
-            {
-                "sk": pa.array([tbl["sk"][0].as_py()] * n, type=pa.string()),
-                "v": w["v"] if w.num_rows else pa.nulls(1, tbl.schema.field("v").type),
-                "w": pc.subtract(w["w_sum"], cut) if w.num_rows else pa.array([0], pa.int64()),
-                "pn": pa.array([pn] + pad, type=pa.int64()),
-                "err": pa.array([err] + pad, type=pa.float64()),
-            }
-        )
-
-    schema = f"`sk` string, `v` {v_simple}, `w` long, `pn` long, `err` double"
-    # ONE applyInArrow fold of the per-task partials per commit unit: the
-    # partials feed a single shuffle, so the source is read exactly once.
-    # Stamp the source column and k so states.update can refuse merges of
-    # mismatched states — the rows alone look alike
-    folded = (
-        src.mapInArrow(summarize, schema=schema)
-        .groupBy("sk")
-        .applyInArrow(fold, schema=schema)
-    )
-    return folded.withColumnRenamed("sk", "state_key").select(
-        "state_key",
+    _item_converter(df.select(col).schema[0].dataType)
+    # the source column and k are stamped so states.update can refuse
+    # merges of mismatched states — the rows alone look alike
+    return df.groupBy(F.expr(state_key).cast("string").alias("state_key")).agg(
         F.lit(col).alias("column"),
         F.lit(int(k)).alias("k"),
-        "v",
-        "w",
-        "pn",
-        "err",
+        _accumulate(col, k).alias("sketch"),
+        F.count(F.lit(1)).alias("pn"),
     )
-
-
-def _fold_mg(partials: DataFrame, k: int, key_cols: "list[str]") -> DataFrame:
-    """Merge MG partial summaries per key group (pure DataFrame ops over
-    the dimension-sized summary rows): sum weights per value, find the
-    (k+1)-th largest weight c (0 when <= k values survive), decrement
-    every weight by c and drop the non-positive — the mergeable-summaries
-    fold, with err' = sum(err_i) + c. pn/err metadata rows are summed
-    per group and re-stamped onto the group's first value row.
-
-    NULL keys are first-class (a NULL state_key from a nullable partition
-    column must keep its value rows): every group/join runs over a
-    two-column NULL-safe surrogate (is-null flag + coalesced string), and
-    the original key values are restored from the metadata side — a plain
-    equi-join on the raw key would silently drop the NULL unit's value
-    rows while keeping its err, breaking the f <= w + err invariant."""
-    from pyspark.sql import Window
-
-    pre = partials
-    gk: list[str] = []
-    for i, c in enumerate(key_cols):
-        pre = pre.withColumn(f"__kn{i}", F.col(c).isNull()).withColumn(
-            f"__kv{i}", F.coalesce(F.col(c).cast("string"), F.lit(""))
-        )
-        gk += [f"__kn{i}", f"__kv{i}"]
-    meta = pre.groupBy(*gk).agg(
-        F.sum("pn").alias("pn"),
-        F.sum("err").alias("err"),
-        *[F.max(c).alias(c) for c in key_cols],
-    )
-    sums = (
-        pre.where(F.col("v").isNotNull())
-        .groupBy(*gk, "v")
-        .agg(F.sum("w").alias("w"))
-    )
-    wrank = Window.partitionBy(*gk).orderBy(F.desc("w"), F.asc("v"))
-    ranked = sums.withColumn("__r", F.row_number().over(wrank))
-    cuts = (
-        ranked.where(F.col("__r") == k + 1)
-        .select(*gk, F.col("w").alias("__cut"))
-    )
-    dec = (
-        ranked.join(cuts, gk, "left")
-        .withColumn("w", F.col("w") - F.coalesce("__cut", F.lit(0)))
-        .where(F.col("w") > 0)
-        .select(*gk, "v", "w")
-    )
-    worder = Window.partitionBy(*gk).orderBy(F.desc("w"), F.asc("v"))
-    first = dec.withColumn("__rn", F.row_number().over(worder))
-    # err grows by the decrement c applied in this fold
-    meta2 = meta.join(
-        cuts.select(*gk, F.col("__cut").alias("__c")), gk, "left"
-    ).select(
-        *gk,
-        *key_cols,
-        "pn",
-        (F.col("err") + F.coalesce("__c", F.lit(0)).cast("double")).alias("err"),
-    )
-    out = first.join(meta2, gk, "right").select(
-        *key_cols,
-        "v",
-        F.coalesce("w", F.lit(0)).alias("w"),
-        F.when(F.coalesce("__rn", F.lit(1)) == 1, F.col("pn")).alias("pn"),
-        F.when(F.coalesce("__rn", F.lit(1)) == 1, F.col("err")).alias("err"),
-    )
-    return out
 
 
 def merge_mg_states(states: DataFrame, k: int) -> DataFrame:
-    """Fold per-commit-unit MG states into ONE corpus summary (v, w) plus
-    its metadata row — pure DataFrame ops over the dimension-sized states
-    frame. Returns rows (v, w, pn, err) with pn/err stamped on the first
-    row: every value's true corpus count f satisfies w <= f <= w + err,
-    and any value absent from the summary has f <= err."""
-    tagged = states.withColumn("__g", F.lit(1))
-    return _fold_mg(tagged, k, key_cols=["__g"]).drop("__g")
+    """Combine per-commit-unit states into ONE corpus row (sketch, pn),
+    or no row when there are no states: ``approx_top_k_combine`` at ``k``
+    tracked items, and N = sum(pn). Every value's true corpus count lies
+    within the combined sketch's bounds."""
+    # grouped by a constant: a global combine over zero states fails in
+    # Spark 4.1 (MatchError on the empty buffer)
+    return (
+        states.groupBy(F.lit(1).alias("__g"))
+        .agg(
+            F.call_function("approx_top_k_combine", F.col("sketch"), F.lit(int(k)))
+            .alias("sketch"),
+            F.sum("pn").alias("pn"),
+        )
+        .drop("__g")
+    )
 
 
 def misra_gries(column: str, k: int) -> StateKind:
-    """Misra-Gries summaries of ``column`` at ``k`` counters as a
-    :class:`states.StateKind` (:func:`mg_states`), folded by
+    """Frequent-items sketches of ``column`` at ``k`` tracked items as a
+    :class:`states.StateKind` (:func:`mg_states`), combined by
     :func:`merge_mg_states` and read by :func:`certified_heavy_hitters`."""
     return StateKind(
         "mg_states",
@@ -779,39 +610,40 @@ def misra_gries(column: str, k: int) -> StateKind:
 def certified_heavy_hitters(
     merged: DataFrame, min_fraction: float
 ) -> DataFrame:
-    """Three-valued corpus heavy hitters from a merged MG summary, with
-    NO rescan: (value, lower, upper, n, threshold, verdict) where
+    """Three-valued corpus heavy hitters from a merged state, with NO
+    rescan: (value, lower, upper, n, threshold, verdict) where
 
-      - ``certified``     — lower bound w >= threshold: the value is a
-                            heavy hitter with certainty;
-      - ``indeterminate`` — w < threshold <= w + err: only an exact count
-                            (one candidate-semi-join scan) can decide;
-      - values absent from the output have true count <= max(err,
-        threshold) < threshold + err — when ``err < threshold`` the rows
-        returned are a guaranteed SUPERSET of the true heavy-hitter set
-        (completeness), which callers can check via upper-vs-threshold.
+      - ``certified``     — lower >= threshold: the value is a heavy
+                            hitter with certainty;
+      - ``indeterminate`` — lower < threshold <= upper: only an exact
+                            count (one candidate-semi-join scan) can
+                            decide;
+      - values absent from the output have true count < threshold or <=
+        the sketch's maximum error. With ``min_fraction`` above
+        3.5/maxMapSize(k) the maximum error is below the threshold, so
+        the rows returned are a guaranteed SUPERSET of the true
+        heavy-hitter set (completeness).
 
-    Everything is driver-free arithmetic over the <= k+1-row summary."""
-    meta = merged.agg(
-        F.sum("pn").alias("n"), F.sum("err").alias("err")
-    )
-    vals = merged.where(F.col("v").isNotNull()).select("v", "w")
-    j = vals.crossJoin(F.broadcast(meta))
-    thr = F.lit(float(min_fraction)) * F.col("n")
-    return (
-        j.withColumn("upper", F.col("w") + F.col("err"))
-        .where(F.col("upper") >= thr)
-        .select(
-            F.col("v").alias("value"),
-            F.col("w").alias("lower"),
-            "upper",
-            "n",
-            thr.alias("threshold"),
-            F.when(F.col("w") >= thr, F.lit("certified"))
-            .otherwise(F.lit("indeterminate"))
-            .alias("verdict"),
-        )
-    )
+    The one merged row is collected and read on the driver."""
+    rows: list[tuple] = []
+    dtype: T.DataType = T.StringType()  # no states, no item type
+    for m in merged.collect():
+        n = int(m["pn"])
+        threshold = float(min_fraction) * n
+        items, dtype = _sketch_items(m["sketch"], threshold)
+        rows += [
+            (v, lo, up, n, threshold, "certified" if lo >= threshold else "indeterminate")
+            for v, lo, up in items
+        ]
+    schema = T.StructType([
+        T.StructField("value", dtype),
+        T.StructField("lower", T.LongType()),
+        T.StructField("upper", T.LongType()),
+        T.StructField("n", T.LongType()),
+        T.StructField("threshold", T.DoubleType()),
+        T.StructField("verdict", T.StringType()),
+    ])
+    return merged.sparkSession.createDataFrame(rows, schema)
 
 
 def heavy_hitter_report(
@@ -822,16 +654,15 @@ def heavy_hitter_report(
     top: int = 20,
 ) -> dict:
     """Eager report for the expectation: offenders + their exact shares."""
-    n_rows = df.count()
+    hits, n_rows = _heavy_hitters(df, col, max_fraction, k)
     if n_rows == 0:
         return {"element_count": 0, "offenders": []}
-    hits = heavy_hitters(df, col, min_fraction=max_fraction, k=k)
     rows = hits.orderBy(F.desc("cnt"), "value").limit(top).collect()
     offenders = [
         {"value": r["value"], "count": int(r["cnt"]), "fraction": r["cnt"] / n_rows}
         for r in rows
     ]
-    return {"element_count": int(n_rows), "offenders": offenders}
+    return {"element_count": n_rows, "offenders": offenders}
 
 
 @eager_metric("column.heavy_hitters")

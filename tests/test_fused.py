@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sparkcheck import ExpectationConfiguration, ExpectationSuite, validate_df
-from sparkcheck.fused import observable_requests, validate_and_extract
+from sparkcheck.fused import is_observable, stage1_requests, validate_and_extract
 from sparkcheck.metrics import MetricResolver
 from sparkcheck.runner import CheckpointRunner, ParquetStore
 from sparkcheck.spans import span_violations
@@ -94,15 +94,15 @@ def test_collect_metrics_in_plan(spark, docs):
 def test_observable_partition(spark, docs):
     """not_null/regex/row_count aggregates are observable; uniqueness
     (groupBy) and row_condition domains are not."""
-    reqs = observable_requests(docs, _suite(), MetricResolver(docs))
-    names = {m.name for m in reqs.values()}
+    reqs = [m for m in stage1_requests(_suite()).values() if is_observable(m)]
+    names = {m.name for m in reqs}
     assert "map.unexpected_count" in names
     assert "table.row_count" in names
 
     s = ExpectationSuite("cond")
     s.add("expect_column_values_to_not_be_null", column="doc_id",
           row_condition='doc_id LIKE "hot%"', condition_parser="spark")
-    reqs2 = observable_requests(docs, s, MetricResolver(docs))
+    reqs2 = [m for m in stage1_requests(s).values() if is_observable(m)]
     assert not reqs2  # filtered domain cannot ride the whole-table observe
 
 

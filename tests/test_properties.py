@@ -605,3 +605,61 @@ def test_latest_committed_matches_newest_delivery_rescan(
     assert merge_histogram_states(latest_committed(hh, c)).collect() == (
         merge_histogram_states(histogram_states(ref, _HIST_EDGES, "unit")).collect()
     )
+
+
+_HH_ROWS = st.lists(
+    st.tuples(
+        st.one_of(st.none(), st.sampled_from(["a", "b", "c"])),
+        st.one_of(st.none(), st.integers(min_value=0, max_value=6)),
+    ),
+    min_size=1,
+    max_size=60,
+)
+
+
+@_settings
+@given(
+    rows=_HH_ROWS,
+    as_string=st.booleans(),
+    n_parts=st.integers(min_value=1, max_value=4),
+    min_fraction=st.floats(min_value=0.05, max_value=0.5),
+)
+def test_heavy_hitter_sketch_brackets_exact_counts(
+    spark, rows, as_string, n_parts, min_fraction
+):
+    """Mergeable heavy-hitter states over random frames, partitionings and
+    NULL state keys: every certificate row brackets the exact count, a
+    certified value really is heavy, no heavy value is missing, and
+    ``heavy_hitters`` is the exact set. With k=64 both a-priori error
+    bounds (1/65 and 3.5/128) lie below the smallest ``min_fraction``."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from sparkcheck.sketches import (
+        certified_heavy_hitters,
+        heavy_hitters,
+        merge_mg_states,
+        mg_states,
+    )
+
+    if as_string:
+        rows = [(sk, None if v is None else f"v{v}") for sk, v in rows]
+    ddl = f"sk string, v {'string' if as_string else 'long'}"
+    df = spark.createDataFrame(rows, ddl).repartition(n_parts).localCheckpoint()
+    n = len(rows)
+    exact = Counter(v for _, v in rows if v is not None)
+    threshold = min_fraction * n
+
+    merged = merge_mg_states(mg_states(df, "v", 64, "sk"), 64).localCheckpoint()
+    assert merged.agg(F.sum("pn")).collect()[0][0] == n
+    cert = certified_heavy_hitters(merged, min_fraction).collect()
+    for r in cert:
+        assert r["lower"] <= exact[r["value"]] <= r["upper"]
+        assert r["n"] == n
+        if r["verdict"] == "certified":
+            assert exact[r["value"]] >= threshold
+    heavy = {(v, c) for v, c in exact.items() if c >= threshold}
+    assert {v for v, _ in heavy} <= {r["value"] for r in cert}
+    got = {(r["value"], r["cnt"]) for r in heavy_hitters(df, "v", min_fraction, k=64).collect()}
+    assert got == heavy

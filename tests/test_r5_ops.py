@@ -308,6 +308,17 @@ def test_embedding_decontaminate_cap_names_fold(spark, monkeypatch):
         similarity.embedding_decontaminate(corpus, ev)
 
 
+def test_lsh_topk_cap_names_n_probe(spark, monkeypatch):
+    """Multi-probe with the default scorer collects the queries for their
+    probe signatures; over the cap the remedy is n_probe, not a scorer."""
+    monkeypatch.setattr(similarity, "MAX_CLOSURE_QUERIES", 1)
+    qs = _vec_df(spark, [(100, [1.0, 0.0]), (101, [0.0, 1.0])])
+    corpus = _vec_df(spark, [(0, [1.0, 0.0])])
+    with pytest.raises(ValueError, match="n_probe=2 .*lower n_probe to 1") as err:
+        similarity.lsh_topk(corpus, qs, n_planes=4, n_probe=2)
+    assert "scorer" not in str(err.value)
+
+
 def test_embedding_decontaminate_empty_eval_raises(spark):
     corpus = _vec_df(spark, [(0, [1.0, 0.0])])
     ev = corpus.where(F.col("vec_id") < 0)
