@@ -16,20 +16,21 @@ NOT push filters below an observe node (the observed values reflect every
 row of the node's child, guaranteed by Catalyst), so the metrics are
 exactly the whole-table aggregates the validator would have computed.
 
-What rides the observe node: metrics whose spec is a bundled aggregate
-(kind == "agg"), with no metric dependencies, over the UNFILTERED table
-domain (no row_condition / filter_conditions / explode) — counts,
-min/max/mean/stddev, quantiles, histogram bins and the categorical
-KL counts (``column.categorical_histogram``). A filtered domain stays
+What rides the observe node: every aggregate metric (kind == "agg") of
+the suite over the UNFILTERED table domain (no row_condition /
+filter_conditions / explode) — counts, min/max/mean/stddev, quantiles,
+histogram bins and the categorical KL counts
+(``column.categorical_histogram``). ``MetricResolver.observe`` builds and
+reads that bundle, as it does every other one. A filtered domain stays
 off the node, so a row_condition that raises at run time (an ANSI cast)
 fails only its own EVR, never the violation append. Everything else
 resolves in a prefetch thread that overlaps the append: one sample pass
 per row set (the unexpected-value samples), one uniqueness pass per
-uniqueness check (count and sample together) and one ``df.agg`` bundle
-per filtered domain. The seeded resolver cache
-makes the handoff exact: the validator sees pre-resolved metric values
-keyed by the same metric ids it would have requested, so EVRs are
-bit-identical to the two-pass report (tests/test_fused.py asserts this).
+uniqueness check (count and sample together) and one noop-write bundle
+per filtered domain. The seeded resolver cache makes the handoff exact:
+the validator sees pre-resolved metric values keyed by the same metric
+ids it would have requested, so EVRs are bit-identical to the two-pass
+report (tests/test_fused.py asserts this).
 
 Reference analog: GE computes validation metrics and row-level
 unexpected extraction as separate passes (validator.py graph_validate +
@@ -39,51 +40,15 @@ counterpart — it exists because Spark can express it.
 
 from __future__ import annotations
 
+import threading
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, Observation
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame
 
-from .expectations import get_expectation
-from .metrics import MetricResolver, get_metric_spec
-from .suite import ExpectationSuite, parse_result_format
-from .validator import Validator, _bind_config
-
-
-def stage1_requests(
-    suite: ExpectationSuite,
-    result_format: Any = None,
-    evaluation_parameters: dict[str, Any] | None = None,
-) -> dict[tuple, Any]:
-    """Every stage-1 metric request of the suite, by id (errors skipped —
-    the validator converts them to failed EVRs later)."""
-    out: dict[tuple, Any] = {}
-    for cfg in suite.expectations:
-        rf = parse_result_format(cfg.get("result_format", result_format))
-        try:
-            bcfg = _bind_config(cfg, evaluation_parameters or {}, None)
-            exp = get_expectation(bcfg.expectation_type)
-            for m in exp.metric_requests(bcfg, rf).values():
-                out[m.id] = m
-        except Exception:  # noqa: BLE001
-            continue
-    return out
-
-
-def is_observable(m: Any) -> bool:
-    """Whether request ``m`` can ride a CollectMetrics node on the bare
-    table: a bundled aggregate, no deps, unfiltered whole-table domain."""
-    try:
-        spec = get_metric_spec(m.name)
-    except KeyError:
-        return False
-    d = m.domain
-    return (
-        spec.kind == "agg"
-        and spec.deps_fn is None
-        and d.row_condition is None
-        and not d.filter_conditions
-        and d.explode_col is None
-    )
+from .metrics import get_metric_spec
+from .suite import ExpectationSuite
+from .validator import Validator
 
 
 def validate_and_extract(
@@ -118,72 +83,47 @@ def validate_and_extract(
     ``rows_df`` is the already-executed row frame (re-usable; Spark will
     re-run it if acted on again).
 
-    Falls back to the classic two-pass shape automatically when nothing
-    in the suite is observable (report correctness never depends on the
-    fusion)."""
-    seed_resolver = MetricResolver(df)
-    all_reqs = stage1_requests(suite, result_format, evaluation_parameters)
-    reqs = {mid: m for mid, m in all_reqs.items() if is_observable(m)}
-
-    aliased = []
-    alias_to_id: dict[str, tuple] = {}
-    for i, (mid, m) in enumerate(reqs.items()):
-        try:
-            col = get_metric_spec(m.name).agg_fn(m.domain, m, seed_resolver)
-        except Exception:  # noqa: BLE001 — leave it to the normal path
-            continue
-        alias = f"__obs_{i}"
-        aliased.append(col.alias(alias))
-        alias_to_id[alias] = mid
-
-    obs: Observation | None = None
-    base = df
-    if aliased:
-        obs = Observation()
-        try:
-            base = df.observe(obs, *aliased)
-        except Exception:  # noqa: BLE001 — non-observable expr: two-pass
-            obs = None
-            base = df
-
+    Jobs started for the rest of the suite run in a prefetch thread that
+    inherits the caller's Spark local properties (job group, tags)."""
+    validator = Validator(df)
+    _, stage1, _ = validator._plan(suite, result_format, evaluation_parameters)  # noqa: SLF001
+    on_table = [
+        m for m in stage1 if m.domain.is_table and get_metric_spec(m.name).kind == "agg"
+    ]
+    base, read = validator.resolver.observe(df, on_table)
     rows = rows_builder(base)
     if action is None:
         def action(r: DataFrame) -> None:
             r.write.format("noop").mode("overwrite").save()
 
-    validator = Validator(df)
-
-    # overlap the NON-observable metric jobs (the sample pass, the
-    # uniqueness passes, the filtered-domain bundles — narrow,
-    # column-pruned scans) with the row-extraction action: Spark schedules
-    # concurrent jobs from separate threads across the same executors, so
-    # their wall-time hides behind the full-width pass instead of
-    # following it. Memoized into the same resolver the validator reads,
-    # so nothing recomputes.
+    # overlap the other metric jobs (the sample pass, the uniqueness
+    # passes, the filtered-domain bundles — narrow, column-pruned scans)
+    # with the row-extraction action: Spark schedules concurrent jobs from
+    # separate threads across the same executors, so their wall-time hides
+    # behind the full-width pass instead of following it. Memoized into
+    # the same resolver the validator reads, so nothing recomputes.
+    observed = {m.id for m in on_table}
+    rest = [m for m in stage1 if m.id not in observed]
     prefetch_thread = None
-    if obs is not None:
-        nonobs = [m for mid, m in all_reqs.items() if mid not in reqs]
-        if nonobs:
-            import threading
+    if rest:
+        def _prefetch() -> None:
+            try:
+                validator.resolver.resolve(rest, raise_errors=False)
+            except Exception:  # noqa: BLE001 — validate() retries/records
+                pass
 
-            def _prefetch() -> None:
-                try:
-                    validator.resolver.resolve(nonobs, raise_errors=False)
-                except Exception:  # noqa: BLE001 — validate() retries/records
-                    pass
-
-            prefetch_thread = threading.Thread(target=_prefetch, daemon=True)
-            prefetch_thread.start()
+        prefetch_thread = threading.Thread(
+            target=inheritable_thread_target(df.sparkSession)(_prefetch), daemon=True
+        )
+        prefetch_thread.start()
 
     action_result = action(rows)
     if prefetch_thread is not None:
         prefetch_thread.join()
 
-    if obs is not None:
-        got = obs.get  # blocks until the action's query completes
-        for alias, mid in alias_to_id.items():
-            if alias in got:
-                validator.resolver.cache[mid] = got[alias]
+    resolver = validator.resolver
+    for mid, value in read().items():  # blocks until the action's query ends
+        (resolver.failed if isinstance(value, Exception) else resolver.cache)[mid] = value
 
     report = validator.validate(
         suite,

@@ -5,21 +5,21 @@ bundles all *aggregate partials* sharing a compute-domain into a single
 ``df.agg(*aggs).collect()`` pass (reference:
 great_expectations/execution_engine/sparkdf_execution_engine.py:702-780,
 single collect at :758; partial/bundle split
-execution_engine/execution_engine.py:378-477). We keep that design — it is
+execution_engine/execution_engine.py:378-477). We keep the bundle — it is
 the one GX optimization Catalyst cannot do for us (it fuses aggregates
-within one action, not across actions) — and extend it: map-condition
-unexpected-counts and histogram bins also become ``sum(when(...))`` columns
-of the same fused pass. Requests that need rows rather than an aggregate
-are bundled too (``SharedPass``): every unexpected-value sample over one
-row set comes from ONE sample-pass query, and each uniqueness domain's
-count and sample from ONE uniqueness-pass query. An unlimited (COMPLETE)
-sample pass reads every row of its row set in its result stage, so the
-ready aggregates of every domain over that row set ride it as an
-Observation — filtered domains as conditional aggregates
-(``in_domain``); every other aggregate keeps the per-compute-domain
-``df.agg`` bundle (whose row_condition filter Spark pushes into the
-scan). A bundled pass that raises is resolved one request at a time, so
-one bad request fails only itself.
+within one action, not across actions) — and carry it differently: every
+bundle is ONE ``Observation`` (a CollectMetrics node) on ONE action, built
+and read by :meth:`MetricResolver.observe`. The resolver's own action is a
+noop write of the compute domain, one Spark job where ``df.agg().collect()``
+runs two under adaptive execution (the partial aggregate, then the final
+one after an exchange); ``fused.validate_and_extract`` hosts the
+table-domain bundle on the caller's row action instead. Map-condition
+unexpected-counts and histogram bins are ``sum(when(...))`` columns of the
+same bundle. Requests that need rows rather than an aggregate are bundled
+too (``SharedPass``): every unexpected-value sample over one row set comes
+from ONE sample-pass query, and each uniqueness domain's count and sample
+from ONE uniqueness-pass query. A bundle or pass that raises is resolved
+one request at a time, so one bad request fails only itself.
 
 Metric kinds (reference enum core/metric_function_types.py:26-112):
   - ``agg``     -> returns an unevaluated Spark Column aggregate; bundled.
@@ -40,7 +40,8 @@ import json
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -70,25 +71,12 @@ def domain_col(domain: "Domain", ctx: "MetricResolver | None" = None) -> Column:
     (sparkdf_execution_engine.py:665-700 ``add_column_row_condition``
     ``filter_nan``; callers column_values_increasing.py:105-108). We apply
     the pandas-parity semantics uniformly — done as an expression (not a
-    row filter) so metrics on different columns still share ONE fused
-    df.agg pass.
+    row filter) so metrics on different columns still share ONE bundle.
     """
     c = F.col(domain.column)
     if ctx is not None and domain.column in ctx.float_cols:
         c = F.when(~F.isnan(c), c)
-    return in_domain(c, ctx)
-
-
-def in_domain(c: Column, ctx: Any = None) -> Column:
-    """``c`` on the rows of the aggregate's domain and NULL elsewhere.
-
-    An aggregate normally runs over its domain frame (``Domain.apply``),
-    where every row belongs to the domain. When it rides a sample pass it
-    runs over the whole row set instead, and ``ctx.where`` holds the
-    domain predicate (see :class:`RowSetContext`): the aggregate becomes a
-    conditional aggregate, e.g. ``count(when(pred, 1))``."""
-    where = getattr(ctx, "where", None)
-    return c if where is None else F.when(where, c)
+    return c
 
 
 def domain_predicate(domain: "Domain") -> Column | None:
@@ -100,17 +88,6 @@ def domain_predicate(domain: "Domain") -> Column | None:
     for p in preds:
         out = F.expr(p) if out is None else (out & F.expr(p))
     return out
-
-
-@dataclass(frozen=True)
-class RowSetContext:
-    """Aggregate context over a domain's whole row set (the table, or its
-    exploded spans) rather than the filtered domain frame: ``where`` is the
-    domain predicate that :func:`in_domain` applies."""
-
-    float_cols: frozenset[str]
-    dtypes: dict[str, str]
-    where: Column | None
 
 
 @dataclass(frozen=True)
@@ -139,6 +116,15 @@ class Domain:
     # `__span_index`. The explode is a narrow generator — it changes the
     # scanned row set, so it is part of the compute identity.
     explode_col: str | None = None
+
+    @property
+    def is_table(self) -> bool:
+        """Whether the domain is every row of the unexploded table."""
+        return (
+            self.row_condition is None
+            and not self.filter_conditions
+            and self.explode_col is None
+        )
 
     @property
     def compute_id(self) -> str:
@@ -229,17 +215,11 @@ class MetricSpec:
 @dataclass(frozen=True)
 class SharedPass:
     """One Spark query that resolves every ready request naming the same
-    ``(run, key)``: ``run(resolver, requests, riders)`` returns
-    ``{metric id: value}`` (an exception as the value fails that request
-    alone). A pass that ``reads_row_set`` reads every row of the row set
-    ``key`` (a ``Domain.explode_col``), so the ready aggregates over that
-    row set ride it as an Observation (``riders``) instead of costing
-    their own ``df.agg`` job; a rider missing from the result goes back
-    to its ``df.agg`` bundle."""
+    ``(run, key)``: ``run(resolver, requests)`` returns ``{metric id:
+    value}`` (an exception as the value fails that request alone)."""
 
     run: Callable[..., dict[tuple, Any]]
     key: Any
-    reads_row_set: bool = False
 
 
 _REGISTRY: dict[str, MetricSpec] = {}
@@ -399,6 +379,12 @@ class MetricResolver:
             self.cache[cfg.id] = value
             pending.pop(cfg.id, None)
 
+        def settle(cfg: MetricConfiguration, value: Any) -> None:
+            if isinstance(value, Exception):
+                fail(cfg, value)
+            else:
+                done(cfg, value)
+
         # iterate: compute everything whose deps are satisfied, bundling aggs
         while pending:
             ready_aggs: list[MetricConfiguration] = []
@@ -438,53 +424,31 @@ class MetricResolver:
 
             # --- shared passes: ONE query per row set / uniqueness domain ---
             for sp, cfgs in passes.values():
-                riders: list[MetricConfiguration] = []
-                if sp.reads_row_set:
-                    riders = [c for c in ready_aggs if c.domain.explode_col == sp.key]
-                    ready_aggs = [c for c in ready_aggs if c.domain.explode_col != sp.key]
                 try:
-                    values = sp.run(self, cfgs, riders)
+                    values = sp.run(self, cfgs)
                 except Exception:  # noqa: BLE001 — isolate: one at a time
                     singles += cfgs
                     alone.update((cfg.id, sp) for cfg in cfgs)
-                    ready_aggs += riders
                     continue
-                for cfg in cfgs + riders:
-                    if cfg.id not in values:  # a rider the pass could not carry
-                        ready_aggs.append(cfg)
-                    elif isinstance(values[cfg.id], Exception):
-                        fail(cfg, values[cfg.id])
-                    else:
-                        done(cfg, values[cfg.id])
+                for cfg in cfgs:
+                    settle(cfg, values[cfg.id])
 
-            # --- bundled aggregate pass: ONE Spark job per compute domain ---
+            # --- aggregate bundles: ONE noop-write job per compute domain ---
             bundles: dict[str, list[MetricConfiguration]] = {}
             for cfg in ready_aggs:
                 bundles.setdefault(cfg.domain.compute_id, []).append(cfg)
             for cfgs in bundles.values():
-                ddf = self.domain_df(cfgs[0].domain)
-                aliased, good = [], []
-                for cfg in cfgs:
-                    try:
-                        col = get_metric_spec(cfg.name).agg_fn(cfg.domain, cfg, self)
-                    except Exception as e:  # noqa: BLE001 — e.g. type guards
-                        fail(cfg, e)
-                        continue
-                    aliased.append(col.alias(f"m_{len(good)}"))
-                    good.append(cfg)
-                if not good:
-                    continue
                 try:
-                    row = ddf.agg(*aliased).collect()[0]
+                    values = self._run_bundle(cfgs)
                 except Exception:  # noqa: BLE001 — isolate the bad aggregate
-                    for i, cfg in enumerate(good):
+                    values = {}
+                    for cfg in cfgs:
                         try:
-                            done(cfg, ddf.agg(aliased[i]).collect()[0][f"m_{i}"])
+                            values.update(self._run_bundle([cfg]))
                         except Exception as e:  # noqa: BLE001
-                            fail(cfg, e)
-                    continue
-                for i, cfg in enumerate(good):
-                    done(cfg, row[f"m_{i}"])
+                            values[cfg.id] = e
+                for cfg in cfgs:
+                    settle(cfg, values[cfg.id])
 
             # --- eager / derived metrics, one at a time ---
             for cfg in singles:
@@ -494,7 +458,7 @@ class MetricResolver:
                 for _attempt in range(self.MAX_RETRIES):
                     try:
                         if cfg.id in alone:
-                            value = alone[cfg.id].run(self, [cfg], [])[cfg.id]
+                            value = alone[cfg.id].run(self, [cfg])[cfg.id]
                             if isinstance(value, Exception):
                                 raise value
                         elif spec.kind == "eager":
@@ -520,6 +484,61 @@ class MetricResolver:
 
         return self.cache
 
+    def observe(
+        self, frame: DataFrame, cfgs: list[MetricConfiguration]
+    ) -> tuple[DataFrame, Callable[[], dict[tuple, Any]]]:
+        """Attach the aggregates of ``cfgs`` to ``frame`` as ONE Observation.
+
+        Returns ``(observed, read)``. The caller executes ``observed``
+        exactly once, which computes every aggregate while the rows stream
+        past; after that action ``read()`` returns ``{metric id: value}``.
+        A request whose Column cannot be built, or that Spark refuses to
+        observe (each Column is then analysed alone, which runs no job),
+        gets its exception as its value; ``observed`` is ``frame`` itself
+        when no Column is left. This is the one place where aggregate
+        bundles are built and read: the resolver's noop write per compute
+        domain, and ``fused.validate_and_extract``'s row action."""
+        out: dict[tuple, Any] = {}
+        cols: dict[tuple, Column] = {}
+        for cfg in cfgs:
+            try:
+                cols[cfg.id] = get_metric_spec(cfg.name).agg_fn(cfg.domain, cfg, self)
+            except Exception as e:  # noqa: BLE001 — e.g. type guards
+                out[cfg.id] = e
+
+        def attach() -> tuple[Observation, DataFrame]:
+            obs = Observation()
+            aliased = [c.alias(f"m_{k}") for k, c in enumerate(cols.values())]
+            return obs, frame.observe(obs, *aliased) if cols else frame
+
+        try:
+            obs, observed = attach()
+        except AnalysisException:  # refused (e.g. DISTINCT): drop the bad ones
+            for mid, col in list(cols.items()):
+                try:
+                    frame.observe(Observation(), col.alias("m"))
+                except AnalysisException as e:
+                    out[mid] = e
+                    del cols[mid]
+            obs, observed = attach()
+
+        def read() -> dict[tuple, Any]:
+            if cols:
+                got = obs.get
+                out.update((mid, got[f"m_{k}"]) for k, mid in enumerate(cols))
+            return out
+
+        return observed, read
+
+    def _run_bundle(self, cfgs: list[MetricConfiguration]) -> dict[tuple, Any]:
+        """Resolve the aggregates of one compute domain in ONE Spark job: an
+        Observation on a noop write of the domain frame."""
+        frame = self.domain_df(cfgs[0].domain)
+        observed, read = self.observe(frame, cfgs)
+        if observed is not frame:
+            observed.write.format("noop").mode("overwrite").save()
+        return read()
+
     def __getitem__(self, cfg: MetricConfiguration) -> Any:
         if cfg.id in self.failed:
             raise self.failed[cfg.id]
@@ -534,13 +553,13 @@ class MetricResolver:
 @agg_metric("table.row_count")
 def _row_count(domain: Domain, cfg: MetricConfiguration, ctx=None) -> Column:
     # reference: table_metrics/table_row_count.py:58-66 (F.count(F.lit(1)))
-    return F.count(in_domain(F.lit(1), ctx))
+    return F.count(F.lit(1))
 
 
 @agg_metric("column.null_count")
 def _null_count(domain: Domain, cfg: MetricConfiguration, ctx=None) -> Column:
     # NaN counts as missing on float columns (pandas parity, see domain_col)
-    return F.count(in_domain(F.lit(1), ctx)) - F.count(domain_col(domain, ctx))
+    return F.count(F.lit(1)) - F.count(domain_col(domain, ctx))
 
 
 @agg_metric("column.nonnull_count")
@@ -578,11 +597,13 @@ def _sum(domain: Domain, cfg: MetricConfiguration, ctx=None) -> Column:
 @agg_metric("column.distinct_values.count")
 def _distinct_count(domain: Domain, cfg: MetricConfiguration, ctx=None) -> Column:
     """Distinct count. Default is the HLL sketch (north rule: HLL for
-    uniqueness at 10^12 scale); exact=True falls back to countDistinct for
-    fixture parity (reference uses exact: column_distinct_values.py:122-132).
+    uniqueness at 10^12 scale); exact=True counts the distinct set for
+    fixture parity (reference uses exact: column_distinct_values.py:122-132)
+    as ``size(collect_set(x))``, because an Observation refuses DISTINCT
+    aggregates; it equals ``countDistinct(x)``, -0.0 and 0.0 included.
     """
     if cfg.kw("exact", False):
-        return F.countDistinct(domain_col(domain, ctx))
+        return F.size(F.collect_set(domain_col(domain, ctx)))
     return F.approx_count_distinct(domain_col(domain, ctx), rsd=cfg.kw("rsd", 0.01))
 
 
@@ -594,7 +615,7 @@ def _quantiles(domain: Domain, cfg: MetricConfiguration, ctx=None) -> Column:
     partitions — the 100 TB path). exact=True uses exact ``percentile``
     (interpolated) for oracle/fixture parity at test scale.
     Reference: column_quantile_values.py:157-190 uses df.approxQuantile —
-    a *separate driver action*; folding into the single agg pass saves a job.
+    a *separate driver action*; folding it into the bundle saves a job.
     """
     qs = list(cfg.kw("quantiles", (0.25, 0.5, 0.75)))
     col = domain_col(domain, ctx)
@@ -615,12 +636,12 @@ def _median(domain: Domain, cfg: MetricConfiguration, ctx=None) -> Column:
 @agg_metric("column_values.length.min")
 def _len_min(domain: Domain, cfg: MetricConfiguration, ctx=None) -> Column:
     # reference: column_values_length_min.py:31-32
-    return F.min(in_domain(F.length(F.col(domain.column)), ctx))
+    return F.min(F.length(F.col(domain.column)))
 
 
 @agg_metric("column_values.length.max")
 def _len_max(domain: Domain, cfg: MetricConfiguration, ctx=None) -> Column:
-    return F.max(in_domain(F.length(F.col(domain.column)), ctx))
+    return F.max(F.length(F.col(domain.column)))
 
 
 @derived_metric(

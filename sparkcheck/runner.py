@@ -514,7 +514,7 @@ def _validate_unit(
         cfg = r["expectation_config"]
         d = build_domain(ExpectationConfiguration(cfg["expectation_type"], cfg["kwargs"]))
         # a row_condition / ignore_row_if / span domain counts other rows
-        if d.row_condition is None and not d.filter_conditions and d.explode_col is None:
+        if d.is_table:
             return result, int(n)
     return result, part.count()
 
@@ -743,10 +743,17 @@ class CheckpointRunner:
         if self.max_concurrency > 1 and fail_after is None:
             from concurrent.futures import ThreadPoolExecutor
 
+            from pyspark import inheritable_thread_target
+
+            # each partition's jobs carry the caller's Spark local
+            # properties (job group, tags); wrapped per task, so every
+            # task gets its own copy of them
             with ThreadPoolExecutor(self.max_concurrency) as pool:
-                outcomes = list(
-                    pool.map(lambda bp: _one(bp[0], bp[1]), todo)
-                )
+                futures = [
+                    pool.submit(inheritable_thread_target(self.spark)(_one), b, pid)
+                    for b, pid in todo
+                ]
+                outcomes = [f.result() for f in futures]
         else:
             outcomes = []
             done = 0

@@ -9,8 +9,7 @@ Two halves:
    COLUMN domains). The reference collects unexpected-value samples with
    one action per expectation (:337-384); here every sample of a row-local
    condition over one row set comes from one sample pass
-   (``_sample_pass``; an unlimited one also carries that row set's
-   aggregates), and a uniqueness check's count and sample from one
+   (``_sample_pass``), and a uniqueness check's count and sample from one
    uniqueness pass (``_uniqueness_pass``). Other window conditions, row
    extraction (``unexpected_rows``/``unexpected_index_list``) and a
    pass's failure-isolation fallback run as their own filter jobs
@@ -41,14 +40,11 @@ from .conditions import get_condition
 from .metrics import (
     Domain,
     MetricConfiguration,
-    RowSetContext,
     SharedPass,
     agg_metric,
     domain_predicate,
     eager_metric,
     float_columns,
-    get_metric_spec,
-    in_domain,
 )
 
 
@@ -80,11 +76,10 @@ def unexpected_mask(
 
 @agg_metric("map.unexpected_count")
 def _unexpected_count_agg(domain: Domain, cfg: MetricConfiguration, ctx=None) -> Column:
-    # joins the fused df.agg pass — reference :625-640
+    # joins the domain's aggregate bundle — reference :625-640
     fc = ctx.float_cols if ctx is not None else frozenset()
     dt = ctx.dtypes if ctx is not None else None
-    flag = F.when(unexpected_mask(cfg, fc, dt), 1).otherwise(0)
-    return F.sum(in_domain(flag, ctx))
+    return F.sum(F.when(unexpected_mask(cfg, fc, dt), 1).otherwise(0))
 
 
 _UNIQUENESS = ("column_values.unique", "compound_columns.unique")
@@ -99,7 +94,7 @@ def _shared_pass(cfg: MetricConfiguration) -> SharedPass | None:
     if name in _UNIQUENESS:
         return SharedPass(_uniqueness_pass, (cfg.domain.domain_id, name))
     if cfg.name == "map.unexpected_values" and not get_condition(name).is_window:
-        return SharedPass(_sample_pass, cfg.domain.explode_col, reads_row_set=True)
+        return SharedPass(_sample_pass, cfg.domain.explode_col)
     return None
 
 
@@ -127,7 +122,7 @@ def _sample_value(dom: Domain, row: Any, alias: dict[str, str]) -> Any:
     return [row[alias[dom.column_a]], row[alias[dom.column_b]]]
 
 
-def _sample_pass(resolver, cfgs: list[MetricConfiguration], riders) -> dict:
+def _sample_pass(resolver, cfgs: list[MetricConfiguration]) -> dict:
     """Every ready sample request over one row set (a ``Domain.explode_col``)
     in ONE query.
 
@@ -139,18 +134,8 @@ def _sample_pass(resolver, cfgs: list[MetricConfiguration], riders) -> dict:
     WindowGroupLimit below the exchange, so each task ships at most
     ``limit`` rows per request. The driver sorts each request's hits by
     ``__pos``: it gets its first ``limit`` unexpected rows in partition
-    order, exactly what ``filter(mask).limit(n).collect()`` returns.
-
-    An unlimited pass has no exchange and reads every row of the row set
-    in its result stage, so the ready aggregates over that row set ride
-    it as an Observation — filtered domains as conditional aggregates
-    (see ``metrics.in_domain``). Spark applies a result task's
-    accumulator update once; a map task's update is applied again each
-    time a fetch failure or a lost executor re-runs it, so a limited
-    pass, whose rows are read below the rank window's exchange, carries
-    no riders. A request whose mask or aggregate cannot be built gets
-    its exception as its value; riders left out of the result go back
-    to their ``df.agg`` bundle."""
+    order, exactly what ``filter(mask).limit(n).collect()`` returns. A
+    request whose mask cannot be built gets its exception as its value."""
     fc, dt = resolver.float_cols, resolver.dtypes
     out: dict[tuple, Any] = {}
     flags, sampled = [], []
@@ -166,26 +151,7 @@ def _sample_pass(resolver, cfgs: list[MetricConfiguration], riders) -> dict:
     if not sampled:  # no mask could be built: nothing to read rows for
         raise out[cfgs[0].id]
     limits = [cfg.kw("limit") for cfg in sampled]
-    ranked = None not in limits
-
     base = resolver.domain_df(Domain(explode_col=cfgs[0].domain.explode_col))
-    aggs, agg_ids = [], []
-    for cfg in [] if ranked else riders:
-        ctx = RowSetContext(fc, dt, domain_predicate(cfg.domain))
-        try:
-            aggs.append(get_metric_spec(cfg.name).agg_fn(cfg.domain, cfg, ctx))
-        except Exception as e:  # noqa: BLE001 — e.g. type guards
-            out[cfg.id] = e
-            continue
-        agg_ids.append(cfg.id)
-    obs = None
-    if aggs:
-        obs = Observation()
-        try:
-            base = base.observe(obs, *[a.alias(f"m_{k}") for k, a in enumerate(aggs)])
-        except Exception:  # noqa: BLE001 — e.g. DISTINCT cannot be observed
-            obs, agg_ids = None, []  # the riders keep their df.agg bundle
-
     alias = _aliases(sampled)
     hits = (
         base.withColumn("__pos", F.monotonically_increasing_id())
@@ -196,7 +162,7 @@ def _sample_pass(resolver, cfgs: list[MetricConfiguration], riders) -> dict:
         )
         .where(F.col("__hit"))
     )
-    if ranked:
+    if None not in limits:
         rank = F.row_number().over(Window.partitionBy("__i").orderBy("__pos"))
         hits = hits.withColumn("__rn", rank).where(F.col("__rn") <= max(limits))
     by_request: dict[int, list] = {}
@@ -207,14 +173,10 @@ def _sample_pass(resolver, cfgs: list[MetricConfiguration], riders) -> dict:
         out[cfg.id] = [
             _sample_value(cfg.domain, r, alias) for r in mine[: cfg.kw("limit")]
         ]
-    if obs is not None:
-        got = obs.get
-        for k, mid in enumerate(agg_ids):
-            out[mid] = got[f"m_{k}"]
     return out
 
 
-def _uniqueness_pass(resolver, cfgs: list[MetricConfiguration], riders) -> dict:
+def _uniqueness_pass(resolver, cfgs: list[MetricConfiguration]) -> dict:
     """Count and sample of one uniqueness domain from ONE query.
 
     With a sample requested, the query projects the key columns and

@@ -66,7 +66,6 @@ class Validator:
         evaluation_parameters: dict[str, Any] | None = None,
         parameter_store: Any = None,
     ) -> dict[str, Any]:
-        rf_default = result_format
         urn_resolver = None
         if parameter_store is not None:
             # urn:great_expectations:validations:... kwargs resolve against
@@ -79,26 +78,9 @@ class Validator:
             def urn_resolver(urn: str):
                 return resolve_validation_urn(parameter_store, spark, urn)
 
-        plans: list[tuple[ExpectationConfiguration, Any, dict[str, Any]]] = []
-        stage1: list = []
-        errors: dict[int, str] = {}
-        for i, cfg in enumerate(suite.expectations):
-            rf = parse_result_format(cfg.get("result_format", rf_default))
-            try:
-                # always bind (even with no params) so self-contained
-                # $PARAMETER expressions like now()-timedelta(...) resolve;
-                # per-expectation so an unknown $PARAMETER fails only its
-                # own EVR (reference validator.py:1583-1607 binding)
-                cfg = _bind_config(cfg, evaluation_parameters or {}, urn_resolver)
-                exp = get_expectation(cfg.expectation_type)
-                reqs = exp.metric_requests(cfg, rf)
-                stage1.extend(reqs.values())
-                plans.append((cfg, exp, rf))
-            except Exception:  # noqa: BLE001
-                if not catch_exceptions:
-                    raise
-                errors[i] = traceback.format_exc()
-                plans.append((cfg, None, rf))
+        plans, stage1, errors = self._plan(
+            suite, result_format, evaluation_parameters, urn_resolver, catch_exceptions
+        )
 
         # stage 1: one bundled resolution across the whole suite
         self._resolve_safely(stage1, plans, errors, catch_exceptions)
@@ -156,6 +138,42 @@ class Validator:
             },
             "meta": {"expectation_suite_name": suite.name},
         }
+
+    def _plan(
+        self,
+        suite: ExpectationSuite,
+        result_format: str | dict[str, Any] | None = None,
+        evaluation_parameters: dict[str, Any] | None = None,
+        urn_resolver: Any = None,
+        catch_exceptions: bool = True,
+    ) -> tuple[list, list, dict[int, str]]:
+        """Bind every expectation and collect its stage-1 metric requests.
+
+        Returns ``(plans, stage1, errors)``: one ``(config, expectation,
+        result_format)`` per expectation (expectation None when it cannot
+        be bound), the requests, and the traceback of each expectation that
+        failed to plan, by index. ``fused.validate_and_extract`` plans
+        through here too, to know which requests ride its row action."""
+        plans: list[tuple[ExpectationConfiguration, Any, dict[str, Any]]] = []
+        stage1: list = []
+        errors: dict[int, str] = {}
+        for i, cfg in enumerate(suite.expectations):
+            rf = parse_result_format(cfg.get("result_format", result_format))
+            try:
+                # always bind (even with no params) so self-contained
+                # $PARAMETER expressions like now()-timedelta(...) resolve;
+                # per-expectation so an unknown $PARAMETER fails only its
+                # own EVR (reference validator.py:1583-1607 binding)
+                cfg = _bind_config(cfg, evaluation_parameters or {}, urn_resolver)
+                exp = get_expectation(cfg.expectation_type)
+                stage1.extend(exp.metric_requests(cfg, rf).values())
+                plans.append((cfg, exp, rf))
+            except Exception:  # noqa: BLE001
+                if not catch_exceptions:
+                    raise
+                errors[i] = traceback.format_exc()
+                plans.append((cfg, None, rf))
+        return plans, stage1, errors
 
     def _resolve_safely(self, requests, plans, errors, catch_exceptions) -> None:
         # per-metric failures are recorded in resolver.failed and re-raised

@@ -2,20 +2,21 @@
 aggregate metrics ride a CollectMetrics node on the violation-row query.
 The contract under test: EVRs bit-identical to the two-pass report, the
 observe node is a predicate-pushdown barrier (downstream filters never
-change observed metrics), automatic two-pass fallback when nothing is
-observable, and the CheckpointRunner's single-scan leg writes, per bucket,
+change observed metrics), the same report when no aggregate rides the
+row action, and the CheckpointRunner's single-scan leg writes, per bucket,
 the same results/violations/lineage as the two-pass reference
 (validate_df + span_violations/suite_violations)."""
 
 from __future__ import annotations
 
 import json
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from sparkcheck import ExpectationConfiguration, ExpectationSuite, validate_df
-from sparkcheck.fused import is_observable, stage1_requests, validate_and_extract
+from sparkcheck.fused import validate_and_extract
 from sparkcheck.metrics import MetricResolver
 from sparkcheck.runner import CheckpointRunner, ParquetStore
 from sparkcheck.spans import span_violations
@@ -91,19 +92,28 @@ def test_collect_metrics_in_plan(spark, docs):
     assert "CollectMetrics" in plan
 
 
+def _on_table(df, suite):
+    """The requests of ``suite`` that ride validate_and_extract's row
+    action: the table-domain aggregates of the validator's plan."""
+    from sparkcheck.metrics import get_metric_spec
+    from sparkcheck.validator import Validator
+
+    _, stage1, _ = Validator(df)._plan(suite)
+    return [m for m in stage1
+            if m.domain.is_table and get_metric_spec(m.name).kind == "agg"]
+
+
 def test_observable_partition(spark, docs):
-    """not_null/regex/row_count aggregates are observable; uniqueness
-    (groupBy) and row_condition domains are not."""
-    reqs = [m for m in stage1_requests(_suite()).values() if is_observable(m)]
-    names = {m.name for m in reqs}
+    """not_null/regex/row_count aggregates ride the row action; uniqueness
+    (groupBy) and row_condition domains do not."""
+    names = {m.name for m in _on_table(docs, _suite())}
     assert "map.unexpected_count" in names
     assert "table.row_count" in names
 
     s = ExpectationSuite("cond")
     s.add("expect_column_values_to_not_be_null", column="doc_id",
           row_condition='doc_id LIKE "hot%"', condition_parser="spark")
-    reqs2 = [m for m in stage1_requests(s).values() if is_observable(m)]
-    assert not reqs2  # filtered domain cannot ride the whole-table observe
+    assert not _on_table(docs, s)  # a filtered domain stays off the row action
 
 
 def test_fallback_when_nothing_observable(spark, docs):
@@ -257,16 +267,16 @@ def _last_job_id(spark):
 
 def test_unit_job_count(spark, unit):
     """A commit unit validates and lands its violation rows in at most
-    seven Spark jobs: the append (carrying the observe node), the sample
+    six Spark jobs: the append (carrying the observe node), the sample
     pass (2), the uniqueness pass (2) and the row_condition domain's
-    aggregate bundle (2)."""
+    aggregate bundle (1, an observed noop write)."""
     suite = _ingest_suite()
     before = _last_job_id(spark)
     rep, _, _ = validate_and_extract(unit, suite, span_violations,
                                      result_format="BASIC")
     jobs = _last_job_id(spark) - before
     assert all(not r["exception_info"]["raised_exception"] for r in rep["results"])
-    assert jobs <= 7, jobs
+    assert jobs <= 6, jobs
 
 
 def test_runtime_row_condition_error_is_isolated(spark, unit):
@@ -290,35 +300,103 @@ def test_runtime_row_condition_error_is_isolated(spark, unit):
     assert _norm(rep["results"][:2] + rep["results"][3:]) == _norm(ref)
     assert sorted(map(_vkey, rows.collect())) == sorted(
         map(_vkey, span_violations(unit).collect()))
-    # every failure is paid once: the seven jobs of the suite without it,
-    # the failed sample pass, one pass per request after it (3 x 2 + 1),
-    # the failed bundle and its three aggregates one at a time — and
-    # validate() re-runs none of what the prefetch thread saw fail
-    assert jobs <= 17, jobs
+    # every failure is paid once: the four jobs of the suite without it
+    # that do not sample (the append, the uniqueness pass (2) and the good
+    # row_condition bundle), the failed sample pass, one pass per request
+    # after it (3 x 2 + 1), the failed bundle and its three aggregates one
+    # at a time (1 + 3) — and validate() re-runs none of what the prefetch
+    # thread saw fail
+    assert jobs <= 16, jobs
 
 
-def test_only_unlimited_sample_pass_carries_riders(spark, unit):
-    """Aggregates ride a sample pass only when its Observation is in the
-    result stage: a limited pass reads its rows below the rank window's
-    exchange, where a re-run map task would apply its update twice."""
-    from sparkcheck.expectations import get_expectation
-    from sparkcheck.suite import parse_result_format
-    from sparkcheck.summarize import _sample_pass
+def _shuffles_above_observe(plan: str) -> list[str]:
+    """The nodes that shuffle (an Exchange, a query stage or a shuffle
+    read) between a CollectMetrics node and the root of a plan tree
+    string. Spark merges a task's accumulator update once from a result
+    task, but again each time a map task re-runs after a fetch failure,
+    so an Observation below a shuffle could count rows twice."""
+    path: list[tuple[int, str]] = []
+    bad: list[str] = []
+    for line in plan.splitlines():
+        m = re.match(r"([\s:|+-]*)(.*)", line)
+        depth, node = len(m.group(1)), m.group(2)
+        while path and path[-1][0] >= depth:
+            path.pop()
+        if node.startswith("CollectMetrics"):
+            bad += [n for _, n in path
+                    if re.match(r"(\w*Exchange|\w*QueryStage|AQEShuffleRead)", n)]
+        path.append((depth, node))
+    return bad
 
-    cfg = ExpectationConfiguration.from_dict(
-        {"expectation_type": "expect_column_values_to_match_regex",
-         "kwargs": {"column": "doc_id", "regex": "^hot", "mostly": 0.5,
-                    "row_condition": 'doc_id LIKE "%1%"',
-                    "condition_parser": "spark"}})
-    exp = get_expectation(cfg.expectation_type)
-    for rf, carried in (("BASIC", False), ("COMPLETE", True)):
-        reqs = exp.metric_requests(cfg, parse_result_format(rf))
-        rider = reqs["unexpected_count"]
-        out = _sample_pass(MetricResolver(unit), [reqs["unexpected_values"]], [rider])
-        assert (rider.id in out) is carried
-        if carried:
-            want = MetricResolver(unit).resolve([rider])[rider.id]
-            assert out[rider.id] == want
+
+def _executed_plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_no_shuffle_above_observe(spark, unit, monkeypatch):
+    """Exactly-once plan guard: in the executed plans of the resolver's
+    bundle (unfiltered, row_condition and span domains) and of
+    validate_and_extract's rows over span_violations, no shuffle sits
+    between a CollectMetrics node and the root."""
+    from sparkcheck.metrics import Domain, MetricConfiguration
+
+    observed = []
+    original = MetricResolver.observe
+
+    def recording(self, frame, cfgs):
+        out, read = original(self, frame, cfgs)
+        observed.append(out)
+        return out, read
+
+    monkeypatch.setattr(MetricResolver, "observe", recording)
+    resolver = MetricResolver(unit)
+    domains = [Domain(column="n_spans"),
+               Domain(column="n_spans", row_condition='doc_id LIKE "hot%"'),
+               Domain(column="__span.offset", explode_col="spans")]
+    resolver.resolve([MetricConfiguration(m, d) for d in domains
+                      for m in ("table.row_count", "column.max")])
+    _, rows, _ = validate_and_extract(unit, _ingest_suite(), span_violations,
+                                      result_format="BASIC")
+    plans = [_executed_plan(f) for f in observed[:3] + [rows]]
+    assert len(observed) >= 4
+    for plan in plans:
+        assert "CollectMetrics" in plan
+        assert _shuffles_above_observe(plan) == [], plan
+    # the guard sees an Observation below a shuffle
+    below = unit.observe("o", F.count(F.lit(1)).alias("n")).groupBy("n_spans").count()
+    assert _shuffles_above_observe(_executed_plan(below))
+
+
+def _jobs_in_group(spark, run):
+    """(jobs ``run()`` started, those of them in the caller's job group)."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    before = _last_job_id(spark)
+    sc.setJobGroup("caller", "caller's jobs")
+    try:
+        run()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    grouped = set(st.getJobIdsForGroup("caller"))
+    started = set(range(before + 1, max([_last_job_id(spark), *grouped]) + 1))
+    return started, started & grouped
+
+
+def test_worker_thread_jobs_carry_callers_group(spark, unit, tmp_path):
+    """Every Spark job of validate_and_extract (its prefetch thread runs
+    most of them) and of a concurrent runner run (a thread pool) carries
+    the caller's job group, so cancelJobGroup reaches all of them."""
+    started, grouped = _jobs_in_group(spark, lambda: validate_and_extract(
+        unit, _ingest_suite(), span_violations, result_format="BASIC"))
+    assert len(started) >= 5 and grouped == started, (len(started), len(grouped))
+
+    runner = CheckpointRunner(spark, ParquetStore(str(tmp_path / "g")), n_buckets=2,
+                              violations_fn=span_violations, max_concurrency=2)
+    started, grouped = _jobs_in_group(
+        spark, lambda: runner.run(unit, _ingest_suite(), run_id="g"))
+    assert started and grouped == started, (len(started), len(grouped))
 
 
 @pytest.mark.parametrize("n_values", [5, 18])

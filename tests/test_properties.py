@@ -663,3 +663,118 @@ def test_heavy_hitter_sketch_brackets_exact_counts(
     assert {v for v, _ in heavy} <= {r["value"] for r in cert}
     got = {(r["value"], r["cnt"]) for r in heavy_hitters(df, "v", min_fraction, k=64).collect()}
     assert got == heavy
+
+
+# one aggregate path: every registered aggregate, resolved through the
+# resolver, equals the same aggregate Columns in a plain df.agg. Doubles
+# are dyadic so their sums are exact in any merge order; NaN, -0.0 and
+# NULL are in the draw, and NaN of a span field is not masked (the
+# resolver knows the dtypes of top-level columns only).
+_AGG_D = st.one_of(st.none(), st.sampled_from([0.0, -0.0, 1.0, -2.5, 3.25, 1024.0, math.nan]))
+_AGG_L = st.one_of(st.none(), st.integers(min_value=-5, max_value=5))
+_AGG_S = st.one_of(st.none(), st.sampled_from(["a", "b", "", "cc", "ddd"]))
+_AGG_FRAMES = st.lists(
+    st.tuples(
+        _AGG_D, _AGG_L, _AGG_S,
+        st.one_of(st.none(), st.lists(st.tuples(_AGG_D, _AGG_L, _AGG_S), max_size=3)),
+    ),
+    max_size=12,
+)
+_AGG_DDL = "d double, l long, s string, spans array<struct<d:double,l:long,s:string>>"
+# (metric, column kinds it accepts, value kwargs)
+_AGG_POOL = [
+    ("table.row_count", (None,), {}),
+    ("column.null_count", ("d", "l", "s"), {}),
+    ("column.nonnull_count", ("d", "l", "s"), {}),
+    ("column.mean", ("d", "l"), {}),
+    ("column.standard_deviation", ("d", "l"), {}),
+    ("column.min", ("d", "l", "s"), {}),
+    ("column.max", ("d", "l", "s"), {}),
+    ("column.sum", ("d", "l"), {}),
+    ("column.distinct_values.count", ("d", "l", "s"), {"exact": True}),
+    ("column.distinct_values.count", ("d", "l", "s"), {}),
+    ("column.quantile_values", ("d", "l"), {"quantiles": (0.0, 0.5, 0.75)}),
+    ("column.quantile_values", ("d", "l"), {"quantiles": (0.25, 0.5), "exact": True}),
+    ("column.median", ("d", "l"), {}),
+    ("column_values.length.min", ("s",), {}),
+    ("column_values.length.max", ("s",), {}),
+    ("map.unexpected_count", ("l",),
+     {"condition": "column_values.between", "condition_kwargs": {"min_value": 0, "max_value": 3}}),
+    ("map.unexpected_count", ("s",),
+     {"condition": "column_values.in_set", "condition_kwargs": {"value_set": ["a", "cc"]}}),
+    ("column.histogram", ("d", "l"), {"bins": (-1.0, 0.0, 1.0, 4.0)}),
+    ("column.categorical_histogram", ("l",), {"values": [0, 1, 2]}),
+    ("column.categorical_histogram", ("s",), {"values": ["a", "b", ""]}),
+]
+_AGG_DOMAINS = {
+    "table": {},
+    "row_condition": {"row_condition": "l > 0 OR s = 'a'"},
+    "span": {"explode_col": "spans"},
+}
+
+
+def _same(a, b, close):
+    if isinstance(a, list) and isinstance(b, list):
+        return len(a) == len(b) and all(_same(x, y, close) for x, y in zip(a, b))
+    if isinstance(a, float) and isinstance(b, float):
+        if math.isnan(a) or math.isnan(b):
+            return math.isnan(a) and math.isnan(b)
+        return math.isclose(a, b, rel_tol=1e-9, abs_tol=1e-12) if close else a == b
+    return a == b
+
+
+@_settings
+@given(
+    rows=_AGG_FRAMES,
+    n_parts=st.integers(min_value=1, max_value=3),
+    domain=st.sampled_from(sorted(_AGG_DOMAINS)),
+    picks=st.lists(
+        st.tuples(st.integers(0, len(_AGG_POOL) - 1), st.integers(0, 2)),
+        min_size=1, max_size=6,
+    ),
+)
+def test_resolved_aggregates_match_df_agg(spark, rows, n_parts, domain, picks):
+    """``MetricResolver.resolve`` of a random subset of the registered
+    aggregates over an unfiltered, a row_condition or a span domain equals
+    ``domain.apply(df).agg(<the same agg_fn Columns>)``: exactly, except
+    mean and stddev (merge order), and the exact distinct count equals
+    ``countDistinct``."""
+    from pyspark.sql import functions as F
+
+    from sparkcheck.metrics import (
+        Domain,
+        MetricConfiguration,
+        MetricResolver,
+        domain_col,
+        freeze_kwargs,
+        get_metric_spec,
+    )
+
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, n_parts), _AGG_DDL)
+    prefix = "__span." if domain == "span" else ""
+    cfgs = {}
+    for i, k in picks:
+        name, kinds, kw = _AGG_POOL[i]
+        kind = kinds[k % len(kinds)]
+        dom = Domain(
+            column=None if kind is None else prefix + kind, **_AGG_DOMAINS[domain]
+        )
+        cfg = MetricConfiguration(name, dom, freeze_kwargs(**kw))
+        cfgs[cfg.id] = cfg
+
+    resolver = MetricResolver(df)
+    got = resolver.resolve(list(cfgs.values()), raise_errors=False)
+    assert not resolver.failed, resolver.failed
+
+    ctx = MetricResolver(df)
+    cols = []
+    for k, cfg in enumerate(cfgs.values()):
+        if cfg.name == "column.distinct_values.count" and cfg.kw("exact"):
+            col = F.countDistinct(domain_col(cfg.domain, ctx))
+        else:
+            col = get_metric_spec(cfg.name).agg_fn(cfg.domain, cfg, ctx)
+        cols.append(col.alias(f"m{k}"))
+    want = Domain(**_AGG_DOMAINS[domain]).apply(df).agg(*cols).collect()[0]
+    for k, (mid, cfg) in enumerate(cfgs.items()):
+        close = cfg.name in ("column.mean", "column.standard_deviation")
+        assert _same(got[mid], want[f"m{k}"], close), (cfg.name, got[mid], want[f"m{k}"])
