@@ -27,7 +27,9 @@ fails only its own EVR, never the violation append. Everything else
 resolves in a prefetch thread that overlaps the append: one sample pass
 per row set (the unexpected-value samples), one uniqueness pass per
 uniqueness check (count and sample together) and one noop-write bundle
-per filtered domain. The seeded resolver cache makes the handoff exact:
+per filtered domain. That thread starts right after the suite is planned,
+so it also overlaps the main thread's building of the observe node and
+the row plan. The seeded resolver cache makes the handoff exact:
 the validator sees pre-resolved metric values keyed by the same metric
 ids it would have requested, so EVRs are bit-identical to the two-pass
 report (tests/test_fused.py asserts this).
@@ -86,29 +88,29 @@ def validate_and_extract(
     Jobs started for the rest of the suite run in a prefetch thread that
     inherits the caller's Spark local properties (job group, tags)."""
     validator = Validator(df)
+    resolver = validator.resolver
     _, stage1, _ = validator._plan(suite, result_format, evaluation_parameters)  # noqa: SLF001
     on_table = [
         m for m in stage1 if m.domain.is_table and get_metric_spec(m.name).kind == "agg"
     ]
-    base, read = validator.resolver.observe(df, on_table)
-    rows = rows_builder(base)
     if action is None:
         def action(r: DataFrame) -> None:
             r.write.format("noop").mode("overwrite").save()
 
     # overlap the other metric jobs (the sample pass, the uniqueness
     # passes, the filtered-domain bundles — narrow, column-pruned scans)
-    # with the row-extraction action: Spark schedules concurrent jobs from
-    # separate threads across the same executors, so their wall-time hides
-    # behind the full-width pass instead of following it. Memoized into
-    # the same resolver the validator reads, so nothing recomputes.
+    # with the observe node, the row plan and the row-extraction action:
+    # Spark schedules concurrent jobs from separate threads across the same
+    # executors, so their wall-time hides behind the main thread's work
+    # instead of following it. Memoized into the same resolver the
+    # validator reads, so nothing recomputes.
     observed = {m.id for m in on_table}
     rest = [m for m in stage1 if m.id not in observed]
     prefetch_thread = None
     if rest:
         def _prefetch() -> None:
             try:
-                validator.resolver.resolve(rest, raise_errors=False)
+                resolver.resolve(rest, raise_errors=False)
             except Exception:  # noqa: BLE001 — validate() retries/records
                 pass
 
@@ -116,12 +118,14 @@ def validate_and_extract(
             target=inheritable_thread_target(df.sparkSession)(_prefetch), daemon=True
         )
         prefetch_thread.start()
+    try:
+        base, read = resolver.observe(df, on_table)
+        rows = rows_builder(base)
+        action_result = action(rows)
+    finally:  # a raising step never leaves the prefetch's jobs running
+        if prefetch_thread is not None:
+            prefetch_thread.join()
 
-    action_result = action(rows)
-    if prefetch_thread is not None:
-        prefetch_thread.join()
-
-    resolver = validator.resolver
     for mid, value in read().items():  # blocks until the action's query ends
         (resolver.failed if isinstance(value, Exception) else resolver.cache)[mid] = value
 

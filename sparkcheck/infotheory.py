@@ -465,7 +465,7 @@ def _entropy_metric(resolver, ddf: DataFrame, cfg: MetricConfiguration, resolved
     so unlike column.value_counts no cardinality cap is needed."""
     col = cfg.domain.column
     nn = F.col(col).isNotNull()
-    if col in resolver.float_cols:
+    if col in resolver.float_cols_of(cfg.domain):
         nn = nn & ~F.isnan(F.col(col))
     counts = ddf.where(nn).groupBy(col).agg(F.count("*").alias("c"))
     row = counts.agg(

@@ -31,18 +31,30 @@ Identity of a metric is ``(name, domain_id, value_kwargs_id)`` exactly as
 the reference (validator/metric_configuration.py:153-158; id_dict md5 of
 sorted JSON, core/id_dict.py:13-28) so shared metrics (row_count, null
 counts) are computed once per suite.
+
+Columns are built once per (metric id, schema). Every Column call is a
+py4j round trip, so building a suite's stage-1 Columns (aggregates,
+unexpected masks, span-check predicates) costs thousands of them per
+unit. :data:`COLUMN_CACHE` keeps each under ``(purpose, metric id, frame
+dtypes)`` and every later unit reuses it, so an ``agg_fn`` and a
+condition must be pure functions of the metric configuration and the
+frame's dtypes (see :class:`MetricSpec`).
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass, field
-from typing import Any, Callable
+from typing import Any, Callable, Hashable, TypeVar
 
+from pyspark import SparkContext
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _stable_id(obj: Any) -> str:
@@ -57,6 +69,63 @@ _FLOAT_TYPES = ("float", "double")
 def float_columns(df: DataFrame) -> frozenset[str]:
     """Names of float/double columns — the ones where NaN is possible."""
     return frozenset(n for n, t in df.dtypes if t in _FLOAT_TYPES)
+
+
+#: entries :data:`COLUMN_CACHE` keeps, least recently used out first. A
+#: ``$PARAMETER`` such as ``now()-timedelta(...)`` gives a new metric id on
+#: every call, so the bound keeps a long stream from growing the cache.
+COLUMN_CACHE_SIZE = 4096
+
+_V = TypeVar("_V")
+
+
+class ColumnCache:
+    """Spark Columns built once and reused on every later frame: a bounded
+    LRU map from a key to ``build()``'s result.
+
+    Only ``F.col(...)``-based Columns go in. They are unresolved, so one
+    Column is valid on any frame that has the columns it names; a
+    ``df[name]`` Column carries its frame's plan id and must not be cached.
+    A Column is a handle on a JVM object of one py4j gateway, so the cache
+    empties itself when the live gateway is not the one it was filled on.
+    Lookups and writes are single dict operations under a lock, so the
+    fused prefetch thread and the caller share it; two threads may build
+    the same entry, which is harmless."""
+
+    def __init__(self, size: int):
+        self.size = size
+        self._lock = threading.Lock()
+        self._entries: OrderedDict[Hashable, Any] = OrderedDict()
+        self._gateway: Any = None
+
+    def get(self, key: Hashable, build: Callable[[], _V]) -> _V:
+        gateway = SparkContext._gateway  # noqa: SLF001 — the live JVM link
+        with self._lock:
+            if self._gateway is not gateway:
+                self._entries.clear()
+                self._gateway = gateway
+            if key in self._entries:
+                self._entries.move_to_end(key)
+                return self._entries[key]
+        value = build()
+        with self._lock:
+            if self._gateway is gateway:
+                self._entries[key] = value
+                while len(self._entries) > self.size:
+                    self._entries.popitem(last=False)
+        return value
+
+    def clear(self) -> None:
+        with self._lock:
+            self._entries.clear()
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+
+#: the one Column cache: resolver aggregates and masks
+#: (:meth:`MetricResolver.column`) and the span-check plan (``spans``)
+COLUMN_CACHE = ColumnCache(COLUMN_CACHE_SIZE)
 
 
 def domain_col(domain: "Domain", ctx: "MetricResolver | None" = None) -> Column:
@@ -74,7 +143,7 @@ def domain_col(domain: "Domain", ctx: "MetricResolver | None" = None) -> Column:
     row filter) so metrics on different columns still share ONE bundle.
     """
     c = F.col(domain.column)
-    if ctx is not None and domain.column in ctx.float_cols:
+    if ctx is not None and domain.column in ctx.float_cols_of(domain):
         c = F.when(~F.isnan(c), c)
     return c
 
@@ -195,7 +264,14 @@ def freeze_kwargs(**kwargs: Any) -> tuple:
 
 @dataclass
 class MetricSpec:
-    """Registry entry. Exactly one of the three fns is set, per kind."""
+    """Registry entry. Exactly one of the three fns is set, per kind.
+
+    An ``agg_fn`` is called once per (metric id, frame dtypes) and its
+    Column reused for every later frame with those dtypes
+    (:data:`COLUMN_CACHE`), so it must read nothing but the domain, the
+    configuration and the resolver's ``dtypes``/``float_cols_of`` — no
+    resolved values, no clock, no ``df[name]`` Columns. The same holds for
+    a condition's mask (``summarize.unexpected_mask``)."""
 
     name: str
     kind: str  # 'agg' | 'eager' | 'derived'
@@ -238,7 +314,9 @@ def get_metric_spec(name: str) -> MetricSpec:
 
 
 def agg_metric(name: str):
-    """Decorator: register fn(domain, cfg, ctx) -> Column as a bundled aggregate."""
+    """Decorator: register fn(domain, cfg, ctx) -> Column as a bundled
+    aggregate. ``fn`` must be pure in (cfg, ctx.dtypes): its Column is
+    built once per metric id and schema and then reused (see MetricSpec)."""
 
     def deco(fn):
         register_metric(MetricSpec(name=name, kind="agg", agg_fn=fn))
@@ -326,14 +404,34 @@ class MetricResolver:
         # original exception in exception_info, validator.py:1159-1213)
         self.failed: dict[tuple, Exception] = {}
         self._domain_df_cache: dict[str, DataFrame] = {}
+        # read once, here: the fused prefetch thread shares this resolver
+        fields = df.schema.fields
+        #: the frame's (name, simple type) pairs: the Column cache's schema key
+        self.dtypes_key = tuple((f.name, f.dataType.simpleString()) for f in fields)
+        self.dtypes = dict(self.dtypes_key)
         # float/double columns get NaN==NULL semantics (see domain_col)
-        self.float_cols = float_columns(df)
+        self.float_cols = frozenset(n for n, t in self.dtypes_key if t in _FLOAT_TYPES)
+        # per array<struct> column: the `__span.<field>` accessors of its
+        # float/double fields, float columns of a domain exploding it
+        self._span_float_cols = {
+            f.name: frozenset(
+                f"__span.{g.name}" for g in f.dataType.elementType.fields
+                if g.dataType.simpleString() in _FLOAT_TYPES
+            )
+            for f in fields
+            if isinstance(f.dataType, T.ArrayType)
+            and isinstance(f.dataType.elementType, T.StructType)
+        }
 
-    @property
-    def dtypes(self) -> dict[str, str]:
-        if not hasattr(self, "_dtypes"):
-            self._dtypes = dict(self.df.dtypes)
-        return self._dtypes
+    def float_cols_of(self, domain: Domain) -> frozenset[str]:
+        """The float/double accessors of ``domain``'s row set: the frame's
+        columns, plus the ``__span.<field>`` ones of a span domain."""
+        return self.float_cols | self._span_float_cols.get(domain.explode_col, frozenset())
+
+    def column(self, purpose: str, mid: Hashable, build: Callable[[], _V]) -> _V:
+        """``build()`` once per (purpose, metric id, frame dtypes), from
+        :data:`COLUMN_CACHE` after that."""
+        return COLUMN_CACHE.get((purpose, mid, self.dtypes_key), build)
 
     def domain_df(self, domain: Domain) -> DataFrame:
         key = domain.compute_id
@@ -501,22 +599,25 @@ class MetricResolver:
         out: dict[tuple, Any] = {}
         cols: dict[tuple, Column] = {}
         for cfg in cfgs:
+            def build(cfg: MetricConfiguration = cfg) -> Column:
+                agg = get_metric_spec(cfg.name).agg_fn(cfg.domain, cfg, self)
+                return agg.alias(_observed_name(cfg.id))
+
             try:
-                cols[cfg.id] = get_metric_spec(cfg.name).agg_fn(cfg.domain, cfg, self)
+                cols[cfg.id] = self.column("agg", cfg.id, build)
             except Exception as e:  # noqa: BLE001 — e.g. type guards
                 out[cfg.id] = e
 
         def attach() -> tuple[Observation, DataFrame]:
             obs = Observation()
-            aliased = [c.alias(f"m_{k}") for k, c in enumerate(cols.values())]
-            return obs, frame.observe(obs, *aliased) if cols else frame
+            return obs, frame.observe(obs, *cols.values()) if cols else frame
 
         try:
             obs, observed = attach()
         except AnalysisException:  # refused (e.g. DISTINCT): drop the bad ones
             for mid, col in list(cols.items()):
                 try:
-                    frame.observe(Observation(), col.alias("m"))
+                    frame.observe(Observation(), col)
                 except AnalysisException as e:
                     out[mid] = e
                     del cols[mid]
@@ -525,7 +626,7 @@ class MetricResolver:
         def read() -> dict[tuple, Any]:
             if cols:
                 got = obs.get
-                out.update((mid, got[f"m_{k}"]) for k, mid in enumerate(cols))
+                out.update((mid, got[_observed_name(mid)]) for mid in cols)
             return out
 
         return observed, read
@@ -543,6 +644,12 @@ class MetricResolver:
         if cfg.id in self.failed:
             raise self.failed[cfg.id]
         return self.cache[cfg.id]
+
+
+def _observed_name(mid: tuple) -> str:
+    """The Observation field of a metric id: derived from the id, not from
+    its place in a bundle, so one cached aliased Column serves any bundle."""
+    return "m_" + _stable_id(mid)
 
 
 # ---------------------------------------------------------------------------
@@ -682,7 +789,7 @@ def _value_counts(resolver, ddf: DataFrame, cfg: MetricConfiguration, resolved):
     sort = cfg.kw("sort", "value")
     max_groups = int(cfg.kw("max_groups", VALUE_COUNTS_MAX_GROUPS))
     nn = F.col(col).isNotNull()
-    if col in resolver.float_cols:
+    if col in resolver.float_cols_of(cfg.domain):
         nn = nn & ~F.isnan(F.col(col))
     out = ddf.where(nn).groupBy(col).count()
     if sort == "count":

@@ -32,6 +32,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .metrics import COLUMN_CACHE
+
 
 def interleave_documents(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
@@ -100,11 +102,18 @@ def explode_spans(docs: DataFrame) -> DataFrame:
     span's offset, read straight from the array: ``element_at`` is
     1-based, so index ``span_index`` is the previous span.
     """
-    return docs.select(
-        "doc_id", "spans", F.posexplode("spans").alias("span_index", "span")
-    ).select(
-        "doc_id",
-        "span_index",
+    explode, flat = COLUMN_CACHE.get(("spans.explode",), _explode_columns)
+    return docs.select(*explode).select(*flat)
+
+
+def _explode_columns() -> tuple[list[Column], list[Column]]:
+    """:func:`explode_spans`' two projections (built once, then cached)."""
+    explode = [
+        F.col("doc_id"), F.col("spans"), F.posexplode("spans").alias("span_index", "span")
+    ]
+    flat = [
+        F.col("doc_id"),
+        F.col("span_index"),
         F.col("span.kind").alias("kind"),
         F.col("span.text").alias("text"),
         F.col("span.media_ref").alias("media_ref"),
@@ -113,7 +122,8 @@ def explode_spans(docs: DataFrame) -> DataFrame:
             F.col("span_index") > 0,
             F.element_at("spans", F.col("span_index"))["offset"],
         ).alias("prev_offset"),
-    )
+    ]
+    return explode, flat
 
 
 # ---------------------------------------------------------------------------
@@ -176,6 +186,15 @@ def span_violations_flat(
     immediate previous span. A span with a NULL ``kind`` is missing, not
     unexpected — GX's map expectations skip NULLs the same way — so it
     is never flagged by the kind/payload check; the DuckDB oracles agree."""
+    where, exploded, flat = COLUMN_CACHE.get(("spans.violations",), _violation_columns)
+    return flat_spans.where(where).select(*exploded).select(
+        F.lit(run_id).alias("run_id"), F.lit(partition_id).alias("partition_id"), *flat
+    )
+
+
+def _violation_columns() -> tuple[Column, list[Column], list[Column]]:
+    """:func:`span_violations_flat`'s filter and its two projections but
+    the run and partition literals (built once, then cached)."""
     text_bad = (
         (F.col("kind") == "text")
         & F.col("text").isNotNull()
@@ -199,9 +218,9 @@ def span_violations_flat(
             F.array(F.struct(F.lit(name).alias("expectation"), observed.alias("observed_value"))),
         ).otherwise(F.array().cast(vs))
 
-    out = flat_spans.where(text_bad | kind_bad | off_bad).select(
-        "doc_id",
-        "span_index",
+    exploded = [
+        F.col("doc_id"),
+        F.col("span_index"),
         F.explode(
             F.concat(
                 tagged(text_bad, "expect_span_text_printable", F.col("text")),
@@ -209,15 +228,14 @@ def span_violations_flat(
                 tagged(off_bad, "expect_span_offsets_increasing", F.lit(None).cast("string")),
             )
         ).alias("v"),
-    )
-    return out.select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(partition_id).alias("partition_id"),
-        "doc_id",
+    ]
+    flat = [
+        F.col("doc_id"),
         F.col("span_index").cast("int").alias("span_index"),
         F.col("v.expectation").alias("expectation"),
         F.col("v.observed_value").alias("observed_value"),
-    )
+    ]
+    return text_bad | kind_bad | off_bad, exploded, flat
 
 
 # ---------------------------------------------------------------------------

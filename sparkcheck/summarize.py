@@ -40,7 +40,9 @@ from .conditions import get_condition
 from .metrics import (
     Domain,
     MetricConfiguration,
+    MetricResolver,
     SharedPass,
+    _stable_id,
     agg_metric,
     domain_predicate,
     eager_metric,
@@ -65,21 +67,31 @@ def condition_kwargs(cfg: MetricConfiguration) -> tuple[str, dict[str, Any]]:
     return name, kw or {}
 
 
-def unexpected_mask(
-    cfg: MetricConfiguration,
-    float_cols: frozenset[str] = frozenset(),
-    dtypes: dict[str, str] | None = None,
-) -> Column:
-    name, kw = condition_kwargs(cfg)
-    return get_condition(name).unexpected(cfg.domain, kw, float_cols, dtypes)
+def _mask_id(cfg: MetricConfiguration) -> tuple:
+    """The identity of ``cfg``'s unexpected mask: its domain and condition.
+    A check's count, sample and window-count requests share one mask."""
+    condition = [cfg.kw("condition"), cfg.kw("condition_kwargs")]
+    return (cfg.domain.domain_id, _stable_id(condition))
+
+
+def unexpected_mask(cfg: MetricConfiguration, resolver: MetricResolver) -> Column:
+    """The unexpected mask of ``cfg``'s condition over its domain, built
+    once per (condition, domain, frame dtypes) and then reused
+    (``MetricResolver.column``)."""
+
+    def build() -> Column:
+        name, kw = condition_kwargs(cfg)
+        return get_condition(name).unexpected(
+            cfg.domain, kw, resolver.float_cols_of(cfg.domain), resolver.dtypes
+        )
+
+    return resolver.column("mask", _mask_id(cfg), build)
 
 
 @agg_metric("map.unexpected_count")
 def _unexpected_count_agg(domain: Domain, cfg: MetricConfiguration, ctx=None) -> Column:
     # joins the domain's aggregate bundle — reference :625-640
-    fc = ctx.float_cols if ctx is not None else frozenset()
-    dt = ctx.dtypes if ctx is not None else None
-    return F.sum(F.when(unexpected_mask(cfg, fc, dt), 1).otherwise(0))
+    return F.sum(F.when(unexpected_mask(cfg, ctx), 1).otherwise(0))
 
 
 _UNIQUENESS = ("column_values.unique", "compound_columns.unique")
@@ -136,17 +148,19 @@ def _sample_pass(resolver, cfgs: list[MetricConfiguration]) -> dict:
     ``__pos``: it gets its first ``limit`` unexpected rows in partition
     order, exactly what ``filter(mask).limit(n).collect()`` returns. A
     request whose mask cannot be built gets its exception as its value."""
-    fc, dt = resolver.float_cols, resolver.dtypes
     out: dict[tuple, Any] = {}
     flags, sampled = [], []
     for cfg in cfgs:
+        def flag(cfg: MetricConfiguration = cfg) -> Column:
+            mask = unexpected_mask(cfg, resolver)
+            pred = domain_predicate(cfg.domain)  # the mask never sees other rows
+            return F.coalesce(mask if pred is None else F.when(pred, mask), F.lit(False))
+
         try:
-            mask = unexpected_mask(cfg, fc, dt)
+            flags.append(resolver.column("flag", _mask_id(cfg), flag))
         except Exception as e:  # noqa: BLE001
             out[cfg.id] = e
             continue
-        pred = domain_predicate(cfg.domain)  # the mask never sees other rows
-        flags.append(F.coalesce(mask if pred is None else F.when(pred, mask), F.lit(False)))
         sampled.append(cfg)
     if not sampled:  # no mask could be built: nothing to read rows for
         raise out[cfgs[0].id]
@@ -247,7 +261,7 @@ def _unexpected_count_window(resolver, ddf: DataFrame, cfg: MetricConfiguration,
     if name in ("column_values.increasing", "column_values.decreasing"):
         _guard_global_window(ddf, name, _kw)
     return ddf.withColumn(
-        "__unexpected", unexpected_mask(cfg, resolver.float_cols, resolver.dtypes)
+        "__unexpected", unexpected_mask(cfg, resolver)
     ).filter(F.col("__unexpected")).count()
 
 
@@ -329,13 +343,12 @@ def filter_unexpected_rows(
 
 
 def _filter_unexpected(
-    ddf: DataFrame,
-    cfg: MetricConfiguration,
-    float_cols: frozenset[str] = frozenset(),
-    dtypes: dict[str, str] | None = None,
+    ddf: DataFrame, cfg: MetricConfiguration, resolver: MetricResolver
 ) -> DataFrame:
     name, kw = condition_kwargs(cfg)
-    return filter_unexpected_rows(ddf, name, cfg.domain, kw, float_cols, dtypes)
+    return filter_unexpected_rows(
+        ddf, name, cfg.domain, kw, resolver.float_cols_of(cfg.domain), resolver.dtypes
+    )
 
 
 @eager_metric("map.unexpected_values", shared_pass=_shared_pass)
@@ -345,7 +358,7 @@ def _unexpected_values(resolver, ddf: DataFrame, cfg: MetricConfiguration, _):
     # only the other window conditions reach this filter + limit.
     limit = cfg.kw("limit")
     alias = _aliases([cfg])
-    out = _filter_unexpected(ddf, cfg, resolver.float_cols, resolver.dtypes)
+    out = _filter_unexpected(ddf, cfg, resolver)
     out = out.select(*[F.col(c).alias(a) for c, a in alias.items()])
     rows = (out.limit(int(limit)) if limit is not None else out).collect()
     return [_sample_value(cfg.domain, r, alias) for r in rows]
@@ -365,7 +378,7 @@ def _unexpected_index_list(resolver, ddf: DataFrame, cfg: MetricConfiguration, _
         else [dom.column_a, dom.column_b]
     )
     sel = list(dict.fromkeys(index_cols + value_cols))
-    out = _filter_unexpected(ddf, cfg, resolver.float_cols, resolver.dtypes).select(*sel)
+    out = _filter_unexpected(ddf, cfg, resolver).select(*sel)
     rows = (out.limit(int(limit)) if limit is not None else out).collect()
     return [r.asDict() for r in rows]
 
@@ -377,7 +390,7 @@ def _unexpected_rows(resolver, ddf: DataFrame, cfg: MetricConfiguration, _):
     — COMPLETE collects all, otherwise limit(partial_unexpected_count);
     surfaced in the EVR by expectation.py:3543-3548)."""
     limit = cfg.kw("limit")
-    out = _filter_unexpected(ddf, cfg, resolver.float_cols, resolver.dtypes)
+    out = _filter_unexpected(ddf, cfg, resolver)
     rows = (out.limit(int(limit)) if limit is not None else out).collect()
     return [r.asDict(recursive=True) for r in rows]
 
@@ -387,7 +400,7 @@ def _unexpected_value_counts(resolver, ddf: DataFrame, cfg: MetricConfiguration,
     # reference: column_map_condition_auxilliary_methods.py:387-428
     dom = cfg.domain
     out = (
-        _filter_unexpected(ddf, cfg, resolver.float_cols, resolver.dtypes)
+        _filter_unexpected(ddf, cfg, resolver)
         .groupBy(F.col(dom.column).alias("v"))
         .count()
         .orderBy(F.desc("count"), F.col("v"))
@@ -523,7 +536,7 @@ def _unexpected_index_query(resolver, ddf: DataFrame, cfg: MetricConfiguration, 
     """Stringified retrieval query for the violating rows (reference:
     map_condition_auxilliary_methods.py:797-836) — documentation aid, not
     executed by the engine."""
-    mask = unexpected_mask(cfg)
+    mask = unexpected_mask(cfg, resolver)
     try:
         expr = mask._jc.toString()  # noqa: SLF001 — classic pyspark
     except AttributeError:  # pragma: no cover — Spark Connect columns
@@ -554,7 +567,6 @@ def suite_violations(
     from pyspark.sql import functions as _F
 
     from .expectations import build_domain, get_expectation
-    from .metrics import MetricResolver
 
     # one shared resolver: two-stage expectations (z-scores) resolve their
     # stage-1 statistics through it before the mask is built, and repeated

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from sparkcheck import ExpectationConfiguration, ExpectationSuite, validate_df
 from sparkcheck.fused import validate_and_extract
-from sparkcheck.metrics import MetricResolver
+from sparkcheck.metrics import COLUMN_CACHE, MetricResolver
 from sparkcheck.runner import CheckpointRunner, ParquetStore
 from sparkcheck.spans import span_violations
 from sparkcheck.synth import generate_docs
@@ -414,4 +414,52 @@ def test_categorical_kl_paths_agree(spark, unit, monkeypatch, n_values):
     default = validate_df(unit, s, result_format="BASIC")
     other_path = 10**6 if n_values > distribution.CATEGORICAL_AGG_MAX_VALUES else 0
     monkeypatch.setattr(distribution, "CATEGORICAL_AGG_MAX_VALUES", other_path)
-    assert _norm(validate_df(unit, s, result_format="BASIC")) == _norm(default)
+    # the aggregate Column is built once per metric id and schema: rebuild
+    # it under the patched bound, and let no later test reuse that one
+    COLUMN_CACHE.clear()
+    try:
+        assert _norm(validate_df(unit, s, result_format="BASIC")) == _norm(default)
+    finally:
+        COLUMN_CACHE.clear()
+
+
+def test_unit_py4j_budget(spark, unit, monkeypatch):
+    """Once a suite's Columns are built, a commit unit makes at most 1,000
+    py4j round trips on all threads (the prefetch thread and py4j's
+    object-release thread included). Rebuilding every Column for every
+    unit costs about 3,400 on this unit."""
+    from py4j.clientserver import ClientServerConnection
+
+    suite = _ingest_suite()
+    validate_and_extract(unit, suite, span_violations, result_format="BASIC")
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counted(self, command, *args, **kwargs):
+        calls.append(1)  # list.append is atomic across threads
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    rep, _, _ = validate_and_extract(unit, suite, span_violations,
+                                     result_format="BASIC")
+    monkeypatch.undo()
+    assert all(not r["exception_info"]["raised_exception"] for r in rep["results"])
+    assert len(calls) <= 1000, len(calls)
+
+
+def test_prefetch_thread_joined_when_a_step_raises(spark, unit):
+    """A raising action or rows_builder leaves no prefetch thread (and so
+    no job of the failed unit) running behind the caller."""
+    import threading
+
+    def prefetching():
+        return [t for t in threading.enumerate() if "_prefetch" in t.name]
+
+    def fail(_):
+        raise RuntimeError("injected failure")
+
+    for step in ({"rows_builder": fail},
+                 {"rows_builder": span_violations, "action": fail}):
+        with pytest.raises(RuntimeError, match="injected failure"):
+            validate_and_extract(unit, _ingest_suite(), result_format="BASIC", **step)
+        assert prefetching() == []

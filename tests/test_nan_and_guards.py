@@ -43,6 +43,28 @@ def test_aggregates_skip_nan(nan_df):
     assert _one(r, "column.median") == 2.0
 
 
+def test_span_struct_field_nan_is_null(spark):
+    """NaN≡NULL holds for a double field of an exploded span struct
+    (``__span.x``) exactly as for a top-level double column: aggregates
+    skip NaN, and a map check counts it missing, not unexpected."""
+    df = spark.createDataFrame(
+        [(v, [(v,)]) for v in (1.0, float("nan"), 3.0)],
+        "x double, spans array<struct<x:double>>",
+    )
+    r = MetricResolver(df)
+    for dom in (Domain(column="x"), Domain(column="__span.x", explode_col="spans")):
+        mean = MetricConfiguration("column.mean", dom)
+        nonnull = MetricConfiguration("column.nonnull_count", dom)
+        r.resolve([mean, nonnull])
+        assert (r[mean], r[nonnull]) == (2.0, 2), dom
+    report = validate_df(df, ExpectationSuite("nan", [ExpectationConfiguration(
+        "expect_span_values_to_be_between",
+        {"span_field": "x", "min_value": 0, "max_value": 2},
+    )]), result_format="BASIC")
+    res = report["results"][0]["result"]
+    assert (res["unexpected_count"], res["missing_count"]) == (1, 1), res
+
+
 def test_between_counts_nan_as_missing_not_unexpected(nan_df):
     report = validate_df(
         nan_df,
