@@ -27,7 +27,9 @@ fails only its own EVR, never the violation append. Everything else
 resolves in a prefetch thread that overlaps the append: one sample pass
 per row set (the unexpected-value samples), one uniqueness pass per
 uniqueness check (count and sample together) and one noop-write bundle
-per filtered domain. That thread starts right after the suite is planned,
+per filtered domain. The resolver runs those queries side by side, each
+from its own worker thread, so the prefetch takes about as long as the
+slowest of them. That thread starts right after the suite is planned,
 so it also overlaps the main thread's building of the observe node and
 the row plan. The seeded resolver cache makes the handoff exact:
 the validator sees pre-resolved metric values keyed by the same metric
@@ -98,9 +100,10 @@ def validate_and_extract(
             r.write.format("noop").mode("overwrite").save()
 
     # overlap the other metric jobs (the sample pass, the uniqueness
-    # passes, the filtered-domain bundles — narrow, column-pruned scans)
-    # with the observe node, the row plan and the row-extraction action:
-    # Spark schedules concurrent jobs from separate threads across the same
+    # passes, the filtered-domain bundles — narrow, column-pruned scans,
+    # which the resolver runs side by side on its round's workers) with
+    # the observe node, the row plan and the row-extraction action: Spark
+    # schedules concurrent jobs from separate threads across the same
     # executors, so their wall-time hides behind the main thread's work
     # instead of following it. Memoized into the same resolver the
     # validator reads, so nothing recomputes.

@@ -18,8 +18,14 @@ unexpected-counts and histogram bins are ``sum(when(...))`` columns of the
 same bundle. Requests that need rows rather than an aggregate are bundled
 too (``SharedPass``): every unexpected-value sample over one row set comes
 from ONE sample-pass query, and each uniqueness domain's count and sample
-from ONE uniqueness-pass query. A bundle or pass that raises is resolved
-one request at a time, so one bad request fails only itself.
+from ONE uniqueness-pass query. The passes and bundles of one resolver
+round are independent, so they run side by side, each from its own worker
+thread (at most :data:`ROUND_WORKERS` at once): Spark schedules the jobs of
+separate driver threads together on the same executors, where the
+reference resolves one bundle after another. A pass that raises is split
+in halves and each half re-run, down to single requests; a bundle that
+raises is resolved one request at a time. Either way one bad request
+fails only itself.
 
 Metric kinds (reference enum core/metric_function_types.py:26-112):
   - ``agg``     -> returns an unevaluated Spark Column aggregate; bundled.
@@ -47,10 +53,12 @@ import hashlib
 import json
 import threading
 from collections import OrderedDict
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Any, Callable, Hashable, TypeVar
 
-from pyspark import SparkContext
+from pyspark import SparkContext, inheritable_thread_target
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
@@ -75,6 +83,10 @@ def float_columns(df: DataFrame) -> frozenset[str]:
 #: ``$PARAMETER`` such as ``now()-timedelta(...)`` gives a new metric id on
 #: every call, so the bound keeps a long stream from growing the cache.
 COLUMN_CACHE_SIZE = 4096
+
+#: most queries of one resolver round (sample passes, uniqueness passes,
+#: aggregate bundles) that run at once, each from its own worker thread
+ROUND_WORKERS = 4
 
 _V = TypeVar("_V")
 
@@ -292,7 +304,13 @@ class MetricSpec:
 class SharedPass:
     """One Spark query that resolves every ready request naming the same
     ``(run, key)``: ``run(resolver, requests)`` returns ``{metric id:
-    value}`` (an exception as the value fails that request alone)."""
+    value}`` (an exception as the value fails that request alone).
+
+    ``run`` is called from a worker thread, side by side with the other
+    queries of its resolver round, so it must be thread-safe: it may read
+    the resolver (``domain_df``, ``column``, ``dtypes``) but must write no
+    state that another query of the round reads. When it raises, it is
+    called again on each half of ``requests``."""
 
     run: Callable[..., dict[tuple, Any]]
     key: Any
@@ -434,10 +452,14 @@ class MetricResolver:
         return COLUMN_CACHE.get((purpose, mid, self.dtypes_key), build)
 
     def domain_df(self, domain: Domain) -> DataFrame:
+        """The frame of ``domain``'s compute domain: one per ``compute_id``,
+        also when a round's workers and the fused main thread ask at once
+        (two may build it; ``setdefault`` keeps the first)."""
         key = domain.compute_id
-        if key not in self._domain_df_cache:
-            self._domain_df_cache[key] = domain.apply(self.df)
-        return self._domain_df_cache[key]
+        ddf = self._domain_df_cache.get(key)
+        if ddf is None:
+            ddf = self._domain_df_cache.setdefault(key, domain.apply(self.df))
+        return ddf
 
     def resolve(
         self,
@@ -511,7 +533,6 @@ class MetricResolver:
 
             passes: dict[tuple, tuple[SharedPass, list[MetricConfiguration]]] = {}
             singles: list[MetricConfiguration] = []
-            alone: dict[tuple, SharedPass] = {}  # failed pass: one request each
             for cfg in ready_other:
                 spec = get_metric_spec(cfg.name)
                 sp = spec.shared_pass(cfg) if spec.shared_pass else None
@@ -519,32 +540,23 @@ class MetricResolver:
                     singles.append(cfg)
                 else:
                     passes.setdefault((sp.run, sp.key), (sp, []))[1].append(cfg)
-
-            # --- shared passes: ONE query per row set / uniqueness domain ---
-            for sp, cfgs in passes.values():
-                try:
-                    values = sp.run(self, cfgs)
-                except Exception:  # noqa: BLE001 — isolate: one at a time
-                    singles += cfgs
-                    alone.update((cfg.id, sp) for cfg in cfgs)
-                    continue
-                for cfg in cfgs:
-                    settle(cfg, values[cfg.id])
-
-            # --- aggregate bundles: ONE noop-write job per compute domain ---
             bundles: dict[str, list[MetricConfiguration]] = {}
             for cfg in ready_aggs:
                 bundles.setdefault(cfg.domain.compute_id, []).append(cfg)
-            for cfgs in bundles.values():
-                try:
-                    values = self._run_bundle(cfgs)
-                except Exception:  # noqa: BLE001 — isolate the bad aggregate
-                    values = {}
-                    for cfg in cfgs:
-                        try:
-                            values.update(self._run_bundle([cfg]))
-                        except Exception as e:  # noqa: BLE001
-                            values[cfg.id] = e
+
+            # --- side by side: ONE query per row set / uniqueness domain
+            # (shared passes), ONE noop-write job per compute domain
+            # (aggregate bundles); settled here, in that order ---
+            work = [
+                (cfgs, partial(_bisect, partial(sp.run, self), cfgs))
+                for sp, cfgs in passes.values()
+            ]
+            work += [
+                (cfgs, partial(self._run_bundle_isolated, cfgs))
+                for cfgs in bundles.values()
+            ]
+            results = self._run_side_by_side([task for _, task in work])
+            for (cfgs, _), values in zip(work, results):
                 for cfg in cfgs:
                     settle(cfg, values[cfg.id])
 
@@ -555,11 +567,7 @@ class MetricResolver:
                 last_err: Exception | None = None
                 for _attempt in range(self.MAX_RETRIES):
                     try:
-                        if cfg.id in alone:
-                            value = alone[cfg.id].run(self, [cfg])[cfg.id]
-                            if isinstance(value, Exception):
-                                raise value
-                        elif spec.kind == "eager":
+                        if spec.kind == "eager":
                             value = spec.eager_fn(
                                 self, self.domain_df(cfg.domain), cfg, self.cache
                             )
@@ -631,6 +639,38 @@ class MetricResolver:
 
         return observed, read
 
+    def _run_side_by_side(self, tasks: list[Callable[[], _V]]) -> list[_V]:
+        """Each task's result, in order. Two or more tasks run at once on
+        up to :data:`ROUND_WORKERS` worker threads. Each task is wrapped on
+        this thread, so that its jobs carry this thread's Spark local
+        properties (job group, tags) in a copy of its own: Spark writes
+        per-query properties such as ``spark.sql.execution.id`` into the
+        copy of the thread that runs the query. Every worker has ended
+        when this returns or raises."""
+        if len(tasks) <= 1:
+            return [task() for task in tasks]
+        session = self.df.sparkSession
+        wrapped = [inheritable_thread_target(session)(task) for task in tasks]
+        with ThreadPoolExecutor(
+            min(ROUND_WORKERS, len(tasks)), thread_name_prefix="sparkcheck-round"
+        ) as pool:
+            futures = [pool.submit(task) for task in wrapped]
+        return [f.result() for f in futures]
+
+    def _run_bundle_isolated(self, cfgs: list[MetricConfiguration]) -> dict[tuple, Any]:
+        """:meth:`_run_bundle`, and if it raises, each aggregate alone: an
+        aggregate that raises alone gets its exception as its value."""
+        try:
+            return self._run_bundle(cfgs)
+        except Exception:  # noqa: BLE001 — isolate the bad aggregate
+            values: dict[tuple, Any] = {}
+            for cfg in cfgs:
+                try:
+                    values.update(self._run_bundle([cfg]))
+                except Exception as e:  # noqa: BLE001
+                    values[cfg.id] = e
+            return values
+
     def _run_bundle(self, cfgs: list[MetricConfiguration]) -> dict[tuple, Any]:
         """Resolve the aggregates of one compute domain in ONE Spark job: an
         Observation on a noop write of the domain frame."""
@@ -644,6 +684,32 @@ class MetricResolver:
         if cfg.id in self.failed:
             raise self.failed[cfg.id]
         return self.cache[cfg.id]
+
+
+def _bisect(
+    run: Callable[[list[MetricConfiguration]], dict[tuple, Any]],
+    cfgs: list[MetricConfiguration],
+    error: Exception | None = None,
+) -> dict[tuple, Any]:
+    """``run(cfgs)``, and if it raises, the same for each half of ``cfgs``,
+    down to single requests, which get the exception as their value. One
+    bad request among n costs about 2·log2(n) more runs, not n. ``error``
+    says that ``run(cfgs)`` already raised it; when the left half then
+    runs, the right half is known to raise and is split without a run."""
+    if error is None:
+        try:
+            return run(cfgs)
+        except Exception as e:  # noqa: BLE001 — isolate the bad request
+            error = e
+    if len(cfgs) == 1:
+        return {cfgs[0].id: error}
+    half = len(cfgs) // 2
+    left, right = cfgs[:half], cfgs[half:]
+    try:
+        values = run(left)
+    except Exception as e:  # noqa: BLE001
+        return {**_bisect(run, left, e), **_bisect(run, right)}
+    return {**values, **_bisect(run, right, error)}
 
 
 def _observed_name(mid: tuple) -> str:

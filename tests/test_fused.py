@@ -11,16 +11,23 @@ from __future__ import annotations
 
 import json
 import re
+import threading
 
 import pytest
 from pyspark.sql import functions as F
 
 from sparkcheck import ExpectationConfiguration, ExpectationSuite, validate_df
 from sparkcheck.fused import validate_and_extract
-from sparkcheck.metrics import COLUMN_CACHE, MetricResolver
+from sparkcheck.metrics import (
+    COLUMN_CACHE,
+    ROUND_WORKERS,
+    MetricResolver,
+    get_metric_spec,
+)
 from sparkcheck.runner import CheckpointRunner, ParquetStore
 from sparkcheck.spans import span_violations
 from sparkcheck.synth import generate_docs
+from sparkcheck.validator import Validator
 
 N_DOCS = 3000
 
@@ -95,9 +102,6 @@ def test_collect_metrics_in_plan(spark, docs):
 def _on_table(df, suite):
     """The requests of ``suite`` that ride validate_and_extract's row
     action: the table-domain aggregates of the validator's plan."""
-    from sparkcheck.metrics import get_metric_spec
-    from sparkcheck.validator import Validator
-
     _, stage1, _ = Validator(df)._plan(suite)
     return [m for m in stage1
             if m.domain.is_table and get_metric_spec(m.name).kind == "agg"]
@@ -302,11 +306,12 @@ def test_runtime_row_condition_error_is_isolated(spark, unit):
         map(_vkey, span_violations(unit).collect()))
     # every failure is paid once: the four jobs of the suite without it
     # that do not sample (the append, the uniqueness pass (2) and the good
-    # row_condition bundle), the failed sample pass, one pass per request
-    # after it (3 x 2 + 1), the failed bundle and its three aggregates one
-    # at a time (1 + 3) — and validate() re-runs none of what the prefetch
-    # thread saw fail
-    assert jobs <= 16, jobs
+    # row_condition bundle); the sample pass of four requests bisected
+    # (the failed pass, its failed left half, its right half (2), then the
+    # good request of the left half (2), the bad one known without a run);
+    # the failed bundle and its three aggregates one at a time (1 + 3) —
+    # and validate() re-runs none of what the prefetch thread saw fail
+    assert jobs <= 14, jobs
 
 
 def _shuffles_above_observe(plan: str) -> list[str]:
@@ -386,10 +391,16 @@ def _jobs_in_group(spark, run):
 
 def test_worker_thread_jobs_carry_callers_group(spark, unit, tmp_path):
     """Every Spark job of validate_and_extract (its prefetch thread runs
-    most of them) and of a concurrent runner run (a thread pool) carries
-    the caller's job group, so cancelJobGroup reaches all of them."""
+    most of them), of validate_df (the resolver round's workers start from
+    the caller's own thread) and of a concurrent runner run (a thread
+    pool) carries the caller's job group, so cancelJobGroup reaches all of
+    them."""
     started, grouped = _jobs_in_group(spark, lambda: validate_and_extract(
         unit, _ingest_suite(), span_violations, result_format="BASIC"))
+    assert len(started) >= 5 and grouped == started, (len(started), len(grouped))
+
+    started, grouped = _jobs_in_group(
+        spark, lambda: validate_df(unit, _ingest_suite(), result_format="BASIC"))
     assert len(started) >= 5 and grouped == started, (len(started), len(grouped))
 
     runner = CheckpointRunner(spark, ParquetStore(str(tmp_path / "g")), n_buckets=2,
@@ -450,8 +461,6 @@ def test_unit_py4j_budget(spark, unit, monkeypatch):
 def test_prefetch_thread_joined_when_a_step_raises(spark, unit):
     """A raising action or rows_builder leaves no prefetch thread (and so
     no job of the failed unit) running behind the caller."""
-    import threading
-
     def prefetching():
         return [t for t in threading.enumerate() if "_prefetch" in t.name]
 
@@ -463,3 +472,167 @@ def test_prefetch_thread_joined_when_a_step_raises(spark, unit):
         with pytest.raises(RuntimeError, match="injected failure"):
             validate_and_extract(unit, _ingest_suite(), result_format="BASIC", **step)
         assert prefetching() == []
+
+
+_BAD_CONDITION = "CAST(doc_id AS INT) > 0"  # raises at run time under ANSI
+
+
+def _meet(monkeypatch, n):
+    """Make the first ``n`` calls of the sample pass, the uniqueness pass
+    and the aggregate bundle wait for each other at one barrier before
+    they run; later calls (the re-runs of a failed query) do not wait.
+    Returns the barrier and the names of the calls in order. A resolver
+    that runs a round's queries one after another breaks the barrier."""
+    from sparkcheck import summarize
+
+    barrier = threading.Barrier(n, timeout=30)
+    lock = threading.Lock()
+    calls = []
+
+    def meet(fn):
+        def met(*args):
+            with lock:
+                calls.append(fn.__name__)
+                first = len(calls) <= n
+            if first:
+                barrier.wait()
+            return fn(*args)
+        return met
+
+    monkeypatch.setattr(summarize, "_sample_pass", meet(summarize._sample_pass))
+    monkeypatch.setattr(summarize, "_uniqueness_pass",
+                        meet(summarize._uniqueness_pass))
+    monkeypatch.setattr(MetricResolver, "_run_bundle",
+                        meet(MetricResolver._run_bundle))
+    return barrier, calls
+
+
+def _with_deps(cfgs):
+    """``{metric id: request}`` of ``cfgs`` and everything they depend on."""
+    out = {}
+
+    def add(cfg):
+        if cfg.id not in out:
+            out[cfg.id] = cfg
+            spec = get_metric_spec(cfg.name)
+            for dep in (spec.deps_fn(cfg).values() if spec.deps_fn else ()):
+                add(dep)
+
+    for cfg in cfgs:
+        add(cfg)
+    return out
+
+
+def _round_threads():
+    return [t for t in threading.enumerate() if t.name.startswith("sparkcheck-round")]
+
+
+def test_round_queries_run_side_by_side(spark, unit, monkeypatch):
+    """The queries of one resolver round run at once. The prefetch round
+    of validate_and_extract on the ingest suite (one sample pass, one
+    uniqueness pass, one row_condition bundle) meets at a barrier of
+    three. In a round with a raising row_condition bundle only that
+    bundle's requests fail; with raise_errors its exception propagates,
+    after every worker has ended."""
+    reference = validate_df(unit, _ingest_suite(), result_format="BASIC")
+    barrier, calls = _meet(monkeypatch, 3)
+    rep, _, _ = validate_and_extract(unit, _ingest_suite(), span_violations,
+                                     result_format="BASIC")
+    assert not barrier.broken
+    assert sorted(calls) == ["_run_bundle", "_sample_pass", "_uniqueness_pass"]
+    assert _norm(rep) == _norm(reference)
+    monkeypatch.undo()
+
+    bad = {"expectation_type": "expect_column_values_to_match_regex",
+           "kwargs": {"column": "doc_id", "regex": "^hot", "mostly": 0.5,
+                      "row_condition": _BAD_CONDITION, "condition_parser": "spark"}}
+    suite = _ingest_suite()
+    suite.expectations.insert(2, ExpectationConfiguration.from_dict(bad))
+    _, stage1, _ = Validator(unit)._plan(suite, "BASIC", None)
+    requests = _with_deps(stage1)
+    on_bad = {mid for mid, c in requests.items()
+              if c.domain.row_condition == _BAD_CONDITION}
+    # the round: the table, good and bad row_condition bundles and the two
+    # passes, the first ROUND_WORKERS of them at once
+    barrier, _ = _meet(monkeypatch, ROUND_WORKERS)
+    resolver = MetricResolver(unit)
+    resolver.resolve(stage1, raise_errors=False)
+    assert not barrier.broken
+    assert set(resolver.failed) == on_bad
+    assert set(resolver.cache) == set(requests) - on_bad
+    errors = {type(e) for e in resolver.failed.values()}
+    assert len(errors) == 1 and "CAST_INVALID_INPUT" in str(
+        next(iter(resolver.failed.values())))
+    monkeypatch.undo()
+
+    with pytest.raises(tuple(errors), match="CAST_INVALID_INPUT"):
+        MetricResolver(unit).resolve(stage1)
+    assert _round_threads() == []
+
+
+def test_round_worker_bound(spark, unit, monkeypatch):
+    """A round with more row_condition bundles than ROUND_WORKERS runs at
+    most ROUND_WORKERS of them at once, on at most that many threads, and
+    gives the report of a resolver that runs them one after another."""
+    import time
+
+    from sparkcheck import metrics
+
+    s = ExpectationSuite("bound")
+    for k in range(ROUND_WORKERS + 2):
+        s.add("expect_column_max_to_be_between", column="n_spans",
+              min_value=0, max_value=100,
+              row_condition=f"n_spans > {k}", condition_parser="spark")
+    lock = threading.Lock()
+    running, peak, threads = [0], [0], set()
+    original = MetricResolver._run_bundle
+
+    def counted(self, cfgs):
+        with lock:
+            running[0] += 1
+            peak[0] = max(peak[0], running[0])
+            threads.add(threading.current_thread().name)
+        try:
+            time.sleep(0.2)  # hold the worker so that the others queue
+            return original(self, cfgs)
+        finally:
+            with lock:
+                running[0] -= 1
+
+    monkeypatch.setattr(MetricResolver, "_run_bundle", counted)
+    rep = validate_df(unit, s, result_format="BASIC")
+    assert 2 <= peak[0] <= ROUND_WORKERS, peak[0]
+    assert len(threads) <= ROUND_WORKERS, threads
+    monkeypatch.setattr(metrics, "ROUND_WORKERS", 1)
+    assert _norm(validate_df(unit, s, result_format="BASIC")) == _norm(rep)
+    assert all(not r["exception_info"]["raised_exception"] for r in rep["results"])
+
+
+def test_domain_df_one_frame_per_compute_domain(spark, unit):
+    """Threads asking for the same compute domains at once all get one
+    frame per domain."""
+    import sys
+
+    from sparkcheck.metrics import Domain
+
+    resolver = MetricResolver(unit)
+    domains = [Domain(row_condition=f"n_spans > {k}") for k in range(3)]
+    seen = []
+    start = threading.Barrier(8, timeout=30)
+
+    def ask():
+        start.wait()
+        seen.append([id(resolver.domain_df(d)) for d in domains])
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        workers = [threading.Thread(target=ask) for _ in range(8)]
+        for w in workers:
+            w.start()
+        for w in workers:
+            w.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(w.is_alive() for w in workers)
+    assert len(seen) == 8 and all(ids == seen[0] for ids in seen), seen
