@@ -283,18 +283,25 @@ def test_unit_job_count(spark, unit):
     assert jobs <= 6, jobs
 
 
+_BAD_CONDITION = "CAST(doc_id AS INT) > 0"  # raises at run time under ANSI
+
+
+def _with_bad_check():
+    """The ingest suite with a third check whose row_condition raises."""
+    suite = _ingest_suite()
+    suite.expectations.insert(2, ExpectationConfiguration.from_dict(
+        {"expectation_type": "expect_column_values_to_match_regex",
+         "kwargs": {"column": "doc_id", "regex": "^hot", "mostly": 0.5,
+                    "row_condition": _BAD_CONDITION, "condition_parser": "spark"}}))
+    return suite
+
+
 def test_runtime_row_condition_error_is_isolated(spark, unit):
     """A row_condition that raises at run time (ANSI cast) fails only its
     own EVR: every other EVR equals validate_df of the suite without it, and
     the violation rows still land."""
-    bad = {"expectation_type": "expect_column_values_to_match_regex",
-           "kwargs": {"column": "doc_id", "regex": "^hot", "mostly": 0.5,
-                      "row_condition": "CAST(doc_id AS INT) > 0",
-                      "condition_parser": "spark"}}
-    suite = _ingest_suite()
-    suite.expectations.insert(2, ExpectationConfiguration.from_dict(bad))
     before = _last_job_id(spark)
-    rep, rows, _ = validate_and_extract(unit, suite, span_violations,
+    rep, rows, _ = validate_and_extract(unit, _with_bad_check(), span_violations,
                                         result_format="BASIC")
     jobs = _last_job_id(spark) - before
     evr = rep["results"][2]
@@ -474,9 +481,6 @@ def test_prefetch_thread_joined_when_a_step_raises(spark, unit):
         assert prefetching() == []
 
 
-_BAD_CONDITION = "CAST(doc_id AS INT) > 0"  # raises at run time under ANSI
-
-
 def _meet(monkeypatch, n):
     """Make the first ``n`` calls of the sample pass, the uniqueness pass
     and the aggregate bundle wait for each other at one barrier before
@@ -523,10 +527,6 @@ def _with_deps(cfgs):
     return out
 
 
-def _round_threads():
-    return [t for t in threading.enumerate() if t.name.startswith("sparkcheck-round")]
-
-
 def test_round_queries_run_side_by_side(spark, unit, monkeypatch):
     """The queries of one resolver round run at once. The prefetch round
     of validate_and_extract on the ingest suite (one sample pass, one
@@ -543,12 +543,7 @@ def test_round_queries_run_side_by_side(spark, unit, monkeypatch):
     assert _norm(rep) == _norm(reference)
     monkeypatch.undo()
 
-    bad = {"expectation_type": "expect_column_values_to_match_regex",
-           "kwargs": {"column": "doc_id", "regex": "^hot", "mostly": 0.5,
-                      "row_condition": _BAD_CONDITION, "condition_parser": "spark"}}
-    suite = _ingest_suite()
-    suite.expectations.insert(2, ExpectationConfiguration.from_dict(bad))
-    _, stage1, _ = Validator(unit)._plan(suite, "BASIC", None)
+    _, stage1, _ = Validator(unit)._plan(_with_bad_check(), "BASIC", None)
     requests = _with_deps(stage1)
     on_bad = {mid for mid, c in requests.items()
               if c.domain.row_condition == _BAD_CONDITION}
@@ -567,7 +562,7 @@ def test_round_queries_run_side_by_side(spark, unit, monkeypatch):
 
     with pytest.raises(tuple(errors), match="CAST_INVALID_INPUT"):
         MetricResolver(unit).resolve(stage1)
-    assert _round_threads() == []
+    assert not [t for t in threading.enumerate() if t.name.startswith("sparkcheck-round")]
 
 
 def test_round_worker_bound(spark, unit, monkeypatch):
