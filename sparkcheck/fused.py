@@ -28,8 +28,8 @@ resolves in a prefetch thread that overlaps the append: one sample pass
 per row set (the unexpected-value samples), one uniqueness pass per
 uniqueness check (count and sample together) and one noop-write bundle
 per filtered domain. The resolver runs those queries side by side, each
-from its own worker thread, so the prefetch takes about as long as the
-slowest of them. That thread starts right after the suite is planned,
+from its own worker thread, so the prefetch no longer takes the sum of
+their times. The prefetch thread starts right after the suite is planned,
 so it also overlaps the main thread's building of the observe node and
 the row plan. The seeded resolver cache makes the handoff exact:
 the validator sees pre-resolved metric values keyed by the same metric
