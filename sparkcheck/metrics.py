@@ -22,10 +22,10 @@ from ONE uniqueness-pass query. The passes and bundles of one resolver
 round are independent, so they run side by side, each from its own worker
 thread (at most :data:`ROUND_WORKERS` at once): Spark schedules the jobs of
 separate driver threads together on the same executors, where the
-reference resolves one bundle after another. A pass that raises is split
-in halves and each half re-run, down to single requests; a bundle that
-raises is resolved one request at a time. Either way one bad request
-fails only itself.
+reference resolves one bundle after another. A pass that raises is
+bisected: it is re-run on halves of its requests, down to single
+requests; a bundle that raises is resolved one request at a time. Either
+way one bad request fails only itself.
 
 Metric kinds (reference enum core/metric_function_types.py:26-112):
   - ``agg``     -> returns an unevaluated Spark Column aggregate; bundled.
