@@ -22,10 +22,10 @@ from ONE uniqueness-pass query. The passes and bundles of one resolver
 round are independent, so they run side by side, each from its own worker
 thread (at most :data:`ROUND_WORKERS` at once): Spark schedules the jobs of
 separate driver threads together on the same executors, where the
-reference resolves one bundle after another. A pass that raises is
-bisected: it is re-run on halves of its requests, down to single
-requests; a bundle that raises is resolved one request at a time. Either
-way one bad request fails only itself.
+reference resolves one bundle after another. A pass or bundle that
+raises is bisected: it is re-run on halves of its requests, down to
+single requests, which are retried while their error is transient. So one
+bad request fails only itself.
 
 Metric kinds (reference enum core/metric_function_types.py:26-112):
   - ``agg``     -> returns an unevaluated Spark Column aggregate; bundled.
@@ -310,7 +310,8 @@ class SharedPass:
     queries of its resolver round, so it must be thread-safe: it may read
     the resolver (``domain_df``, ``column``, ``dtypes``) but must write no
     state that another query of the round reads. When it raises, it is
-    called again on each half of ``requests``."""
+    called again on each half of ``requests``, and on a single request
+    again while its error is transient."""
 
     run: Callable[..., dict[tuple, Any]]
     key: Any
@@ -548,11 +549,11 @@ class MetricResolver:
             # (shared passes), ONE noop-write job per compute domain
             # (aggregate bundles); settled here, in that order ---
             work = [
-                (cfgs, partial(_bisect, partial(sp.run, self), cfgs))
+                (cfgs, partial(_bisect, partial(sp.run, self), cfgs, self.MAX_RETRIES))
                 for sp, cfgs in passes.values()
             ]
             work += [
-                (cfgs, partial(self._run_bundle_isolated, cfgs))
+                (cfgs, partial(_bisect, self._run_bundle, cfgs, self.MAX_RETRIES))
                 for cfgs in bundles.values()
             ]
             results = self._run_side_by_side([task for _, task in work])
@@ -657,20 +658,6 @@ class MetricResolver:
             futures = [pool.submit(task) for task in wrapped]
         return [f.result() for f in futures]
 
-    def _run_bundle_isolated(self, cfgs: list[MetricConfiguration]) -> dict[tuple, Any]:
-        """:meth:`_run_bundle`, and if it raises, each aggregate alone: an
-        aggregate that raises alone gets its exception as its value."""
-        try:
-            return self._run_bundle(cfgs)
-        except Exception:  # noqa: BLE001 — isolate the bad aggregate
-            values: dict[tuple, Any] = {}
-            for cfg in cfgs:
-                try:
-                    values.update(self._run_bundle([cfg]))
-                except Exception as e:  # noqa: BLE001
-                    values[cfg.id] = e
-            return values
-
     def _run_bundle(self, cfgs: list[MetricConfiguration]) -> dict[tuple, Any]:
         """Resolve the aggregates of one compute domain in ONE Spark job: an
         Observation on a noop write of the domain frame."""
@@ -689,27 +676,24 @@ class MetricResolver:
 def _bisect(
     run: Callable[[list[MetricConfiguration]], dict[tuple, Any]],
     cfgs: list[MetricConfiguration],
-    error: Exception | None = None,
+    attempts: int,
 ) -> dict[tuple, Any]:
     """``run(cfgs)``, and if it raises, the same for each half of ``cfgs``,
-    down to single requests, which get the exception as their value. One
-    bad request among n costs about 2·log2(n) more runs, not n. ``error``
-    says that ``run(cfgs)`` already raised it; when the left half then
-    runs, the right half is known to raise and is split without a run."""
-    if error is None:
-        try:
-            return run(cfgs)
-        except Exception as e:  # noqa: BLE001 — isolate the bad request
-            error = e
-    if len(cfgs) == 1:
-        return {cfgs[0].id: error}
-    half = len(cfgs) // 2
-    left, right = cfgs[:half], cfgs[half:]
+    down to single requests. A single request that raises is run again,
+    up to ``attempts`` runs in all, while its error is transient (a lost
+    executor, a fetch failure); after that the exception is its value.
+    Every request is run before it fails, and one bad request among n
+    costs about 2·log2(n) more runs, not n."""
     try:
-        values = run(left)
-    except Exception as e:  # noqa: BLE001
-        return {**_bisect(run, left, e), **_bisect(run, right)}
-    return {**values, **_bisect(run, right, error)}
+        return run(cfgs)
+    except Exception as e:  # noqa: BLE001 — isolate the bad request
+        if len(cfgs) > 1:
+            half = len(cfgs) // 2
+            return {**_bisect(run, cfgs[:half], attempts),
+                    **_bisect(run, cfgs[half:], attempts)}
+        if attempts > 1 and _is_transient(e):
+            return _bisect(run, cfgs, attempts - 1)
+        return {cfgs[0].id: e}
 
 
 def _observed_name(mid: tuple) -> str:

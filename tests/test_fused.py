@@ -314,11 +314,13 @@ def test_runtime_row_condition_error_is_isolated(spark, unit):
     # every failure is paid once: the four jobs of the suite without it
     # that do not sample (the append, the uniqueness pass (2) and the good
     # row_condition bundle); the sample pass of four requests bisected
-    # (the failed pass, its failed left half, its right half (2), then the
-    # good request of the left half (2), the bad one known without a run);
-    # the failed bundle and its three aggregates one at a time (1 + 3) —
-    # and validate() re-runs none of what the prefetch thread saw fail
-    assert jobs <= 14, jobs
+    # (the failed pass, its failed half, its good half (2), then the two
+    # requests of the failed half alone: the good one (2), the bad one);
+    # the failed bundle of three aggregates bisected (the bundle, its one-
+    # and two-aggregate halves, then the two of the second half alone), each
+    # failed run one job — and validate() re-runs none of what the prefetch
+    # thread saw fail
+    assert jobs <= 16, jobs
 
 
 def _shuffles_above_observe(plan: str) -> list[str]:
@@ -601,6 +603,80 @@ def test_round_worker_bound(spark, unit, monkeypatch):
     monkeypatch.setattr(metrics, "ROUND_WORKERS", 1)
     assert _norm(validate_df(unit, s, result_format="BASIC")) == _norm(rep)
     assert all(not r["exception_info"]["raised_exception"] for r in rep["results"])
+
+
+def test_bisect_runs_every_request_before_failing_it():
+    """A failed pass or bundle is bisected down to single requests, and
+    every request is run before it fails: a pass that raises once (a lost
+    executor) resolves every request, one bad request among eight fails
+    alone in 1 + 2·3 runs, and a single request is retried while its error
+    is transient, up to MAX_RETRIES runs."""
+    from types import SimpleNamespace
+
+    from sparkcheck.metrics import _bisect
+
+    cfgs = [SimpleNamespace(id=k) for k in range(8)]
+    attempts = MetricResolver.MAX_RETRIES
+
+    def fake(fail):
+        """A run that raises ``fail(ids, call number)`` or resolves ids."""
+        calls = []
+
+        def run(batch):
+            ids = [c.id for c in batch]
+            calls.append(ids)
+            err = fail(ids, len(calls))
+            if err is not None:
+                raise err
+            return {i: f"v{i}" for i in ids}
+        return run, calls
+
+    run, calls = fake(lambda ids, n: RuntimeError("lost executor") if n == 1 else None)
+    assert _bisect(run, cfgs, attempts) == {k: f"v{k}" for k in range(8)}
+    assert calls == [list(range(8)), [0, 1, 2, 3], [4, 5, 6, 7]]
+
+    bad = ValueError("bad request")
+    run, calls = fake(lambda ids, n: bad if 6 in ids else None)
+    values = _bisect(run, cfgs, attempts)
+    assert values == {**{k: f"v{k}" for k in range(8) if k != 6}, 6: bad}
+    assert [6] in calls and len(calls) == 7, calls
+
+    run, calls = fake(lambda ids, n: RuntimeError("fetch failed") if n < attempts else None)
+    assert _bisect(run, cfgs[:1], attempts) == {0: "v0"}
+    assert len(calls) == attempts
+    lost = RuntimeError("lost executor")
+    run, calls = fake(lambda ids, n: lost)
+    assert _bisect(run, cfgs[:1], attempts) == {0: lost}
+    assert len(calls) == attempts
+    run, calls = fake(lambda ids, n: bad)
+    assert _bisect(run, cfgs[:1], attempts) == {0: bad}
+    assert len(calls) == 1
+
+
+def test_transient_pass_failure_is_retried(spark, unit, monkeypatch):
+    """A one-request sample pass that fails once with a transient error
+    (a lost executor) is run again in the same resolve: validate_df, which
+    resolves its samples once, reports what it reports without the
+    failure."""
+    from sparkcheck import summarize
+
+    s = ExpectationSuite("transient")
+    s.add("expect_column_values_to_match_regex", column="doc_id",
+          regex="^(hot[0-2]|p[0-9]{2})-[0-9]{12}$", mostly=0.98)
+    reference = validate_df(unit, s, result_format="BASIC")
+    original, calls = summarize._sample_pass, []
+
+    def flaky(resolver, cfgs):
+        calls.append(len(cfgs))
+        if len(calls) == 1:
+            raise RuntimeError("lost executor")
+        return original(resolver, cfgs)
+
+    monkeypatch.setattr(summarize, "_sample_pass", flaky)
+    rep = validate_df(unit, s, result_format="BASIC")
+    assert calls == [1, 1], calls
+    assert _norm(rep) == _norm(reference)
+    assert not rep["results"][0]["exception_info"]["raised_exception"]
 
 
 def test_domain_df_one_frame_per_compute_domain(spark, unit):
