@@ -683,17 +683,18 @@ def _bisect(
     up to ``attempts`` runs in all, while its error is transient (a lost
     executor, a fetch failure); after that the exception is its value.
     Every request is run before it fails, and one bad request among n
-    costs about 2·log2(n) more runs, not n."""
+    costs about 2·log2(n) more runs, not n. The re-runs start after the
+    handler, so a request's exception is not chained to the one of the
+    run that held it."""
     try:
         return run(cfgs)
     except Exception as e:  # noqa: BLE001 — isolate the bad request
-        if len(cfgs) > 1:
-            half = len(cfgs) // 2
-            return {**_bisect(run, cfgs[:half], attempts),
-                    **_bisect(run, cfgs[half:], attempts)}
-        if attempts > 1 and _is_transient(e):
-            return _bisect(run, cfgs, attempts - 1)
-        return {cfgs[0].id: e}
+        if len(cfgs) == 1 and not (attempts > 1 and _is_transient(e)):
+            return {cfgs[0].id: e}
+    if len(cfgs) == 1:
+        return _bisect(run, cfgs, attempts - 1)
+    half = len(cfgs) // 2
+    return {**_bisect(run, cfgs[:half], attempts), **_bisect(run, cfgs[half:], attempts)}
 
 
 def _observed_name(mid: tuple) -> str:

@@ -641,11 +641,14 @@ def test_bisect_runs_every_request_before_failing_it():
     assert _bisect(run, cfgs, attempts) == {k: f"v{k}" for k in range(8)}
     assert calls == [list(range(8)), [0, 1, 2, 3], [4, 5, 6, 7]]
 
-    bad = ValueError("bad request")
-    run, calls = fake(lambda ids, n: bad if 6 in ids else None)
+    run, calls = fake(lambda ids, n: ValueError(f"bad {n}") if 6 in ids else None)
     values = _bisect(run, cfgs, attempts)
-    assert values == {**{k: f"v{k}" for k in range(8) if k != 6}, 6: bad}
+    assert {k: v for k, v in values.items() if k != 6} == {
+        k: f"v{k}" for k in range(8) if k != 6}
     assert [6] in calls and len(calls) == 7, calls
+    # the error of the run of [6] alone, not chained to the failed halves'
+    assert str(values[6]) == f"bad {calls.index([6]) + 1}"
+    assert values[6].__context__ is None
 
     run, calls = fake(lambda ids, n: RuntimeError("fetch failed") if n < attempts else None)
     assert _bisect(run, cfgs[:1], attempts) == {0: "v0"}
@@ -654,6 +657,7 @@ def test_bisect_runs_every_request_before_failing_it():
     run, calls = fake(lambda ids, n: lost)
     assert _bisect(run, cfgs[:1], attempts) == {0: lost}
     assert len(calls) == attempts
+    bad = ValueError("bad request")
     run, calls = fake(lambda ids, n: bad)
     assert _bisect(run, cfgs[:1], attempts) == {0: bad}
     assert len(calls) == 1
